@@ -1,4 +1,4 @@
-"""apply_epoch — the exactly-once unit of work inside foreachBatch.
+"""CdcPipeline — the exactly-once apply of change epochs.
 
 Per epoch (micro-batch):
 
@@ -8,6 +8,26 @@ Per epoch (micro-batch):
 4. LWW dedup -> version-checked key-partitioned MERGE into the lake table;
 5. append per-source-partition lineage rows and one epoch metrics row;
 6. write the commit record (atomic rename) — the epoch is now durable.
+
+Entry points and their writers:
+
+- ``apply_epochs_bulk_files``: MOR epochs as local parquet files; writer
+  tasks read them with pyarrow (``write_change_files_direct``), so no row
+  crosses the JVM→Python Arrow socket. ``stream.replay_epochs`` (one epoch
+  per call) and ``stream.replay_bulk`` (all at once) use it for every
+  local MOR epoch without quarantine.
+- ``apply_epoch``: one epoch as a DataFrame (``write_data_files_direct``
+  for MOR, ``merge_into`` for COW) — the only route for inputs that are
+  not local files (foreachBatch, synthetic sources, bootstrap, ``://``
+  paths), for COW (the merge rewrites touched buckets) and for quarantine
+  (the validity split is a DataFrame filter). Only this route checks
+  source partitions against ``n_source_partitions``
+  (``stats_from_observation``): the file route does not enumerate them.
+- ``apply_epochs_bulk``: many epochs as one DataFrame (``replay_bulk``'s
+  remote-path fallback).
+
+The MOR appends share one stage/commit/restage-on-spec-conflict loop
+(``_stage_and_append``); all routes share one log roll-up (``_roll_log``).
 
 Crash-safety ordering: the table snapshot commit (step 4) lands before the
 commit record (step 6). A crash between them leaves a committed snapshot and
@@ -37,7 +57,6 @@ from etl_documentos_spark.streaming.commitlog import (
     CommitLog,
     batch_stats,
     combine_chunks,
-    hash_chunk_exprs,
     observe_exprs,
     stats_from_observation,
 )
@@ -382,36 +401,46 @@ class CdcPipeline:
                 ),
             )
 
-            spec = table.spec_fingerprint()
-            files, stat_rows, man_stats = table.write_data_files_direct(
-                aug, stats=True
+            stat_rows = self._stage_and_append(
+                table, lambda t: t.write_data_files_direct(aug, stats=True)
             )
-            for _ in range(5):
-                if not files:
-                    break
-                try:
-                    # manifest stats came inline from the write tasks when
-                    # the table opted in; nothing extra on the default path
-                    with self._commit_lock:
-                        self.table.commit_append(
-                            files, staged_spec=spec, new_stats=man_stats
-                        )
-                    break
-                except SpecConflictError:
-                    # a concurrent split/rebucket re-keyed the buckets:
-                    # restage under the fresh transform (stats re-derived
-                    # deterministically from the same batch)
-                    table = self.table
-                    spec = table.spec_fingerprint()
-                    files, stat_rows, man_stats = table.write_data_files_direct(
-                        aug, stats=True
-                    )
-            else:
-                raise SpecConflictError("spec kept changing across 5 retries")
             return skipped + self._finalize_bulk(stat_rows, todo, t0, added)
         finally:
             if persist:
                 batch.unpersist()
+
+    def _stage_and_append(self, table: LakeTable, stage):
+        """Write data files with ``stage(table) -> (files, stat_rows,
+        man_stats)`` outside the lock, then commit them as one append
+        under it; returns the committed staging's ``stat_rows``.
+
+        A concurrent split/rebucket that re-keyed the buckets between the
+        two steps fails the commit with ``SpecConflictError``: restage
+        under the fresh transform (the stats re-derive deterministically
+        from the same batch), at most 5 times."""
+        for _ in range(5):
+            spec = table.spec_fingerprint()
+            files, stat_rows, man_stats = stage(table)
+            if not files:
+                return stat_rows
+            try:
+                # manifest stats came inline from the write tasks when the
+                # table opted in; nothing extra on the default path
+                with self._commit_lock:
+                    self.table.commit_append(
+                        files, staged_spec=spec, new_stats=man_stats
+                    )
+                return stat_rows
+            except SpecConflictError:
+                table = self.table
+        raise SpecConflictError("spec kept changing across 5 retries")
+
+    def _roll_log(self, epochs: list[int]) -> None:
+        """Amortized commit-log roll-up, once per 256 epoch ids: keeps the
+        commit dir (and restart-time max_offsets scans) bounded at millions
+        of epochs without a directory listing on every apply."""
+        if any(e % 256 == 0 for e in epochs):
+            self.commitlog.compact_log(self.commitlog_keep_last)
 
     def _finalize_bulk(
         self, stat_rows: list, todo: list[int], t0: float, added: list[str]
@@ -469,7 +498,7 @@ class CdcPipeline:
             )
             self.commitlog.commit(e, fp, offsets)
             results.append(EpochResult(e, False, n, duration, added))
-        self.commitlog.compact_log(self.commitlog_keep_last)
+        self._roll_log(todo)
         return results
 
     def apply_epochs_bulk_files(
@@ -508,21 +537,13 @@ class CdcPipeline:
         # contiguous HWM roll-up forever and the epoch re-processes on
         # every future replay
         epoch_ids = sorted({e for _, e in file_epochs} | set(epochs or []))
-        todo_pairs = [
-            (f, e)
-            for f, e in file_epochs
-            if not self.commitlog.is_committed(e)
-        ]
-        todo = sorted(
-            {e for _, e in todo_pairs}
-            | {
-                e
-                for e in (epochs or [])
-                if not self.commitlog.is_committed(e)
-            }
-        )
+        todo = [e for e in epoch_ids if not self.commitlog.is_committed(e)]
+        todo_set = set(todo)
+        todo_pairs = [(f, e) for f, e in file_epochs if e in todo_set]
         skipped = [
-            EpochResult(e, True, 0, 0.0, []) for e in epoch_ids if e not in todo
+            EpochResult(e, True, 0, 0.0, [])
+            for e in epoch_ids
+            if e not in todo_set
         ]
         if not todo_pairs:
             if not todo:
@@ -537,32 +558,13 @@ class CdcPipeline:
             added = evolve_if_needed(
                 self.spark.createDataFrame([], schema), table
             )
-        spec = table.spec_fingerprint()
-        files, stat_rows, man_stats = table.write_change_files_direct(
-            self.spark, todo_pairs, schema,
-            fence_lsn=wm, target_tasks=target_tasks,
+        stat_rows = self._stage_and_append(
+            table,
+            lambda t: t.write_change_files_direct(
+                self.spark, todo_pairs, schema,
+                fence_lsn=wm, target_tasks=target_tasks,
+            ),
         )
-        for _ in range(5):
-            if not files:
-                break
-            try:
-                with self._commit_lock:
-                    self.table.commit_append(
-                        files, staged_spec=spec, new_stats=man_stats
-                    )
-                break
-            except SpecConflictError:
-                # a concurrent split/rebucket re-keyed the buckets: restage
-                # under the fresh transform (numpy spark_bucket picks up the
-                # new split set from the reloaded metadata)
-                table = self.table
-                spec = table.spec_fingerprint()
-                files, stat_rows, man_stats = table.write_change_files_direct(
-                    self.spark, todo_pairs, schema,
-                    fence_lsn=wm, target_tasks=target_tasks,
-                )
-        else:
-            raise SpecConflictError("spec kept changing across 5 retries")
         return skipped + self._finalize_bulk(stat_rows, todo, t0, added)
 
     def _advance_watermark(self, max_ts_us) -> None:
@@ -712,33 +714,18 @@ class CdcPipeline:
             observed = changes.observe(
                 obs, *self._observe_exprs_for(changes.columns)
             )
-            spec = table.spec_fingerprint()
-            files, man_stats = table.write_data_files_direct(
-                changes_to_physical(observed, table.schema),
-                target_tasks=write_tasks,
-            )
-            for _ in range(5):
-                if not files:
-                    break
-                try:
-                    # manifest stats came inline from the write tasks when
-                    # the table opted in; nothing extra on the default path
-                    with self._commit_lock:
-                        self.table.commit_append(
-                            files, staged_spec=spec, new_stats=man_stats
-                        )
-                    break
-                except SpecConflictError:
-                    # restage under the fresh spec; stats were already
-                    # captured by the first (observed) write job
-                    fresh = self.table
-                    spec = fresh.spec_fingerprint()
-                    files, man_stats = fresh.write_data_files_direct(
-                        changes_to_physical(changes, fresh.schema),
-                        target_tasks=write_tasks,
-                    )
-            else:
-                raise SpecConflictError("spec kept changing across 5 retries")
+            # only the first staging carries the observed stats; a restage
+            # after a spec conflict rewrites the files from the plain batch
+            source = iter([observed])
+
+            def stage(t: LakeTable):
+                files, man_stats = t.write_data_files_direct(
+                    changes_to_physical(next(source, changes), t.schema),
+                    target_tasks=write_tasks,
+                )
+                return files, None, man_stats
+
+            self._stage_and_append(table, stage)
             stats = stats_from_observation(obs.get, self.n_source_partitions)
             self._advance_watermark(stats.max_ts)
             if stats.n_events > 0:
@@ -795,10 +782,7 @@ class CdcPipeline:
         )
 
         self.commitlog.commit(epoch_id, stats.fingerprint, stats.offsets)
-        if epoch_id % 256 == 0:
-            # amortized roll-up keeps the commit dir (and restart-time
-            # max_offsets scans) bounded at millions of epochs
-            self.commitlog.compact_log(self.commitlog_keep_last)
+        self._roll_log([epoch_id])
         return EpochResult(
             epoch_id, False, stats.n_events, time.monotonic() - t0, added,
             n_bad,

@@ -1,15 +1,20 @@
 """Replay drivers: batch epoch replay and the Structured Streaming tail.
 
-Batch replay (``replay_epochs``) walks ``{path}/epoch={k}`` directories in
-log order and applies each through the exactly-once `CdcPipeline` — this is
-the deterministic path used by tests and the bench.
+Batch replay walks ``{path}/epoch={k}`` directories in log order through
+the exactly-once `CdcPipeline`: ``replay_epochs`` one epoch per apply (the
+tail), ``replay_bulk`` all in one (the backfill). On a local path both hand
+a MOR pipeline's epoch files to ``apply_epochs_bulk_files``, whose writer
+tasks read them with pyarrow — no row crosses the JVM→Python Arrow socket.
+COW and quarantine (DLQ) pipelines and ``://`` paths read the epoch as a
+DataFrame into ``apply_epoch``: the COW merge and the DLQ validity split
+are DataFrame operations, and a remote path has no local listing.
 
 The streaming driver (``start_stream`` / ``run_stream_until_drained``) is the
 production shape: a Structured Streaming file source tails the change
 directory (stand-in for a Kafka/binlog source — same micro-batch contract),
 checkpointed offsets make batch composition deterministic across restarts,
 and ``foreachBatch`` routes every micro-batch through the same
-commit-log-guarded apply. Restart after a crash replays the last
+commit-log-guarded ``apply_epoch``. Restart after a crash replays the last
 un-checkpointed batch; the commit-log + version-checked merge make that
 replay a no-op. Reference analogue of the source: one HTTP upload per
 document (``/root/reference/app/api/routes.py:133-179``) — here the uploads
@@ -38,6 +43,33 @@ def list_epochs(path: str) -> list[int]:
     return sorted(out)
 
 
+def epoch_files(
+    events_path: str, epochs: list[int]
+) -> list[tuple[str, int, int]]:
+    """(path, epoch, bytes) of every parquet file under each local
+    ``epoch=N`` directory, in name order. Spark reader semantics: leading
+    '.'/'_' names are hidden (in-progress writers, committer artifacts) —
+    reading one would corrupt the epoch fingerprint. A missing directory
+    raises ``FileNotFoundError``."""
+    out = []
+    for e in epochs:
+        d = os.path.join(events_path, f"epoch={e}")
+        for entry in sorted(os.scandir(d), key=lambda x: x.name):
+            if entry.name.endswith(".parquet") and not entry.name.startswith(
+                (".", "_")
+            ):
+                out.append((entry.path, e, entry.stat().st_size))
+    return out
+
+
+def _file_schema(schema: T.StructType | None) -> T.StructType | None:
+    """DataFrame-path callers declare the hive partition column too; the
+    file route derives ``epoch`` from the directory name instead."""
+    if schema is None or "epoch" not in schema.fieldNames():
+        return schema
+    return T.StructType([f for f in schema.fields if f.name != "epoch"])
+
+
 def replay_epochs(
     pipeline: CdcPipeline,
     events_path: str,
@@ -46,6 +78,11 @@ def replay_epochs(
     concurrency: int = 1,
 ) -> list[EpochResult]:
     """Apply each epoch directory through the exactly-once path.
+
+    A MOR pipeline without quarantine applies each local epoch with
+    ``apply_epochs_bulk_files`` (the zero-IPC file writer of
+    ``replay_bulk``); COW, quarantine and ``://`` paths read it as a
+    DataFrame into ``apply_epoch``. Both commit the same fingerprint.
 
     ``concurrency > 1`` (MOR mode only) overlaps epoch applies: the LWW
     reduction is order-insensitive, so epochs need no ordering barrier —
@@ -57,6 +94,14 @@ def replay_epochs(
     """
     spark = pipeline.spark
     epoch_ids = epochs if epochs is not None else list_epochs(events_path)
+    files: dict[int, list[tuple[str, int]]] = {e: [] for e in epoch_ids}
+    sizes = dict.fromkeys(epoch_ids, 0)
+    local = "://" not in events_path
+    if local:
+        for f, e, n in epoch_files(events_path, list(files)):
+            files[e].append((f, e))
+            sizes[e] += n
+    by_file = local and pipeline.mode == "mor" and not pipeline.quarantine
 
     # Byte-proportional writer-task allocation across the in-flight window:
     # overlapped epochs split the cores in proportion to their input size,
@@ -68,24 +113,18 @@ def replay_epochs(
     # source exposes the same per-batch size metadata.
     p = spark.sparkContext.defaultParallelism
     window = max(1, min(concurrency, len(epoch_ids)))
-    sizes: dict[int, int] = {}
-    for ep in epoch_ids:
-        d = os.path.join(events_path, f"epoch={ep}")
-        try:
-            sizes[ep] = sum(
-                e.stat().st_size
-                for e in os.scandir(d)
-                if e.name.endswith(".parquet")
-            )
-        except OSError:
-            sizes[ep] = 0
     avg = max(1, sum(sizes.values()) // max(1, len(sizes)))
 
     def tasks_for(ep: int) -> int:
-        share = 1.2 * p * sizes.get(ep, avg) / (avg * window)
+        share = 1.2 * p * (sizes[ep] or avg) / (avg * window)
         return max(2, min(2 * p, round(share)))
 
     def one(ep: int) -> EpochResult:
+        if by_file:
+            return pipeline.apply_epochs_bulk_files(
+                files[ep], schema=_file_schema(schema), epochs=[ep],
+                target_tasks=tasks_for(ep),
+            )[0]
         reader = spark.read
         if schema is not None:
             reader = reader.schema(schema)
@@ -188,52 +227,28 @@ def replay_bulk(
     Per-epoch exactly-once records are preserved; the per-epoch driver
     overhead is paid once.
 
-    Routes through the zero-IPC file path
-    (``CdcPipeline.apply_epochs_bulk_files``): the input is immutable
-    on-disk parquet, so writer tasks read it directly with pyarrow instead
-    of shipping every row through the JVM and the Arrow socket. The
-    ``epoch`` column the DataFrame path derived from the hive directory
-    name comes from the file's path here — same value, no scan."""
-    try:
-        if epochs is None:
-            epochs = list_epochs(events_path)
-        pairs = []
-        for e in epochs:
-            d = os.path.join(events_path, f"epoch={e}")
-            pairs.extend(
-                (os.path.join(d, f), e)
-                for f in sorted(os.listdir(d))
-                # Spark reader semantics: leading '.'/'_' names are
-                # hidden (in-progress writers, committer artifacts) —
-                # reading one would corrupt the epoch fingerprint
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
-    except OSError:
+    Local paths route through the zero-IPC file writer (see the module
+    docstring); ``epoch`` comes from each file's directory name."""
+    if epochs is None:
+        epochs = list_epochs(events_path)
+    if "://" in events_path:
         # non-local events_path (hdfs://, s3a://...): no local listing —
         # fall back to the DataFrame bulk path, which reads through the
-        # JVM's filesystem layer exactly as before the zero-IPC fast path
-        spark = pipeline.spark
-        if epochs is None:
-            raise
-        reader = spark.read
+        # JVM's filesystem layer
+        reader = pipeline.spark.read
         if schema is not None:
             reader = reader.schema(schema)
         changes = reader.option("basePath", events_path).parquet(
             *[os.path.join(events_path, f"epoch={e}") for e in epochs]
         )
         return pipeline.apply_epochs_bulk(changes, epochs, persist=False)
-    if schema is not None and "epoch" in schema.fieldNames():
-        # DataFrame-path callers declare the hive partition column too;
-        # the file path derives it from the directory name instead
-        schema = T.StructType(
-            [f for f in schema.fields if f.name != "epoch"]
-        )
+    pairs = [(f, e) for f, e, _ in epoch_files(events_path, epochs)]
     # pass the epoch list through: an epoch whose directory holds no
     # parquet files must still COMMIT (empty fingerprint) — dropping it
     # would leave a commit-log gap that stalls the HWM roll-up forever
     # and re-processes the epoch on the next replay
     return pipeline.apply_epochs_bulk_files(
-        pairs, schema=schema, epochs=epochs
+        pairs, schema=_file_schema(schema), epochs=epochs
     )
 
 

@@ -23,7 +23,7 @@ from etl_documentos_spark.lake.table import LakeTable
 from etl_documentos_spark.operators.merge import physical_schema, read_current
 from etl_documentos_spark.schemas import CHANGE_EVENTS, TRANSCRIPTS
 from etl_documentos_spark.streaming.apply import CdcPipeline
-from etl_documentos_spark.streaming.stream import list_epochs
+from etl_documentos_spark.streaming.stream import epoch_files, list_epochs
 
 BULK_SCHEMA = T.StructType(
     list(CHANGE_EVENTS.fields) + [T.StructField("epoch", T.IntegerType(), False)]
@@ -46,15 +46,9 @@ def events_path(stream_df, tmp_path_factory):
 
 
 def _pairs(events_path):
-    out = []
-    for e in list_epochs(events_path):
-        d = os.path.join(events_path, f"epoch={e}")
-        out.extend(
-            (os.path.join(d, f), e)
-            for f in sorted(os.listdir(d))
-            if f.endswith(".parquet")
-        )
-    return out
+    return [
+        (f, e) for f, e, _ in epoch_files(events_path, list_epochs(events_path))
+    ]
 
 
 def _pipeline(spark, root, num_buckets=8) -> CdcPipeline:
@@ -65,6 +59,21 @@ def _pipeline(spark, root, num_buckets=8) -> CdcPipeline:
 
 def _fingerprints(pipe: CdcPipeline, epochs) -> dict:
     return {e: pipe.commitlog.get(e).input_fingerprint for e in epochs}
+
+
+def _assert_oracle_state(spark, pipe: CdcPipeline, stream_df) -> None:
+    from etl_documentos_spark import oracle
+
+    got = [
+        r.asDict()
+        for r in read_current(spark, pipe.table)
+        .orderBy("conv_id", "turn_idx")
+        .collect()
+    ]
+    want = oracle.reduce_events([r.asDict() for r in stream_df.collect()])
+    assert [(g["conv_id"], g["turn_idx"], g["text"]) for g in got] == [
+        (w["conv_id"], w["turn_idx"], w["text"]) for w in want
+    ]
 
 
 def test_files_path_bit_equals_dataframe_path(
@@ -118,19 +127,53 @@ def test_files_path_cross_path_restart_dedups(
     by_epoch = {r.epoch_id: r for r in res}
     assert by_epoch[epochs[0]].skipped
     assert all(not by_epoch[e].skipped for e in epochs[1:])
+    _assert_oracle_state(spark, pipe, stream_df)
 
-    from etl_documentos_spark import oracle
 
-    got = [
-        r.asDict()
-        for r in read_current(spark, pipe.table)
-        .orderBy("conv_id", "turn_idx")
-        .collect()
-    ]
-    want = oracle.reduce_events([r.asDict() for r in stream_df.collect()])
-    assert [(g["conv_id"], g["turn_idx"], g["text"]) for g in got] == [
-        (w["conv_id"], w["turn_idx"], w["text"]) for w in want
-    ]
+def test_files_path_restages_once_on_spec_conflict(
+    spark, stream_df, events_path, tmp_path, monkeypatch
+):
+    """A commit that lost a race with a split/rebucket (SpecConflictError)
+    restages the files under the fresh spec once, then commits: every
+    epoch lands exactly once and the state equals the oracle."""
+    from etl_documentos_spark.lake.table import SpecConflictError
+
+    calls = {"commit": 0, "write": 0}
+    real_commit = LakeTable.commit_append
+    real_write = LakeTable.write_change_files_direct
+
+    def commit_conflicting_once(self, *a, **kw):
+        calls["commit"] += 1
+        if calls["commit"] == 1:
+            raise SpecConflictError("injected: bucket spec changed")
+        return real_commit(self, *a, **kw)
+
+    def counting_write(self, *a, **kw):
+        calls["write"] += 1
+        return real_write(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "commit_append", commit_conflicting_once)
+    monkeypatch.setattr(LakeTable, "write_change_files_direct", counting_write)
+    pipe = _pipeline(spark, tmp_path)
+    res = pipe.apply_epochs_bulk_files(_pairs(events_path), schema=CHANGE_EVENTS)
+    assert calls == {"commit": 2, "write": 2}
+    assert sum(r.events for r in res) == stream_df.count()
+    assert all(pipe.commitlog.is_committed(e) for e in list_epochs(events_path))
+    _assert_oracle_state(spark, pipe, stream_df)
+
+
+@pytest.mark.parametrize("driver", ["replay_bulk", "replay_epochs"])
+def test_missing_local_epoch_dir_raises(spark, events_path, tmp_path, driver):
+    """A local epoch id without an ``epoch=N`` directory is a caller error:
+    both drivers raise FileNotFoundError before applying anything, instead
+    of re-dispatching to the DataFrame path (which would fail later with
+    an unrelated AnalysisException)."""
+    from etl_documentos_spark.streaming import stream
+
+    pipe = _pipeline(spark, tmp_path)
+    with pytest.raises(FileNotFoundError, match="epoch=99"):
+        getattr(stream, driver)(pipe, events_path, epochs=[0, 99])
+    assert not pipe.commitlog.is_committed(0)
 
 
 def test_files_path_schema_evolution_from_footers(spark, tmp_path):

@@ -403,8 +403,9 @@ def test_bulk_backfill_matches_oracle_and_is_idempotent(
     spark, stream_df, events_path, tmp_path
 ):
     """Backfill super-batch: one stats pass + one append for all epochs;
-    state equals the oracle; re-running skips every epoch; a partially
-    micro-batched prefix composes with a bulk remainder."""
+    state equals the oracle; re-running skips every epoch; a prefix
+    applied as DataFrames (the foreachBatch route) composes with a bulk
+    remainder on the file route."""
     from etl_documentos_spark.streaming.stream import replay_bulk
 
     pipeline = fresh_pipeline(spark, tmp_path, "mor")
@@ -420,13 +421,42 @@ def test_bulk_backfill_matches_oracle_and_is_idempotent(
     assert all(r.skipped for r in again)
     assert final_state_rows(spark, pipeline) == got
 
-    # mixed: micro-batch a prefix, bulk the rest
+    # mixed: DataFrame-apply a prefix, bulk the rest through the files
+    import os
+
     p2 = fresh_pipeline(spark, tmp_path / "mixed", "mor")
     epochs = list_epochs(events_path)
-    replay_epochs(p2, events_path, epochs=epochs[:2])
+    for e in epochs[:2]:
+        p2.apply_epoch(
+            spark.read.parquet(os.path.join(events_path, f"epoch={e}")), e
+        )
     mixed = replay_bulk(p2, events_path)
     assert sum(r.skipped for r in mixed) == 2
     assert final_state_rows(spark, p2) == got
+
+
+def test_replay_epochs_mor_uses_file_writer(
+    spark, events_path, tmp_path, monkeypatch
+):
+    """replay_epochs applies a MOR pipeline's local epochs through the
+    zero-IPC file writer, one call per epoch: the DataFrame writer (and so
+    the JVM→Python Arrow socket) never runs."""
+
+    def dataframe_writer(*a, **kw):
+        raise AssertionError("replay_epochs took the DataFrame writer")
+
+    written = []
+    file_writer = LakeTable.write_change_files_direct
+    monkeypatch.setattr(LakeTable, "write_data_files_direct", dataframe_writer)
+    monkeypatch.setattr(
+        LakeTable,
+        "write_change_files_direct",
+        lambda self, *a, **kw: written.append(1) or file_writer(self, *a, **kw),
+    )
+    pipeline = fresh_pipeline(spark, tmp_path)
+    results = replay_epochs(pipeline, events_path)
+    assert not any(r.skipped for r in results)
+    assert len(written) == len(results) == len(list_epochs(events_path))
 
 
 def test_lineage_and_metrics_emitted(spark, stream_df, events_path, tmp_path):

@@ -9,6 +9,7 @@ reason, and crash-replay of the epoch rewrites (not duplicates) the DLQ.
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -110,3 +111,25 @@ def test_clean_epoch_writes_no_dlq(spark, dlq_pipeline):
     assert res.quarantined == 0
     with pytest.raises(FileNotFoundError):
         pipe.read_dlq()
+
+
+def test_replay_epochs_keeps_quarantine_on_dataframe_route(
+    spark, dlq_pipeline, tmp_path
+):
+    """replay_epochs routes a quarantine pipeline through apply_epoch (the
+    validity split is a DataFrame filter), so malformed rows in an epoch
+    file still divert to the DLQ instead of reaching the file writer."""
+    from etl_documentos_spark.streaming.stream import replay_epochs
+
+    good, bad = _rows()
+    events = str(tmp_path / "events")
+    spark.createDataFrame(good + bad, SCHEMA).write.parquet(
+        os.path.join(events, "epoch=0")
+    )
+    (res,) = replay_epochs(dlq_pipeline, events)
+    assert res.quarantined == len(bad)
+    assert res.events == len(good)
+    assert dlq_pipeline.read_dlq().count() == len(bad)
+    assert read_current(spark, dlq_pipeline.table).count() == len(
+        {(e[1], e[2]) for e in good}
+    )
