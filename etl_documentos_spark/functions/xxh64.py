@@ -4,22 +4,25 @@ Why this exists: the bulk backfill's fast path moves the data plane out of
 the JVM entirely — writer tasks read the change-log parquet with pyarrow
 and write bucket files directly, never shipping rows through the
 JVM→Python Arrow socket (measured ~2.2 s of a 2.7 s super-batch at sf-bench
-scale, the single largest cost in the replay). The ONE thing those tasks
-still need from Spark semantics is the bucket transform
-``pmod(xxhash64(key), num_buckets)`` (`lake.table.LakeTable.bucket_expr`):
-files must land in exactly the buckets Spark-side pruned reads will look
-in. So the hash itself is re-derived here from the public xxHash64
-specification (https://github.com/Cyan4973/xxHash — the same spec Spark's
+scale, the single largest cost in the replay). Those tasks still need two
+Spark hashes, re-derived here from the public xxHash64 specification
+(https://github.com/Cyan4973/xxHash — the same spec Spark's
 ``org.apache.spark.sql.catalyst.expressions.XXH64`` implements), seed 42,
-vectorized over numpy uint64 lanes. Parity with Spark is pinned by
-``tests/test_xxh64_parity.py`` over adversarial inputs (empty strings,
-multi-byte UTF-8, lengths straddling every block boundary, ±2^63 longs).
+vectorized over numpy uint64 lanes: the bucket transform
+``pmod(xxhash64(key), num_buckets)`` (`lake.table.LakeTable.bucket_expr`:
+files must land where pruned reads look; `xxh64_key` hashes the key once,
+`bucket_from_hash` derives the bucket), and the position fingerprint
+``xxhash64(source_partition, lsn)`` (`streaming.commitlog`): a binlog event
+is identified by its position, so two integers per row are hashed instead
+of every payload byte (`xxh64_chain`, ~40x the cost on transcript text).
+Parity with Spark is pinned by ``tests/test_xxh64_parity.py`` over
+adversarial inputs (empty strings, multi-byte UTF-8, lengths straddling
+every block boundary, ±2^63 longs).
 
 Spark type mapping (XxHash64Expression): LongType hashes the 8-byte value
 (``hashLong``), Byte/Short/IntegerType hash as a 4-byte value
 (``hashInt``), StringType hashes the UTF-8 bytes (``hashUnsafeBytes``).
-Multi-column hashes chain: each column's hash seeds the next — only the
-single-column forms are needed for bucketing.
+Multi-column hashes chain: each column's hash seeds the next.
 
 All arithmetic is modulo 2^64 (numpy uint64 wraps like the reference C).
 Strings are length-grouped: every distinct byte-length forms one fully
@@ -336,42 +339,57 @@ def xxh64_strings(arr, seed=42) -> np.ndarray:
 
 
 @_wrapping
-def spark_bucket(
-    arr, num_buckets: int, split_buckets: list[int] | None = None
-) -> np.ndarray:
-    """``LakeTable.bucket_expr`` replicated over a pyarrow column: bucket =
-    pmod(xxhash64(key), N), with split base buckets hashing at 2N
-    granularity. Accepts string or integer arrays (the two bucket-key
-    types the engine supports)."""
+def xxh64_key(arr, seed=42) -> np.ndarray:
+    """Spark ``xxhash64`` of one key column (pyarrow array), dispatched on
+    its type like XxHash64Expression: string → UTF-8 bytes, long → hashLong,
+    byte/short/int → hashInt, unsigned → the signed type Spark's parquet
+    reader widens it to. A NULL row keeps the seed (Spark skips nulls).
+    ``seed``: scalar or per-row array, so ``xxh64_key(b, seed=xxh64_key(a))``
+    equals ``F.xxhash64(a, b)``. int64 out."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    if pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type):
-        h = xxh64_strings(arr)
-    elif pa.types.is_int64(arr.type):
-        h = xxh64_longs(arr.to_numpy(zero_copy_only=False))
-    elif pa.types.is_unsigned_integer(arr.type):
-        # widen as Spark's parquet reader does (uint32→long, else →int);
-        # a wrapping astype would bucket rows where pruned reads never
-        # look — silent point-lookup misses
-        if arr.type.bit_width == 64:
-            raise TypeError("uint64 bucket keys unsupported (Decimal in Spark)")
-        v = arr.to_numpy(zero_copy_only=False)
-        h = (
-            xxh64_longs(v.astype(np.int64))
-            if arr.type.bit_width == 32
-            else xxh64_ints(v.astype(np.int32))
-        )
-    elif pa.types.is_integer(arr.type):  # byte/short/int: Spark hashInt
-        h = xxh64_ints(arr.to_numpy(zero_copy_only=False))
+    t = arr.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return xxh64_strings(arr, seed=seed)
+    if not pa.types.is_integer(t):
+        raise TypeError(f"unsupported key type {t}")
+    if t.bit_width == 64 and pa.types.is_unsigned_integer(t):
+        raise TypeError("uint64 keys unsupported (Decimal in Spark)")
+    v = pc.fill_null(arr, 0).to_numpy(zero_copy_only=False)
+    # widen as Spark's parquet reader does (uint32→long, uint8/16→int); a
+    # wrapping astype would bucket rows where pruned reads never look
+    if t.bit_width == 64 or (
+        t.bit_width == 32 and pa.types.is_unsigned_integer(t)
+    ):
+        h = xxh64_longs(v.astype(np.int64), seed=seed)
     else:
-        raise TypeError(f"unsupported bucket key type {arr.type}")
+        h = xxh64_ints(v.astype(np.int32), seed=seed)
+    if arr.null_count:
+        nulls = np.asarray(arr.is_null())
+        h[nulls] = _seed_arr(seed, len(h)).view(np.int64)[nulls]
+    return h
+
+
+def bucket_from_hash(
+    h: np.ndarray, num_buckets: int, split_buckets: list[int] | None = None
+) -> np.ndarray:
+    """``LakeTable.bucket_expr`` over key hashes from `xxh64_key`: bucket =
+    pmod(h, N), with split base buckets hashing at 2N granularity."""
     b0 = np.mod(h, np.int64(num_buckets))  # numpy mod == Spark pmod sign
     if split_buckets:
         hot = np.isin(b0, np.asarray(sorted(split_buckets), np.int64))
         b0 = np.where(hot, np.mod(h, np.int64(2 * num_buckets)), b0)
     return b0.astype(np.int32)
+
+
+def spark_bucket(
+    arr, num_buckets: int, split_buckets: list[int] | None = None
+) -> np.ndarray:
+    """``LakeTable.bucket_expr`` replicated over a pyarrow key column."""
+    return bucket_from_hash(xxh64_key(arr), num_buckets, split_buckets)
 
 
 @_wrapping
@@ -380,11 +398,10 @@ def xxh64_chain(tbl, cols: list[str], seed: int = 42) -> np.ndarray:
     multi-column form (HashExpression: each column's hash seeds the next;
     a NULL value leaves the running hash untouched).
 
-    This is what lets the Arrow-direct bulk writer compute the epoch
-    fingerprint (`streaming.commitlog.hash_chunk_exprs` splits this value)
-    without a JVM scan while staying bit-compatible with the micro-batch
-    path's JVM-computed fingerprints — exactly-once restart flows compare
-    the two across paths. Parity pinned in tests/test_xxh64_parity.py.
+    Off the write path: epoch fingerprints hash the binlog position
+    (`xxh64_key` over ``source_partition`` then ``lsn``), not the payload.
+    Kept only for ``perfbench/layers.py``, which times it; parity pinned
+    in tests/test_xxh64_parity.py.
 
     Type dispatch mirrors XxHash64Expression: string → hashUnsafeBytes of
     UTF-8; long/timestamp → hashLong (a timestamp's hash input is its

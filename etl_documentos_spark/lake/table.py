@@ -376,6 +376,53 @@ def _gather_direct_rows(rows, rel: str, stats: bool):
     return files, manifest or None
 
 
+#: HyperLogLog precision of the writer's per-(epoch, sp) key sketch: m=2^10
+#: registers => ~3.2% rel. error (on par with Spark's default
+#: approx_count_distinct rsd=5%), 1 KiB per emitted row. Register merge
+#: across tasks is elementwise max — order-free, so the estimate is
+#: deterministic for a given input set.
+HLL_P = 10
+HLL_M = 1 << HLL_P
+
+
+def fold_hll(sketches: dict, ch, keys) -> None:
+    """Fold 64-bit key hashes ``ch`` into HyperLogLog registers:
+    ``sketches[k]`` (uint8[HLL_M]) takes the register-wise max over the
+    rows whose ``keys`` equal ``k``. One scatter-max over
+    ``slot * HLL_M + register`` covers every key of the batch."""
+    import numpy as np
+
+    keys = np.asarray(keys, np.int64)
+    u = np.asarray(ch).astype(np.int64).view(np.uint64)
+    idx = (u >> np.uint64(64 - HLL_P)).astype(np.intp)
+    # rho = leading zeros of the suffix + 1; the guard bit caps it at
+    # 64-p+1 when the suffix is zero
+    y = (u << np.uint64(HLL_P)) | np.uint64(1 << (HLL_P - 1))
+    for sh in (1, 2, 4, 8, 16, 32):
+        y |= y >> np.uint64(sh)
+    v = ~y  # popcount of the zeros above the highest set bit
+    v = v - ((v >> np.uint64(1)) & np.uint64(0x5555555555555555))
+    m2 = np.uint64(0x3333333333333333)
+    v = (v & m2) + ((v >> np.uint64(2)) & m2)
+    v = (v + (v >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
+    rho = ((v * np.uint64(0x0101010101010101)) >> np.uint64(56)) + 1
+    lo = int(keys.min())
+    d = keys - lo
+    if int(d.max()) < 1 << 16:
+        # a batch spans few adjacent keys (one epoch's source
+        # partitions): dense slots by counting, not by sorting the batch
+        seen = np.bincount(d) > 0
+        slot = (np.cumsum(seen) - 1)[d]
+        uk = np.nonzero(seen)[0] + lo
+    else:
+        uk, slot = np.unique(keys, return_inverse=True)
+    reg = np.zeros(len(uk) * HLL_M, np.uint8)
+    np.maximum.at(reg, slot * HLL_M + idx, rho.astype(np.uint8))
+    for k, r in zip(uk.tolist(), reg.reshape(len(uk), HLL_M)):
+        cur = sketches.get(k)
+        sketches[k] = r if cur is None else np.maximum(cur, r)
+
+
 def _make_write_partition(
     out: str,
     data_cols: list,
@@ -415,58 +462,8 @@ def _make_write_partition(
         buf_rows: dict[int, int] = {}
         stat_parts: list = []
 
-        # per-(epoch, sp) HyperLogLog over the key hash (_ch): m=2^10
-        # registers => ~3.2% rel. error (on par with Spark's default
-        # approx_count_distinct rsd=5%), 1 KiB per emitted row. Register
-        # merge across tasks is elementwise max — order-free, so the
-        # estimate is deterministic for a given input set.
-        HLL_P = 10
-        HLL_M = 1 << HLL_P
+        # per-(epoch, sp) HyperLogLog registers over the key hash (_ch)
         sketches: dict[int, object] = {}
-        if with_key_sketch:
-            import numpy as _np
-
-            def _popcount64(v):
-                c1 = _np.uint64(0x5555555555555555)
-                c2 = _np.uint64(0x3333333333333333)
-                c3 = _np.uint64(0x0F0F0F0F0F0F0F0F)
-                c4 = _np.uint64(0x0101010101010101)
-                v = v - ((v >> _np.uint64(1)) & c1)
-                v = (v & c2) + ((v >> _np.uint64(2)) & c2)
-                v = (v + (v >> _np.uint64(4))) & c3
-                return (v * c4) >> _np.uint64(56)
-
-            def _fold_sketch(tbl) -> None:
-                ch = (
-                    tbl.column("_ch")
-                    .to_numpy(zero_copy_only=False)
-                    .astype(_np.int64)
-                    .view(_np.uint64)
-                )
-                idx = (ch >> _np.uint64(64 - HLL_P)).astype(_np.intp)
-                # guard bit caps rho at 64-p+1 when the suffix is zero
-                x = (ch << _np.uint64(HLL_P)) | _np.uint64(
-                    1 << (HLL_P - 1)
-                )
-                y = x.copy()
-                for s in (1, 2, 4, 8, 16, 32):
-                    y |= y >> _np.uint64(s)
-                rho = (_popcount64(~y) + _np.uint64(1)).astype(_np.uint8)
-                ep = tbl.column("epoch").to_numpy(
-                    zero_copy_only=False
-                ).astype(_np.int64)
-                sp = tbl.column("source_partition").to_numpy(
-                    zero_copy_only=False
-                ).astype(_np.int64)
-                keys = (ep << _np.int64(20)) | sp
-                for k in _np.unique(keys):
-                    reg = sketches.get(int(k))
-                    if reg is None:
-                        reg = sketches.setdefault(
-                            int(k), _np.zeros(HLL_M, _np.uint8)
-                        )
-                    mask = keys == k
-                    _np.maximum.at(reg, idx[mask], rho[mask])
 
         # per-bucket-file manifest accumulators (only when opted in):
         # running [lo, hi] per stat col and the distinct-value set per
@@ -520,6 +517,8 @@ def _make_write_partition(
             buf_rows[b] = 0
 
         for batch in batches:
+            if not batch.num_rows:
+                continue
             tbl = _pa.Table.from_batches([batch])
             bcol = tbl.column("_bucket")
             data = tbl.select(data_cols)
@@ -581,7 +580,11 @@ def _make_write_partition(
                     )
                 )
                 if with_key_sketch:
-                    _fold_sketch(tbl)
+                    ep, sp, ch = (
+                        tbl.column(c).to_numpy(zero_copy_only=False)
+                        for c in ("epoch", "source_partition", "_ch")
+                    )
+                    fold_hll(sketches, ch, (ep.astype("int64") << 20) | sp)
             for b in _pc.unique(bcol).to_pylist():
                 sub = data.filter(_pc.equal(bcol, b))
                 buf.setdefault(b, []).append(sub)
@@ -1423,9 +1426,9 @@ class LakeTable:
         parquet encode); no per-row Python.
 
         ``stats``: single-pass mode for the exactly-once bookkeeping. The
-        caller adds sidecar columns — ``_h`` (64-bit row hash computed
-        JVM-side), ``epoch``, ``source_partition``, and optionally ``_ch``
-        (xxhash64 of the bucket key) — which are NOT written to parquet;
+        caller adds sidecar columns — ``_h`` (`commitlog.position_hash`),
+        ``epoch``, ``source_partition``, and optionally ``_ch`` (xxhash64
+        of ``conv_id``) — which are NOT written to parquet;
         instead the writer aggregates, per (epoch, source_partition) and
         fully in Arrow C++ (group_by), the fingerprint chunk sums
         (h0/h1/h2, same split as ``commitlog.hash_chunk_exprs``),
@@ -1500,7 +1503,6 @@ class LakeTable:
         self,
         spark: SparkSession,
         file_epochs: list[tuple[str, int]],
-        change_schema: T.StructType,
         fence_lsn: int | None = None,
         target_tasks: int | None = None,
     ):
@@ -1508,13 +1510,15 @@ class LakeTable:
 
         ``file_epochs``: (change-log parquet path, epoch id) pairs. Each
         writer TASK opens its files with pyarrow directly, applies the
-        bootstrap fence, projects onto the physical table shape, computes
-        bucket ids (`functions.xxh64.spark_bucket`) and the per-epoch
-        fingerprint hash (`functions.xxh64.xxh64_chain` — bit-compatible
-        with the JVM ``F.xxhash64(*cols)`` the micro-batch path uses, so
-        cross-path exactly-once fingerprints agree), and streams bucket
-        files through the SAME `_make_write_partition` generator as the
-        DataFrame writer. Spark distributes only file paths in and manifest
+        bootstrap fence, projects onto the physical table shape, hashes in
+        numpy (`functions.xxh64`, bit-equal to the DataFrame routes' JVM
+        ``F.xxhash64``) each row's binlog position ``(source_partition,
+        lsn)`` for the position fingerprint — two integers, not every
+        payload column — and its bucket key, once (the bucket and, on
+        ``conv_id`` tables, the ``_ch`` sketch column derive from that
+        hash), and streams bucket files through the SAME
+        `_make_write_partition` generator as the DataFrame writer.
+        Spark distributes only file paths in and manifest
         rows out — the ~2.2 s/super-batch JVM→Python Arrow-socket drain of
         the mapInArrow path (the single largest bulk-replay cost at bench
         scale) disappears, along with the JVM-side decode.
@@ -1549,7 +1553,6 @@ class LakeTable:
         phys_fields = [
             (f.name, _arrow_type(f.dataType, tz)) for f in self.schema.fields
         ]
-        declared = [f.name for f in change_schema.fields if f.name != "epoch"]
         num_buckets = self.num_buckets
         split = list(self.split_buckets) or None
         bucket_col = self.bucket_col
@@ -1579,9 +1582,8 @@ class LakeTable:
             import pyarrow.parquet as _pq
 
             from etl_documentos_spark.functions.xxh64 import (
-                spark_bucket,
-                xxh64_chain,
-                xxh64_strings,
+                bucket_from_hash,
+                xxh64_key,
             )
 
             side_fields = [
@@ -1600,7 +1602,6 @@ class LakeTable:
                     for path, epoch in chunk:
                         pf = _pq.ParquetFile(path)
                         present = set(pf.schema_arrow.names)
-                        hash_cols = [c for c in declared if c in present]
                         for rb in pf.iter_batches(batch_size=1 << 16):
                             tbl = _pa.Table.from_batches([rb])
                             if fence is not None:
@@ -1610,11 +1611,7 @@ class LakeTable:
                             n = tbl.num_rows
                             if n == 0:
                                 continue
-                            h = xxh64_chain(tbl, hash_cols)
-                            key = tbl.column(bucket_col).combine_chunks()
-                            ch = xxh64_strings(key)
-                            b = spark_bucket(key, num_buckets, split)
-                            cols = []
+                            cols = {}  # physical name -> projected array
                             for name, typ in phys_fields:
                                 if name == "_deleted":
                                     a = _pc.equal(tbl.column("op"), "delete")
@@ -1628,24 +1625,37 @@ class LakeTable:
                                     a = a.combine_chunks()
                                 if a.type != typ:
                                     a = _pc.cast(a, typ, safe=False)
-                                cols.append(a)
-                            cols.extend(
+                                cols[name] = a
+                            sp = tbl.column("source_partition")
+                            h = xxh64_key(
+                                tbl.column("lsn"), seed=xxh64_key(sp)
+                            )
+                            kh = xxh64_key(cols[bucket_col])
+                            ch = (
+                                kh
+                                if bucket_col == "conv_id"
+                                else xxh64_key(cols["conv_id"])
+                            )
+                            yield _pa.record_batch(
                                 [
+                                    *cols.values(),
                                     _pa.array(h, _pa.int64()),
                                     _pa.array(ch, _pa.int64()),
                                     _pa.array(
                                         _np.full(n, epoch, _np.int32)
                                     ),
                                     _pc.cast(
-                                        tbl.column(
-                                            "source_partition"
-                                        ).combine_chunks(),
+                                        sp.combine_chunks(), _pa.int32()
+                                    ),
+                                    _pa.array(
+                                        bucket_from_hash(
+                                            kh, num_buckets, split
+                                        ),
                                         _pa.int32(),
                                     ),
-                                    _pa.array(b, _pa.int32()),
-                                ]
+                                ],
+                                schema=out_schema,
                             )
-                            yield _pa.record_batch(cols, schema=out_schema)
 
             for rb in write_partition(batches()):
                 yield from rb.to_pylist()

@@ -67,19 +67,6 @@ TRANSCRIPTS_V2 = T.StructType(list(TRANSCRIPTS.fields) + list(EVOLVED_COLS.field
 # ---------------------------------------------------------------------------
 # engine-internal tables
 # ---------------------------------------------------------------------------
-EPOCH_COMMITS = T.StructType(
-    [
-        T.StructField("epoch_id", T.LongType(), False),
-        T.StructField("input_fingerprint", T.StringType(), False),
-        T.StructField(
-            "source_partition_offsets",
-            T.MapType(T.IntegerType(), T.LongType()),
-            True,
-        ),
-        T.StructField("committed_at", T.TimestampType(), False),
-    ]
-)
-
 LINEAGE = T.StructType(
     [
         T.StructField("epoch_id", T.LongType(), False),

@@ -58,6 +58,7 @@ from etl_documentos_spark.streaming.commitlog import (
     batch_stats,
     combine_chunks,
     observe_exprs,
+    position_hash,
     stats_from_observation,
 )
 from etl_documentos_spark.streaming.lineage import (
@@ -382,18 +383,17 @@ class CdcPipeline:
             # SINGLE heavy pass: the Arrow writer aggregates fingerprint
             # chunks + lineage counters per (epoch, source_partition) inline
             # (lake.table._write_data_direct stats mode). The row hash is
-            # computed JVM-side over the same non-epoch column set the
-            # per-epoch path fingerprints, so cross-path fingerprints agree.
+            # the same JVM-side position hash the per-epoch path sums, so
+            # cross-path fingerprints agree.
             # The distinct-conversation counter rides the same pass as a
             # per-task HyperLogLog over xxhash64(conv_id) (_ch sidecar),
             # merged register-wise here — the old concurrent
             # approx_count_distinct job re-decoded 3 columns of the whole
             # batch; at N executors that second scan is pure memory-bandwidth
             # overhead, so folding it into the write pass buys scaling.
-            data_cols = [F.col(c) for c in batch.columns if c != "epoch"]
             aug = batch.select(
                 *physical_exprs(batch, table.schema),
-                F.xxhash64(*data_cols).alias("_h"),
+                position_hash().alias("_h"),
                 F.xxhash64(F.col("conv_id")).alias("_ch"),
                 F.col("epoch").cast("int").alias("epoch"),
                 F.col("source_partition").cast("int").alias(
@@ -516,14 +516,14 @@ class CdcPipeline:
         the listed files DIRECTLY with pyarrow and bucket/hash rows in
         numpy (`lake.table.write_change_files_direct`), so the batch never
         crosses the JVM→Python Arrow socket and the JVM never decodes it.
-        Fingerprints stay bit-compatible with the DataFrame paths
-        (`functions.xxh64.xxh64_chain` parity), so a backfill started here
-        and resumed through `apply_epochs_bulk` (or vice versa) dedups
-        correctly.
+        Position fingerprints (``xxhash64(source_partition, lsn)`` per row:
+        two integers, not every payload column) are hashed bit-equal to the
+        DataFrame paths, so a backfill started here and resumed through
+        `apply_epochs_bulk` (or vice versa) dedups correctly.
 
         ``file_epochs``: (parquet path, epoch id) pairs — an epoch may span
         many files. ``schema``: the declared change-stream schema (drives
-        schema evolution and the fingerprint column order); derived from
+        schema evolution); derived from
         the files' footers (union over one footer per epoch) when omitted.
         MOR mode only, like all bulk paths.
         """
@@ -561,8 +561,7 @@ class CdcPipeline:
         stat_rows = self._stage_and_append(
             table,
             lambda t: t.write_change_files_direct(
-                self.spark, todo_pairs, schema,
-                fence_lsn=wm, target_tasks=target_tasks,
+                self.spark, todo_pairs, fence_lsn=wm, target_tasks=target_tasks,
             ),
         )
         return skipped + self._finalize_bulk(stat_rows, todo, t0, added)

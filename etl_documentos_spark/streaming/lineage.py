@@ -13,25 +13,8 @@ import datetime
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from etl_documentos_spark.schemas import LINEAGE, METRICS
-
-
-def append_lineage(
-    spark: SparkSession, path: str, epoch_id: int, per_partition: DataFrame
-) -> None:
-    """``per_partition``: source_partition, events_read, rows_upserted,
-    rows_deleted, conv_ids_touched — epoch_id is stamped here."""
-    out = per_partition.select(
-        F.lit(epoch_id).cast("long").alias("epoch_id"),
-        F.col("source_partition").cast("int"),
-        F.col("events_read").cast("long"),
-        F.col("rows_upserted").cast("long"),
-        F.col("rows_deleted").cast("long"),
-        F.col("conv_ids_touched").cast("long"),
-    )
-    out.write.mode("append").parquet(path)
 
 
 def _append_parquet_local(path: str, table, name: str) -> None:

@@ -11,6 +11,7 @@ fence, and split-bucket spec pickup.
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pyarrow.parquet as pq
@@ -23,7 +24,12 @@ from etl_documentos_spark.lake.table import LakeTable
 from etl_documentos_spark.operators.merge import physical_schema, read_current
 from etl_documentos_spark.schemas import CHANGE_EVENTS, TRANSCRIPTS
 from etl_documentos_spark.streaming.apply import CdcPipeline
-from etl_documentos_spark.streaming.stream import epoch_files, list_epochs
+from etl_documentos_spark.streaming.stream import (
+    epoch_files,
+    list_epochs,
+    replay_bulk,
+    replay_epochs,
+)
 
 BULK_SCHEMA = T.StructType(
     list(CHANGE_EVENTS.fields) + [T.StructField("epoch", T.IntegerType(), False)]
@@ -300,3 +306,131 @@ def test_replay_bulk_ignores_hidden_files(spark, tmp_path):
     pipe = CdcPipeline(spark, root, str(tmp_path / "w"))
     results = replay_bulk(pipe, src)  # would crash reading the junk
     assert sum(r.events for r in results) == df.count()
+
+
+@pytest.mark.parametrize("driver", [replay_bulk, replay_epochs])
+def test_files_path_int_bucket_key(spark, stream_df, events_path, tmp_path, driver):
+    """On a table bucketed on an int column the file route hashes the key
+    by its type: rows land where ``bucket_expr`` puts them, the state
+    equals the oracle, and the lineage sketch still counts conversations
+    (xxhash64 of conv_id), not bucket keys."""
+    from etl_documentos_spark.streaming.lineage import read_lineage
+
+    troot = str(tmp_path / "transcripts")
+    LakeTable.create(
+        troot, physical_schema(TRANSCRIPTS), num_buckets=8, bucket_col="turn_idx"
+    )
+    pipe = CdcPipeline(spark, troot, str(tmp_path / "work"), mode="mor")
+    res = driver(pipe, events_path)
+    assert sum(r.events for r in res) == stream_df.count()
+    _assert_oracle_state(spark, pipe, stream_df)
+
+    t = pipe.table
+    for b in t.live_buckets():
+        assert t.scan(spark, buckets=[b]).filter(t.bucket_expr() != b).count() == 0
+
+    got = {
+        (r.epoch_id, r.source_partition): r.conv_ids_touched
+        for r in read_lineage(spark, pipe.lineage_path).collect()
+    }
+    want = {
+        (r.epoch, r.source_partition): r.n
+        for r in stream_df.groupBy("epoch", "source_partition")
+        .agg(F.countDistinct("conv_id").alias("n"))
+        .collect()
+    }
+    assert got.keys() == want.keys()
+    for k, n in want.items():
+        assert abs(got[k] - n) <= max(2, 0.05 * n), k
+
+
+def _content_fingerprint(spark, path: str) -> str:
+    """The fingerprint records held before positions were hashed: chunked
+    sums of xxhash64 over every change column, then the count."""
+    df = spark.read.parquet(path)
+    h = F.xxhash64(*[F.col(c) for c in df.columns])
+    r = df.agg(
+        F.sum(h.bitwiseAND(F.lit(0x3FFFFF))),
+        F.sum(F.shiftrightunsigned(h, 22).bitwiseAND(F.lit(0x3FFFFF))),
+        F.sum(F.shiftrightunsigned(h, 44)),
+        F.count("*"),
+    ).first()
+    return ":".join(str(int(v)) for v in r)
+
+
+def test_resume_from_content_fingerprint_records(
+    spark, stream_df, events_path, tmp_path
+):
+    """A workdir whose commit records predate ``fingerprint_kind`` (content
+    fingerprints, no field) resumes: its epochs read back as "content" and
+    skip, the rest apply with position records, ``compact_log`` folds both
+    kinds, and the final state equals the oracle."""
+    epochs = list_epochs(events_path)
+    done, rest = epochs[:2], epochs[2:]
+    pipe = _pipeline(spark, tmp_path)
+    replay_bulk(pipe, events_path, epochs=done)
+    log_dir = pipe.commitlog.root
+    for e in done:
+        rec = pipe.commitlog.get(e)
+        old = {
+            "epoch_id": e,
+            "input_fingerprint": _content_fingerprint(
+                spark, os.path.join(events_path, f"epoch={e}")
+            ),
+            "source_partition_offsets": rec.source_partition_offsets,
+            "committed_at": rec.committed_at,
+        }
+        with open(os.path.join(log_dir, f"commit-{e:012d}.json"), "w") as f:
+            json.dump(old, f)
+
+    pipe = CdcPipeline(spark, pipe.table_root, str(tmp_path / "work"), mode="mor")
+    assert {pipe.commitlog.get(e).fingerprint_kind for e in done} == {"content"}
+    res = replay_epochs(pipe, events_path)
+    assert [r.epoch_id for r in res if r.skipped] == done
+    assert [r.epoch_id for r in res if not r.skipped] == rest
+    assert {pipe.commitlog.get(e).fingerprint_kind for e in rest} == {"position"}
+
+    offsets = pipe.commitlog.max_offsets()
+    assert pipe.commitlog.compact_log(keep_last=0) == len(epochs)
+    assert all(pipe.commitlog.is_committed(e) for e in epochs)
+    assert pipe.commitlog.max_offsets() == offsets
+    assert all(r.skipped for r in replay_bulk(pipe, events_path))
+    _assert_oracle_state(spark, pipe, stream_df)
+
+
+def _reference_fold(sketches: dict, ch, keys) -> None:
+    """Per-key HyperLogLog fold, rho by a bit-by-bit scan of the suffix."""
+    import numpy as np
+
+    from etl_documentos_spark.lake.table import HLL_M, HLL_P
+
+    width = 64 - HLL_P
+    for h, k in zip(np.asarray(ch, np.int64).view(np.uint64).tolist(), keys.tolist()):
+        suffix = h & ((1 << width) - 1)
+        rho = width + 1 - suffix.bit_length() if suffix else width + 1
+        reg = sketches.setdefault(k, np.zeros(HLL_M, np.uint8))
+        reg[h >> width] = max(reg[h >> width], rho)
+
+
+@pytest.mark.parametrize("n_epochs", [1, 3])
+def test_fold_hll_matches_per_key_reference(n_epochs):
+    """The writer's one-scatter HLL fold yields the registers of a per-key
+    reference fold, over batches spanning one or several epochs."""
+    import numpy as np
+    import pyarrow as pa
+
+    from etl_documentos_spark.functions.xxh64 import xxh64_strings
+    from etl_documentos_spark.lake.table import fold_hll
+
+    rng = np.random.default_rng(n_epochs)
+    got, want = {}, {}
+    for _ in range(3):
+        n = 5_000
+        ch = xxh64_strings(pa.array([f"c{i}" for i in rng.integers(0, 2_000, n)]))
+        ch[:4] = [0, -1, 1, -(2**63)]
+        keys = (rng.integers(0, n_epochs, n).astype(np.int64) << 20) | rng.integers(0, 8, n)
+        fold_hll(got, ch, keys)
+        _reference_fold(want, ch, keys)
+    assert got.keys() == want.keys()
+    for k in want:
+        assert got[k].tolist() == want[k].tolist(), k

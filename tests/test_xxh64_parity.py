@@ -224,3 +224,17 @@ def test_var_kernel_parity_vs_spark(spark):
     # the dispatch) and ALSO check it explicitly
     got = xxh64_strings(arr)
     assert got.tolist() == want
+
+
+@pytest.mark.parametrize("sp_type", ["int", "long"])
+def test_position_hash_parity(spark, sp_type):
+    """xxh64_key(lsn, seed=xxh64_key(sp)) == F.xxhash64(sp, lsn), the
+    per-row position hash of the epoch fingerprint, NULLs included."""
+    from etl_documentos_spark.functions.xxh64 import xxh64_key
+
+    rows = [(0, 0), (7, 2**40), (-1, -(2**63)), (None, 5), (3, None), (None, None)]
+    df = spark.createDataFrame(rows, schema=f"sp {sp_type}, lsn long")
+    want = [r[0] for r in df.select(F.xxhash64("sp", "lsn")).collect()]
+    sp = pa.array([r[0] for r in rows], pa.int32() if sp_type == "int" else pa.int64())
+    lsn = pa.array([r[1] for r in rows], pa.int64())
+    assert xxh64_key(lsn, seed=xxh64_key(sp)).tolist() == want
