@@ -185,12 +185,6 @@ def head_middle_tail(col: Column | str, n: int = 200) -> Column:
     )
 
 
-def content_hash(col: Column | str) -> Column:
-    """SHA-256 content hash (extraction_service.py:294-296)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sha2(c, 256)
-
-
 def fingerprint(col: Column | str) -> Column:
     """Document fingerprint: md5 of the normalized text (portable to SQL)."""
     return F.md5(normalize_text(col))
@@ -233,16 +227,6 @@ LANG_MARKERS: dict[str, list[str]] = {
     "de": ["der", "die", "und", "das", "ist", "von"],
     "pt": ["o", "a", "de", "que", "e", "do"],
 }
-
-
-def lang_scores(col: Column | str) -> list[Column]:
-    """One hit-count column per language (A10 keyword-scoring shape,
-    classification_service.py:316-359)."""
-    ws = words(col)
-    return [
-        F.size(F.filter(ws, lambda w: w.isin(markers))).alias(f"score_{lang}")
-        for lang, markers in LANG_MARKERS.items()
-    ]
 
 
 def lang_id(col: Column | str) -> Column:

@@ -31,6 +31,7 @@ immutable-file lake table so updates become set-oriented partition rewrites.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -1678,19 +1679,49 @@ class LakeTable:
         Manifest stats come from the write tasks themselves when the table
         opted in (no file re-read); otherwise from the footer pass.
         ``branch`` lands the delta files on a named branch (WAP)."""
+
+        def stage(t: LakeTable):
+            files, man_stats = t._write_data_direct(df, target_tasks)
+            return files, None, man_stats or t._collect_stats(files)
+
+        return self.append_staged(stage, branch=branch)[0]
+
+    def append_staged(self, write, lock=None, commit_empty=True, **commit_kw):
+        """The one stage → `commit_append` → restage loop of every append.
+
+        ``write(table) -> (files, out, new_stats)`` (the stats-mode return
+        shape of the direct writers) writes data files for this handle's
+        spec outside any lock; the commit then runs under ``lock`` when
+        given (a pipeline's in-process commit lock) and through this
+        handle — ``commit_append`` re-reads the metadata itself. A
+        concurrent split/rebucket that re-keyed the buckets between the two
+        steps fails the commit with ``SpecConflictError``: re-read and
+        restage under the fresh transform, at most 5 times. Returns
+        ``(snapshot_id, out)``; ``commit_empty=False`` skips the snapshot
+        (``snapshot_id`` None) when the staging wrote no file.
+        ``commit_kw`` passes through to ``commit_append``."""
         for _ in range(5):
             spec = self.spec_fingerprint()
-            files, man_stats = self._write_data_direct(df, target_tasks)
+            files, out, new_stats = write(self)
+            if not files and not commit_empty:
+                return None, out
             try:
-                return self.commit_append(
-                    files,
-                    staged_spec=spec,
-                    new_stats=man_stats or self._collect_stats(files),
-                    branch=branch,
-                )
+                with lock or contextlib.nullcontext():
+                    snap = self.commit_append(
+                        files,
+                        staged_spec=spec,
+                        new_stats=new_stats,
+                        **commit_kw,
+                    )
+                return snap, out
             except SpecConflictError:
-                self._refresh()  # restage under the new transform
+                self._refresh()
         raise SpecConflictError("spec kept changing across 5 retries")
+
+    def _stage_shuffled(self, df: DataFrame, salts: int | None):
+        """``append_staged`` write step of the shuffled writer."""
+        files = self.write_data_files(df, salts=salts)
+        return files, None, self._collect_stats(files)
 
     def _collect_stats(
         self, files: dict[str, list[str]]
@@ -1874,19 +1905,9 @@ class LakeTable:
         """Append rows (new files only; existing files untouched).
         ``branch`` targets a named branch instead of main (WAP).
         Retries staging if a concurrent split/rebucket changes the spec."""
-        for _ in range(5):
-            spec = self.spec_fingerprint()
-            files = self.write_data_files(df, salts=salts)
-            try:
-                return self.commit_append(
-                    files,
-                    staged_spec=spec,
-                    new_stats=self._collect_stats(files),
-                    branch=branch,
-                )
-            except SpecConflictError:
-                self._refresh()
-        raise SpecConflictError("spec kept changing across 5 retries")
+        return self.append_staged(
+            lambda t: t._stage_shuffled(df, salts), branch=branch
+        )[0]
 
     def bucket_sizes(self, buckets: list[int] | None = None) -> dict[int, int]:
         """Per-bucket physical byte size of the current snapshot — driver-
@@ -2364,19 +2385,9 @@ class LakeTable:
         ``scan(snapshot_id=staged_id)`` and then calls ``publish`` (one
         metadata pointer swap) or ``discard_staged``. Returns the staged
         snapshot id."""
-        for _ in range(5):
-            spec = self.spec_fingerprint()
-            files = self.write_data_files(df, salts=salts)
-            try:
-                return self.commit_append(
-                    files,
-                    staged_spec=spec,
-                    new_stats=self._collect_stats(files),
-                    stage=True,
-                )
-            except SpecConflictError:
-                self._refresh()
-        raise SpecConflictError("spec kept changing across 5 retries")
+        return self.append_staged(
+            lambda t: t._stage_shuffled(df, salts), stage=True
+        )[0]
 
     def publish(self, snapshot_id: int) -> None:
         """Fast-forward ``current`` to a staged snapshot — the audit passed.

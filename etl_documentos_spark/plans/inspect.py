@@ -1,9 +1,9 @@
 """Physical-plan inspection helpers.
 
 The scale contract isn't just "right answer" — it's "right plan": filters
-reaching the parquet scan, projections pruned, small dims broadcast, codegen
-spanning the hot expressions. These helpers make those properties assertable
-in tests and greppable during development (`explain("formatted")` as data).
+reaching the parquet scan, projections pruned, small dims broadcast. These
+helpers make those properties assertable in tests and greppable during
+development (`explain("formatted")` as data).
 """
 
 from __future__ import annotations
@@ -43,12 +43,3 @@ def read_schema_columns(df: DataFrame) -> list[str]:
 def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df)
 
-
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    """Number of WholeStageCodegen regions (wider spans = fewer = better)."""
-    plan = physical_plan(df)
-    ids = set()
-    for line in plan.splitlines():
-        if "WholeStageCodegen (" in line:
-            ids.add(line.split("WholeStageCodegen (", 1)[1].split(")", 1)[0])
-    return len(ids)

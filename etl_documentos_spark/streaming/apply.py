@@ -1,36 +1,43 @@
 """CdcPipeline — the exactly-once apply of change epochs.
 
-Per epoch (micro-batch):
+Every route runs one core, ``CdcPipeline._apply``, over a set of epochs:
 
-1. commit-log guard: skip if this epoch already committed (restart replay);
-2. fingerprint + per-source-partition offsets (one agg pass);
-3. additive schema evolution if the batch carries new columns;
-4. LWW dedup -> version-checked key-partitioned MERGE into the lake table;
-5. append per-source-partition lineage rows and one epoch metrics row;
-6. write the commit record (atomic rename) — the epoch is now durable.
+1. commit-log guard: skip the epochs already committed (restart replay);
+2. additive schema evolution if the batch carries new columns;
+3. the route's writer stages and commits the epochs' rows and returns one
+   `BatchStats` per epoch (position fingerprint, per-source-partition
+   offsets, lineage counters, max event time);
+4. watermark advance and threshold compaction, once per call;
+5. per epoch, ``_record``: lineage rows, one metrics row, then the commit
+   record (atomic rename) — the epoch is now durable.
 
-Entry points and their writers:
+An epoch without rows takes the same steps: it commits the empty
+fingerprint ``0:0:0:0`` next to an empty lineage file and a zero-event
+metrics row.
+
+Routes and their writers:
 
 - ``apply_epochs_bulk_files``: MOR epochs as local parquet files; writer
   tasks read them with pyarrow (``write_change_files_direct``), so no row
   crosses the JVM→Python Arrow socket. ``stream.replay_epochs`` (one epoch
   per call) and ``stream.replay_bulk`` (all at once) use it for every
   local MOR epoch without quarantine.
-- ``apply_epoch``: one epoch as a DataFrame (``write_data_files_direct``
-  for MOR, ``merge_into`` for COW) — the only route for inputs that are
+- ``apply_epoch``: one epoch as a DataFrame — the route for inputs that are
   not local files (foreachBatch, synthetic sources, bootstrap, ``://``
-  paths), for COW (the merge rewrites touched buckets) and for quarantine
-  (the validity split is a DataFrame filter). Only this route checks
-  source partitions against ``n_source_partitions``
-  (``stats_from_observation``): the file route does not enumerate them.
-- ``apply_epochs_bulk``: many epochs as one DataFrame (``replay_bulk``'s
-  remote-path fallback).
+  paths), for COW and for quarantine (the validity split is a DataFrame
+  filter). MOR uses the DataFrame writer
+  (``write_data_files_direct(stats=True)``: the stats come out of the same
+  ``mapInArrow`` pass); COW aggregates ``batch_stats`` and then
+  ``merge_into`` rewrites the touched buckets.
+- ``apply_epochs_bulk``: many MOR epochs as one DataFrame through the
+  DataFrame writer (``replay_bulk``'s fallback for ``://`` paths).
 
-The MOR appends share one stage/commit/restage-on-spec-conflict loop
-(``_stage_and_append``); all routes share one log roll-up (``_roll_log``).
+Both MOR writers emit the same per-(epoch, source partition) stats rows,
+folded by ``epoch_stats``, and commit through the table's one stage →
+commit → restage-on-spec-conflict loop (`LakeTable.append_staged`).
 
-Crash-safety ordering: the table snapshot commit (step 4) lands before the
-commit record (step 6). A crash between them leaves a committed snapshot and
+Crash-safety ordering: the table snapshot commit (step 3) lands before the
+commit record (step 5). A crash between them leaves a committed snapshot and
 no commit record; on replay the epoch re-applies, and the version-checked
 merge makes that re-application a no-op (idempotence test asserts table-hash
 equality). Reference analogue of the lifecycle: insert ``processando`` ->
@@ -46,20 +53,23 @@ import threading
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_documentos_spark.lake.table import LakeTable, SpecConflictError
+from etl_documentos_spark.lake.table import LakeTable
 from etl_documentos_spark.operators.evolve import evolve_if_needed
-from etl_documentos_spark.operators.merge import compact, merge_into, merge_mor
+from etl_documentos_spark.operators.merge import (
+    compact,
+    merge_into,
+    physical_exprs,
+)
 from etl_documentos_spark.streaming.commitlog import (
+    BatchStats,
     CommitLog,
     batch_stats,
     combine_chunks,
-    observe_exprs,
     position_hash,
-    stats_from_observation,
 )
 from etl_documentos_spark.streaming.lineage import (
     append_lineage_rows,
@@ -99,9 +109,52 @@ def merge_hll_counts(sketch_rows) -> dict[tuple[int, int], int]:
     return out
 
 
+def epoch_stats(stat_rows, epochs: list[int]) -> dict[int, BatchStats]:
+    """Fold the direct writers' stats rows into one `BatchStats` per epoch.
+
+    ``stat_rows``: the writer's "s" rows (one partial per task and
+    (epoch, source partition): max for offsets, sum for counters) and "l"
+    rows (HyperLogLog registers, merged by `merge_hll_counts`); pyspark Rows
+    or dicts — both index by name. An epoch of ``epochs`` without rows gets
+    the empty stats (fingerprint ``0:0:0:0``)."""
+    convs = merge_hll_counts(r for r in stat_rows if r["kind"] == "l")
+    per_epoch: dict[int, list] = {e: [] for e in epochs}
+    for r in stat_rows:
+        if r["kind"] == "s":
+            per_epoch[int(r["epoch"])].append(r)
+    out = {}
+    for e, ers in per_epoch.items():
+        n = sum(int(r["n"]) for r in ers)
+        offsets: dict[int, int] = {}
+        per_sp: dict[int, list[int]] = {}
+        for r in ers:
+            sp = int(r["sp"])
+            offsets[sp] = max(offsets.get(sp, -1), int(r["max_lsn"]))
+            agg = per_sp.setdefault(sp, [0, 0])
+            agg[0] += int(r["n"])
+            agg[1] += int(r["ndel"])
+        ts = [int(r["max_ts"]) for r in ers if r["max_ts"] is not None]
+        out[e] = BatchStats(
+            combine_chunks(
+                [(int(r["h0"]), int(r["h1"]), int(r["h2"])) for r in ers]
+            ) + f":{n}",
+            offsets,
+            n,
+            [
+                (sp, n_sp, n_sp - ndel, ndel, convs.get((e, sp), 0))
+                for sp, (n_sp, ndel) in sorted(per_sp.items())
+            ],
+            max_ts=max(ts, default=None),
+        )
+    return out
+
+
 #: table property holding the snapshot-bootstrap log position (see
 #: ``CdcPipeline.bootstrap``)
 BOOTSTRAP_WM_PROP = "bootstrap.watermark-lsn"
+
+#: source partitions a bootstrap snapshot's rows spread over (by conv_id)
+BOOTSTRAP_PARTITIONS = 8
 
 
 def _union_footer_schema(file_epochs: list[tuple[str, int]]) -> T.StructType:
@@ -144,11 +197,6 @@ class CdcPipeline:
       than ``compact_at_files`` files. The high-throughput ingest shape.
     - ``"cow"``: copy-on-write — every epoch rewrites the touched buckets
       with the reduction applied. Read-optimal, write-amplified.
-
-    ``n_source_partitions``: when set (the partition count of the binlog /
-    Kafka source — a known source property), epoch stats are collected as
-    observed metrics on the write job itself: ONE pass per epoch, no persist.
-    When None, a separate stats aggregation runs first (two passes).
     """
 
     def __init__(
@@ -158,7 +206,6 @@ class CdcPipeline:
         workdir: str,
         mode: str = "mor",
         compact_at_files: int = 64,
-        n_source_partitions: int | None = 8,
         lateness_seconds: float | None = None,
         commitlog_keep_last: int = 4096,
         quarantine: bool = False,
@@ -169,7 +216,6 @@ class CdcPipeline:
         self.workdir = workdir
         self.mode = mode
         self.compact_at_files = compact_at_files
-        self.n_source_partitions = n_source_partitions
         #: bounded lateness: events older than (max event-time seen) -
         #: lateness are final. Compaction then expires delete tombstones
         #: past the watermark (they only exist to fence late updates), so
@@ -197,9 +243,6 @@ class CdcPipeline:
         #: concurrent epoch applies overlap executor work and only the cheap
         #: pointer swap is serial (two-phase commit shape)
         self._commit_lock = threading.Lock()
-        #: cached observe expressions (rebuilt only when the batch column
-        #: set changes — expression construction is driver-side py4j cost)
-        self._obs_exprs: tuple[tuple[str, ...], list] | None = None
         #: snapshot-bootstrap watermark cache: "unloaded" until first read
         #: (one table-metadata lookup per pipeline lifetime), then the int
         #: log position or None. See ``bootstrap``.
@@ -245,15 +288,6 @@ class CdcPipeline:
                 # (COW-mode pipeline): resync from a full read — correct
                 # always, incremental only when the source allows it
                 v.full_refresh(self.spark, table)
-
-    def _observe_exprs_for(self, columns: list[str]) -> list:
-        key = tuple(columns)
-        if self._obs_exprs is None or self._obs_exprs[0] != key:
-            self._obs_exprs = (
-                key,
-                observe_exprs(columns, self.n_source_partitions),
-            )
-        return self._obs_exprs[1]
 
     @property
     def table(self) -> LakeTable:
@@ -304,14 +338,13 @@ class CdcPipeline:
         first insert, then per-event updates).
         """
         wm = int(watermark_lsn)
-        n_parts = self.n_source_partitions or 8
         payload = [c for c in snapshot.columns if c not in ("conv_id",)]
         changes = snapshot.select(
             F.lit("insert").alias("op"),
             F.col("conv_id"),
             *[F.col(c) for c in payload],
             F.lit(wm).cast("long").alias("lsn"),
-            F.pmod(F.xxhash64("conv_id"), F.lit(n_parts))
+            F.pmod(F.xxhash64("conv_id"), F.lit(BOOTSTRAP_PARTITIONS))
             .cast("int")
             .alias("source_partition"),
         )
@@ -335,171 +368,136 @@ class CdcPipeline:
         the deltas."""
         return max(2, self.spark.sparkContext.defaultParallelism)
 
+    def _fence(self, changes: DataFrame) -> DataFrame:
+        """Snapshot-bootstrap handoff: events at or before the snapshot's
+        log position are already in the table state and must not replay (a
+        pre-snapshot insert would resurrect a pre-snapshot delete). Plain
+        attribute check when no bootstrap happened; when set, a pushed-down
+        range predicate that prunes pre-watermark files."""
+        wm = self.bootstrap_watermark
+        if wm is None:
+            return changes
+        return changes.filter(F.col("lsn") > F.lit(wm))
+
+    def _apply(
+        self, epoch_ids: list[int], t0: float, frame, write
+    ) -> list[EpochResult]:
+        """The exactly-once apply every route runs (module docstring steps).
+
+        ``frame(todo)``: the DataFrame whose columns drive schema evolution
+        for the epochs still to apply, or None when no row will be written.
+        ``write(table, todo)``: stage and commit those epochs' rows through
+        ``table`` (the handle evolution used); returns ``{epoch:
+        BatchStats}`` covering every epoch of ``todo``."""
+        todo = [e for e in epoch_ids if not self.commitlog.is_committed(e)]
+        results = [
+            EpochResult(e, True, 0, 0.0, []) for e in epoch_ids if e not in todo
+        ]
+        if not todo:
+            return results
+        df = frame(todo)
+        with self._commit_lock:
+            table = self.table
+            added = [] if df is None else evolve_if_needed(df, table)
+        stats = write(table, todo)
+        for st in stats.values():
+            self._advance_watermark(st.max_ts)
+        self._maybe_compact(table)
+        duration = time.monotonic() - t0
+        for e in sorted(todo):
+            self._record(e, stats[e], duration / len(todo))
+            results.append(
+                EpochResult(e, False, stats[e].n_events, duration, added)
+            )
+        return results
+
+    def _record(
+        self, epoch_id: int, stats: BatchStats, duration_s: float
+    ) -> None:
+        """The per-epoch exactly-once records, in crash-safe order: lineage
+        rows and the metrics row (each replaced, not duplicated, when a
+        crash re-applies the epoch), then the commit record. The log
+        roll-up runs once per 256 epoch ids: it keeps the commit dir (and
+        restart-time max_offsets scans) bounded at millions of epochs
+        without a directory listing on every apply."""
+        append_lineage_rows(
+            self.spark, self.lineage_path, epoch_id, stats.lineage_rows
+        )
+        append_metrics(
+            self.spark, self.metrics_path, epoch_id,
+            events=stats.n_events, duration_s=duration_s, lag_events=0,
+        )
+        self.commitlog.commit(epoch_id, stats.fingerprint, stats.offsets)
+        if epoch_id % 256 == 0:
+            self.commitlog.compact_log(self.commitlog_keep_last)
+
+    def _write_frame(
+        self,
+        table: LakeTable,
+        batch: DataFrame,
+        epoch: Column,
+        todo: list[int],
+        target_tasks: int | None = None,
+    ) -> dict[int, BatchStats]:
+        """The DataFrame writer: one ``mapInArrow`` pass writes the delta
+        files and aggregates the stats per (``epoch``, source partition)
+        inside the Arrow writer (`LakeTable._write_data_direct` stats mode)
+        from sidecar columns that never reach parquet: ``_h``, the same
+        JVM position hash the file writer computes in numpy, so both routes
+        fingerprint alike, and ``_ch``, xxhash64 of ``conv_id`` for the
+        per-task HyperLogLog of ``conv_ids_touched``. A restage after a
+        spec conflict re-derives the stats from the same batch."""
+
+        def stage(t: LakeTable):
+            aug = batch.select(
+                *physical_exprs(batch, t.schema),
+                position_hash().alias("_h"),
+                F.xxhash64(F.col("conv_id")).alias("_ch"),
+                epoch.cast("int").alias("epoch"),
+                F.col("source_partition")
+                .cast("int")
+                .alias("source_partition"),
+            )
+            return t.write_data_files_direct(
+                aug, target_tasks=target_tasks, stats=True
+            )
+
+        _, rows = table.append_staged(
+            stage, lock=self._commit_lock, commit_empty=False
+        )
+        return epoch_stats(rows, todo)
+
     def apply_epochs_bulk(
-        self, changes: DataFrame, epoch_ids: list[int], persist: bool = True
+        self, changes: DataFrame, epoch_ids: list[int]
     ) -> list[EpochResult]:
         """Backfill mode: apply MANY epochs as one super-batch.
 
         A 10^10-event replay is a catch-up backfill — paying the per-epoch
         serial cost (plan analysis, job scheduling, snapshot commit) once per
         micro-batch would make the driver the bottleneck. Bulk mode applies K
-        epochs with ONE stats aggregation (grouped by epoch x source
-        partition), ONE append job, and K commit records, preserving the
+        epochs with ONE write pass (stats grouped by epoch x source
+        partition ride it) and K commit records, preserving the
         exactly-once contract per epoch: already-committed epochs are
         filtered out up front, fingerprints/offsets/lineage stay per-epoch.
 
         ``changes`` must carry an ``epoch`` column; MOR mode only (the
         reduction happens at read/compaction, so epochs need no ordering
         barrier between them — LWW is order-insensitive by construction).
-
-        ``persist=False`` skips caching the batch between the stats pass and
-        the append pass — correct whenever ``changes`` re-reads identical
-        bytes (immutable files, a pinned snapshot); re-scanning page-cached
-        parquet is cheaper than materializing deserialized rows. Keep the
-        default for non-deterministic or remote sources, where the
-        fingerprint and the written rows must come from one materialization.
         """
         assert self.mode == "mor", "bulk backfill requires merge-on-read"
         t0 = time.monotonic()
-        # same snapshot-bootstrap fence as apply_epoch (see there)
-        wm = self.bootstrap_watermark
-        if wm is not None:
-            changes = changes.filter(F.col("lsn") > F.lit(wm))
-        todo = [e for e in epoch_ids if not self.commitlog.is_committed(e)]
-        skipped = [
-            EpochResult(e, True, 0, 0.0, []) for e in epoch_ids if e not in todo
-        ]
-        if not todo:
-            return skipped
-        batch = changes.filter(F.col("epoch").isin(todo))
-        if persist:
-            batch = batch.persist()
-        try:
-            table = self.table
-            added = evolve_if_needed(batch, table)
-
-            from etl_documentos_spark.operators.merge import physical_exprs
-
-            # SINGLE heavy pass: the Arrow writer aggregates fingerprint
-            # chunks + lineage counters per (epoch, source_partition) inline
-            # (lake.table._write_data_direct stats mode). The row hash is
-            # the same JVM-side position hash the per-epoch path sums, so
-            # cross-path fingerprints agree.
-            # The distinct-conversation counter rides the same pass as a
-            # per-task HyperLogLog over xxhash64(conv_id) (_ch sidecar),
-            # merged register-wise here — the old concurrent
-            # approx_count_distinct job re-decoded 3 columns of the whole
-            # batch; at N executors that second scan is pure memory-bandwidth
-            # overhead, so folding it into the write pass buys scaling.
-            aug = batch.select(
-                *physical_exprs(batch, table.schema),
-                position_hash().alias("_h"),
-                F.xxhash64(F.col("conv_id")).alias("_ch"),
-                F.col("epoch").cast("int").alias("epoch"),
-                F.col("source_partition").cast("int").alias(
-                    "source_partition"
-                ),
-            )
-
-            stat_rows = self._stage_and_append(
-                table, lambda t: t.write_data_files_direct(aug, stats=True)
-            )
-            return skipped + self._finalize_bulk(stat_rows, todo, t0, added)
-        finally:
-            if persist:
-                batch.unpersist()
-
-    def _stage_and_append(self, table: LakeTable, stage):
-        """Write data files with ``stage(table) -> (files, stat_rows,
-        man_stats)`` outside the lock, then commit them as one append
-        under it; returns the committed staging's ``stat_rows``.
-
-        A concurrent split/rebucket that re-keyed the buckets between the
-        two steps fails the commit with ``SpecConflictError``: restage
-        under the fresh transform (the stats re-derive deterministically
-        from the same batch), at most 5 times."""
-        for _ in range(5):
-            spec = table.spec_fingerprint()
-            files, stat_rows, man_stats = stage(table)
-            if not files:
-                return stat_rows
-            try:
-                # manifest stats came inline from the write tasks when the
-                # table opted in; nothing extra on the default path
-                with self._commit_lock:
-                    self.table.commit_append(
-                        files, staged_spec=spec, new_stats=man_stats
-                    )
-                return stat_rows
-            except SpecConflictError:
-                table = self.table
-        raise SpecConflictError("spec kept changing across 5 retries")
-
-    def _roll_log(self, epochs: list[int]) -> None:
-        """Amortized commit-log roll-up, once per 256 epoch ids: keeps the
-        commit dir (and restart-time max_offsets scans) bounded at millions
-        of epochs without a directory listing on every apply."""
-        if any(e % 256 == 0 for e in epochs):
-            self.commitlog.compact_log(self.commitlog_keep_last)
-
-    def _finalize_bulk(
-        self, stat_rows: list, todo: list[int], t0: float, added: list[str]
-    ) -> list[EpochResult]:
-        """Shared bulk-apply bookkeeping: watermark advance, threshold
-        compaction, HLL merge, and the per-epoch exactly-once records
-        (lineage, metrics, fingerprinted commit) from the writer's stats
-        rows. ``stat_rows``: the writer's "s"/"l" rows (pyspark Rows or
-        dicts — both index by name)."""
-        sketch_rows = [r for r in stat_rows if r["kind"] == "l"]
-        stat_rows = [r for r in stat_rows if r["kind"] == "s"]
-        for r in stat_rows:
-            self._advance_watermark(r["max_ts"])
-        self._maybe_compact(self.table)
-
-        convs = merge_hll_counts(sketch_rows)
-        per_epoch: dict[int, list] = {}
-        for r in stat_rows:
-            per_epoch.setdefault(int(r["epoch"]), []).append(r)
-        results = []
-        duration = time.monotonic() - t0
-        for e in sorted(todo):
-            ers = per_epoch.get(e, [])
-            n = sum(int(r["n"]) for r in ers)
-            fp = combine_chunks(
-                [(int(r["h0"]), int(r["h1"]), int(r["h2"])) for r in ers]
-            ) + f":{n}"
-            # every writer TASK emits a partial per (epoch, sp) it saw —
-            # combine partials: max for offsets, sum for counters
-            offsets: dict[int, int] = {}
-            per_sp: dict[int, list[int]] = {}
-            for r in ers:
-                sp = int(r["sp"])
-                offsets[sp] = max(
-                    offsets.get(sp, -1), int(r["max_lsn"])
-                )
-                agg = per_sp.setdefault(sp, [0, 0])
-                agg[0] += int(r["n"])
-                agg[1] += int(r["ndel"])
-            lineage = [
-                (
-                    sp,
-                    n_sp,
-                    n_sp - ndel_sp,
-                    ndel_sp,
-                    convs.get((e, sp), 0),
-                )
-                for sp, (n_sp, ndel_sp) in sorted(per_sp.items())
-            ]
-            append_lineage_rows(self.spark, self.lineage_path, e, lineage)
-            append_metrics(
-                self.spark, self.metrics_path, e,
-                events=n, duration_s=duration / max(len(todo), 1),
-                lag_events=0,
-            )
-            self.commitlog.commit(e, fp, offsets)
-            results.append(EpochResult(e, False, n, duration, added))
-        self._roll_log(todo)
-        return results
+        changes = self._fence(changes)
+        return self._apply(
+            epoch_ids,
+            t0,
+            lambda todo: changes,
+            lambda table, todo: self._write_frame(
+                table,
+                changes.filter(F.col("epoch").isin(todo)),
+                F.col("epoch"),
+                todo,
+            ),
+        )
 
     def apply_epochs_bulk_files(
         self,
@@ -525,46 +523,44 @@ class CdcPipeline:
         many files. ``schema``: the declared change-stream schema (drives
         schema evolution); derived from
         the files' footers (union over one footer per epoch) when omitted.
-        MOR mode only, like all bulk paths.
+        ``epochs`` widens the commit set beyond the files: an epoch with
+        ZERO files (an external writer's empty epoch directory) must still
+        commit its empty fingerprint, otherwise the commit-log gap stalls
+        the contiguous HWM roll-up forever and the epoch re-processes on
+        every future replay. MOR mode only, like all bulk paths.
         """
         assert self.mode == "mor", "bulk backfill requires merge-on-read"
         t0 = time.monotonic()
         wm = self.bootstrap_watermark
-        # ``epochs`` widens the commit set beyond the files: an epoch
-        # with ZERO files (an external writer's empty epoch directory)
-        # must still commit its empty fingerprint, exactly as the
-        # DataFrame path does — otherwise the commit-log gap stalls the
-        # contiguous HWM roll-up forever and the epoch re-processes on
-        # every future replay
         epoch_ids = sorted({e for _, e in file_epochs} | set(epochs or []))
-        todo = [e for e in epoch_ids if not self.commitlog.is_committed(e)]
-        todo_set = set(todo)
-        todo_pairs = [(f, e) for f, e in file_epochs if e in todo_set]
-        skipped = [
-            EpochResult(e, True, 0, 0.0, [])
-            for e in epoch_ids
-            if e not in todo_set
-        ]
-        if not todo_pairs:
-            if not todo:
-                return skipped
-            # only empty epochs to commit: no files to write, no schema
-            # evolution to consider — straight to the per-epoch records
-            return skipped + self._finalize_bulk([], todo, t0, [])
-        if schema is None:
-            schema = _union_footer_schema(todo_pairs)
-        with self._commit_lock:
-            table = self.table
-            added = evolve_if_needed(
-                self.spark.createDataFrame([], schema), table
+
+        def pairs(todo: list[int]) -> list[tuple[str, int]]:
+            keep = set(todo)
+            return [(f, e) for f, e in file_epochs if e in keep]
+
+        def frame(todo):
+            todo_pairs = pairs(todo)
+            if not todo_pairs:
+                return None  # only empty epochs: nothing to evolve
+            return self.spark.createDataFrame(
+                [], schema or _union_footer_schema(todo_pairs)
             )
-        stat_rows = self._stage_and_append(
-            table,
-            lambda t: t.write_change_files_direct(
-                self.spark, todo_pairs, fence_lsn=wm, target_tasks=target_tasks,
-            ),
-        )
-        return skipped + self._finalize_bulk(stat_rows, todo, t0, added)
+
+        def write(table, todo):
+            todo_pairs = pairs(todo)
+            rows = []
+            if todo_pairs:
+                _, rows = table.append_staged(
+                    lambda t: t.write_change_files_direct(
+                        self.spark, todo_pairs, fence_lsn=wm,
+                        target_tasks=target_tasks,
+                    ),
+                    lock=self._commit_lock,
+                    commit_empty=False,
+                )
+            return epoch_stats(rows, todo)
+
+        return self._apply(epoch_ids, t0, frame, write)
 
     def _advance_watermark(self, max_ts_us) -> None:
         """Advance the event-time watermark; ``max_ts_us`` is epoch
@@ -665,13 +661,39 @@ class CdcPipeline:
             "basePath", self.dlq_path
         ).parquet(*dirs)
 
+    def _merge_cow(self, table: LakeTable, changes: DataFrame) -> BatchStats:
+        """The COW writer: one stats aggregation, then the merge that
+        rewrites the touched buckets (two passes over the cached batch).
+        A batch much larger than the bucket count almost surely touches
+        every bucket — skip the pruning job (safe overestimate). COW merges
+        hold the lock for their whole read-modify-write (no concurrent
+        COW)."""
+        changes = changes.persist()
+        try:
+            stats = batch_stats(changes)
+            if stats.n_events:
+                with self._commit_lock:
+                    merge_into(
+                        self.spark,
+                        table,
+                        changes,
+                        assume_all_buckets=stats.n_events
+                        > 1000 * table.num_buckets,
+                    )
+            return stats
+        finally:
+            changes.unpersist()
+
     def apply_epoch(
         self,
         changes: DataFrame,
         epoch_id: int,
         write_tasks: int | None = None,
     ) -> EpochResult:
-        """Exactly-once apply of one micro-batch.
+        """Exactly-once apply of one micro-batch: bootstrap fence, then (for
+        an epoch not yet committed) the optional quarantine split and the
+        MOR DataFrame writer or the COW merge. The writer's ``epoch`` is
+        ``epoch_id``, whatever ``epoch`` column the batch carries.
 
         ``write_tasks``: writer-task count for this epoch's append job.
         Concurrent replayers pass a byte-proportional share of the cluster
@@ -679,110 +701,21 @@ class CdcPipeline:
         instead of piling 2x-parallelism jobs onto the scheduler; serial
         callers leave it None and get full parallelism."""
         t0 = time.monotonic()
-        if self.commitlog.is_committed(epoch_id):
-            return EpochResult(epoch_id, True, 0, 0.0, [])
-        write_tasks = write_tasks or self._epoch_write_tasks
-
-        # snapshot-bootstrap handoff: events at or before the snapshot's
-        # log position are already in the table state and must not replay
-        # (a pre-snapshot insert would resurrect a pre-snapshot delete).
-        # Plain attribute check when no bootstrap happened; when set, a
-        # pushed-down range predicate that prunes pre-watermark files.
-        wm = self.bootstrap_watermark
-        if wm is not None:
-            changes = changes.filter(F.col("lsn") > F.lit(wm))
-
+        changes = self._fence(changes)
         n_bad = 0
-        if self.quarantine:
-            changes, n_bad = self._quarantine_split(changes, epoch_id)
 
-        with self._commit_lock:
-            table = self.table
-            added = evolve_if_needed(changes, table)
-
-        if self.mode == "mor" and self.n_source_partitions:
-            # single-pass path: the append write job carries the stats as
-            # observed metrics — one scan of the batch per epoch, no persist.
-            # The write job runs OUTSIDE the commit lock (concurrent epochs
-            # overlap on the executors); only the metadata commit serializes.
-            from pyspark.sql import Observation
-
-            from etl_documentos_spark.operators.merge import changes_to_physical
-
-            obs = Observation()
-            observed = changes.observe(
-                obs, *self._observe_exprs_for(changes.columns)
-            )
-            # only the first staging carries the observed stats; a restage
-            # after a spec conflict rewrites the files from the plain batch
-            source = iter([observed])
-
-            def stage(t: LakeTable):
-                files, man_stats = t.write_data_files_direct(
-                    changes_to_physical(next(source, changes), t.schema),
-                    target_tasks=write_tasks,
-                )
-                return files, None, man_stats
-
-            self._stage_and_append(table, stage)
-            stats = stats_from_observation(obs.get, self.n_source_partitions)
-            self._advance_watermark(stats.max_ts)
-            if stats.n_events > 0:
-                self._maybe_compact(self.table)
-        else:
-            # two-pass path: explicit stats aggregation, then the merge
-            changes = changes.persist()
-            try:
-                stats = batch_stats(changes)
-                self._advance_watermark(stats.max_ts)
-                if stats.n_events > 0:
-                    if self.mode == "mor":
-                        with self._commit_lock:
-                            merge_mor(
-                                self.spark, self.table, changes,
-                                target_tasks=write_tasks,
-                            )
-                        self._maybe_compact(self.table)
-                    else:
-                        # a batch much larger than the bucket count almost
-                        # surely touches every bucket — skip the pruning job
-                        # (safe overestimate). COW merges hold the lock for
-                        # their whole read-modify-write (no concurrent COW).
-                        with self._commit_lock:
-                            merge_into(
-                                self.spark,
-                                self.table,
-                                changes,
-                                assume_all_buckets=stats.n_events
-                                > 1000 * table.num_buckets,
-                            )
-            finally:
-                changes.unpersist()
-
-        if stats.n_events == 0:
-            self.commitlog.commit(epoch_id, stats.fingerprint, stats.offsets)
-            return EpochResult(
-                epoch_id, False, 0, time.monotonic() - t0, added, n_bad
+        def write(table, todo):
+            nonlocal n_bad
+            batch = changes
+            if self.quarantine:
+                batch, n_bad = self._quarantine_split(changes, epoch_id)
+            if self.mode == "cow":
+                return {epoch_id: self._merge_cow(table, batch)}
+            return self._write_frame(
+                table, batch, F.lit(epoch_id), todo,
+                write_tasks or self._epoch_write_tasks,
             )
 
-        # lineage rows come from the collected stats (no second agg job)
-        append_lineage_rows(
-            self.spark, self.lineage_path, epoch_id, stats.lineage_rows
-        )
-
-        duration = time.monotonic() - t0
-        append_metrics(
-            self.spark,
-            self.metrics_path,
-            epoch_id,
-            events=stats.n_events,
-            duration_s=duration,
-            lag_events=0,
-        )
-
-        self.commitlog.commit(epoch_id, stats.fingerprint, stats.offsets)
-        self._roll_log([epoch_id])
-        return EpochResult(
-            epoch_id, False, stats.n_events, time.monotonic() - t0, added,
-            n_bad,
-        )
+        [res] = self._apply([epoch_id], t0, lambda todo: changes, write)
+        res.quarantined = n_bad
+        return res

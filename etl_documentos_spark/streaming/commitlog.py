@@ -47,9 +47,11 @@ class CommitRecord:
 
 @dataclass
 class BatchStats:
-    """Everything the exactly-once + lineage machinery needs, from ONE
-    aggregation pass over the epoch (grouped by source partition so the
-    collect is #source-partitions rows, never data rows)."""
+    """Everything the exactly-once + lineage machinery needs for one epoch:
+    folded from the MOR writers' stats rows (`streaming.apply.epoch_stats`)
+    or aggregated by `batch_stats` on the COW route — either way grouped by
+    source partition, so the driver collects #source-partitions rows, never
+    data rows."""
 
     fingerprint: str
     offsets: dict[int, int]
@@ -149,71 +151,6 @@ def batch_stats(changes: DataFrame) -> BatchStats:
         f"{total_h}:{n}", offsets, n, lineage,
         max_ts=max(ts_vals) if ts_vals else None,
     )
-
-
-def observe_exprs(columns: list[str], n_source_partitions: int) -> list:
-    """Aggregate expressions for a zero-extra-pass stats collection.
-
-    Attached via ``Dataset.observe`` to the epoch's single write job, these
-    compute the same content as `batch_stats` — global fingerprint + count,
-    and per-source-partition offsets/lineage counters as conditional
-    aggregates (the partition count of a binlog/Kafka source is a known,
-    small source property, so enumerating it statically is safe; a guard
-    metric ``max_sp`` catches violations).
-    """
-    sp = F.col("source_partition")
-    ts_expr = (
-        F.max(F.unix_micros(F.col("ts")))
-        if "ts" in columns
-        else F.max(F.lit(None).cast("long"))
-    )
-    exprs = [
-        F.count(F.lit(1)).alias("n"),
-        *hash_chunk_exprs(),
-        F.max(sp).alias("max_sp"),
-        ts_expr.alias("max_ts"),
-    ]
-    for p in range(n_source_partitions):
-        is_p = sp == p
-        exprs += [
-            F.max(F.when(is_p, F.col("lsn"))).alias(f"off_{p}"),
-            F.sum(F.when(is_p, 1).otherwise(0)).alias(f"n_{p}"),
-            F.sum(F.when(is_p & (F.col("op") != "delete"), 1).otherwise(0)).alias(
-                f"up_{p}"
-            ),
-            F.sum(F.when(is_p & (F.col("op") == "delete"), 1).otherwise(0)).alias(
-                f"del_{p}"
-            ),
-            F.approx_count_distinct(F.when(is_p, F.col("conv_id"))).alias(
-                f"convs_{p}"
-            ),
-        ]
-    return exprs
-
-
-def stats_from_observation(m: dict, n_source_partitions: int) -> BatchStats:
-    """Decode `observe_exprs` results into a BatchStats."""
-    n = int(m["n"] or 0)
-    if n == 0:
-        return BatchStats("0:0:0:0", {}, 0, [])
-    max_ts = m.get("max_ts")
-    if max_ts is not None:
-        max_ts = int(max_ts)
-    if int(m["max_sp"]) >= n_source_partitions:
-        raise ValueError(
-            f"source_partition {m['max_sp']} >= declared n_source_partitions "
-            f"{n_source_partitions}"
-        )
-    offsets, lineage = {}, []
-    for p in range(n_source_partitions):
-        if m[f"n_{p}"] and int(m[f"n_{p}"]) > 0:
-            offsets[p] = int(m[f"off_{p}"])
-            lineage.append(
-                (p, int(m[f"n_{p}"]), int(m[f"up_{p}"]), int(m[f"del_{p}"]),
-                 int(m[f"convs_{p}"]))
-            )
-    fp = combine_chunks([(int(m["h0"]), int(m["h1"]), int(m["h2"]))])
-    return BatchStats(f"{fp}:{n}", offsets, n, lineage, max_ts=max_ts)
 
 
 class CommitLog:

@@ -2,12 +2,21 @@
 
 Batch replay walks ``{path}/epoch={k}`` directories in log order through
 the exactly-once `CdcPipeline`: ``replay_epochs`` one epoch per apply (the
-tail), ``replay_bulk`` all in one (the backfill). On a local path both hand
-a MOR pipeline's epoch files to ``apply_epochs_bulk_files``, whose writer
-tasks read them with pyarrow — no row crosses the JVM→Python Arrow socket.
-COW and quarantine (DLQ) pipelines and ``://`` paths read the epoch as a
-DataFrame into ``apply_epoch``: the COW merge and the DLQ validity split
-are DataFrame operations, and a remote path has no local listing.
+tail), ``replay_bulk`` all in one (the backfill). Every route ends in the
+pipeline's one apply core; they differ in the writer:
+
+- local path, MOR pipeline (``replay_bulk``; ``replay_epochs`` without
+  quarantine): ``apply_epochs_bulk_files`` and the file writer
+  (``write_change_files_direct``), whose tasks read the epoch files with
+  pyarrow — no row crosses the JVM→Python Arrow socket;
+- ``replay_epochs`` on COW or quarantine (DLQ) pipelines, or on a ``://``
+  path: ``apply_epoch`` on the epoch read as a DataFrame — the MOR
+  DataFrame writer (``write_data_files_direct``) or the COW merge; the COW
+  merge and the DLQ validity split are DataFrame operations, and a remote
+  path has no local listing;
+- ``replay_bulk`` on a ``://`` path: ``apply_epochs_bulk``, the DataFrame
+  writer over all epochs at once;
+- ``replay_source`` and the streaming tail: ``apply_epoch``.
 
 The streaming driver (``start_stream`` / ``run_stream_until_drained``) is the
 production shape: a Structured Streaming file source tails the change
@@ -241,7 +250,7 @@ def replay_bulk(
         changes = reader.option("basePath", events_path).parquet(
             *[os.path.join(events_path, f"epoch={e}") for e in epochs]
         )
-        return pipeline.apply_epochs_bulk(changes, epochs, persist=False)
+        return pipeline.apply_epochs_bulk(changes, epochs)
     pairs = [(f, e) for f, e, _ in epoch_files(events_path, epochs)]
     # pass the epoch list through: an epoch whose directory holds no
     # parquet files must still COMMIT (empty fingerprint) — dropping it

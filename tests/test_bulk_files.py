@@ -63,8 +63,25 @@ def _pipeline(spark, root, num_buckets=8) -> CdcPipeline:
     return CdcPipeline(spark, troot, str(root / "work"), mode="mor")
 
 
-def _fingerprints(pipe: CdcPipeline, epochs) -> dict:
-    return {e: pipe.commitlog.get(e).input_fingerprint for e in epochs}
+def _records(pipe: CdcPipeline, epochs) -> dict:
+    """Per epoch: (fingerprint, kind, source-partition offsets)."""
+    out = {}
+    for e in epochs:
+        rec = pipe.commitlog.get(e)
+        out[e] = (
+            rec.input_fingerprint,
+            rec.fingerprint_kind,
+            rec.source_partition_offsets,
+        )
+    return out
+
+
+def _lineage(spark, pipe: CdcPipeline) -> list:
+    from etl_documentos_spark.streaming.lineage import read_lineage
+
+    return sorted(
+        tuple(r) for r in read_lineage(spark, pipe.lineage_path).collect()
+    )
 
 
 def _assert_oracle_state(spark, pipe: CdcPipeline, stream_df) -> None:
@@ -85,10 +102,12 @@ def _assert_oracle_state(spark, pipe: CdcPipeline, stream_df) -> None:
 def test_files_path_bit_equals_dataframe_path(
     spark, stream_df, events_path, tmp_path
 ):
-    """Same input through apply_epochs_bulk (JVM data plane) and
-    apply_epochs_bulk_files (pyarrow data plane): identical per-epoch
-    fingerprints, identical physical parquet schemas, identical final
-    state — the cross-path exactly-once guarantee."""
+    """Same input through apply_epochs_bulk (JVM data plane),
+    apply_epochs_bulk_files (pyarrow data plane) and one apply_epoch per
+    epoch (the DataFrame writer, epoch by epoch): identical commit records
+    (fingerprints and offsets), identical lineage rows including the
+    HyperLogLog conv_ids_touched, identical physical parquet schemas and
+    identical final state — the cross-path exactly-once guarantee."""
     epochs = list_epochs(events_path)
 
     pa_pipe = _pipeline(spark, tmp_path / "A")
@@ -97,17 +116,42 @@ def test_files_path_bit_equals_dataframe_path(
         .option("basePath", events_path)
         .parquet(*[os.path.join(events_path, f"epoch={e}") for e in epochs])
     )
-    res_a = pa_pipe.apply_epochs_bulk(changes, epochs, persist=False)
+    res_a = pa_pipe.apply_epochs_bulk(changes, epochs)
 
     pb_pipe = _pipeline(spark, tmp_path / "B")
     res_b = pb_pipe.apply_epochs_bulk_files(_pairs(events_path), schema=CHANGE_EVENTS)
 
-    assert sum(r.events for r in res_a) == sum(r.events for r in res_b)
-    assert _fingerprints(pa_pipe, epochs) == _fingerprints(pb_pipe, epochs)
+    pc_pipe = _pipeline(spark, tmp_path / "C")
+    res_c = [
+        pc_pipe.apply_epoch(
+            spark.read.schema(CHANGE_EVENTS).parquet(
+                os.path.join(events_path, f"epoch={e}")
+            ),
+            e,
+        )
+        for e in epochs
+    ]
 
-    a = read_current(spark, pa_pipe.table)
+    assert (
+        sum(r.events for r in res_a)
+        == sum(r.events for r in res_b)
+        == sum(r.events for r in res_c)
+        == stream_df.count()
+    )
+    records = _records(pb_pipe, epochs)
+    assert _records(pa_pipe, epochs) == records
+    assert _records(pc_pipe, epochs) == records
+    lineage = _lineage(spark, pb_pipe)
+    assert len(lineage) == stream_df.select(
+        "epoch", "source_partition"
+    ).distinct().count()
+    assert _lineage(spark, pa_pipe) == lineage
+    assert _lineage(spark, pc_pipe) == lineage
+
     b = read_current(spark, pb_pipe.table)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    for other in (pa_pipe, pc_pipe):
+        a = read_current(spark, other.table)
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
     fa = glob.glob(os.path.join(str(tmp_path / "A"), "transcripts", "data", "w-*", "*.parquet"))[0]
     fb = glob.glob(os.path.join(str(tmp_path / "B"), "transcripts", "data", "w-*", "*.parquet"))[0]
@@ -127,7 +171,7 @@ def test_files_path_cross_path_restart_dedups(
         .option("basePath", events_path)
         .parquet(os.path.join(events_path, f"epoch={epochs[0]}"))
     )
-    pipe.apply_epochs_bulk(changes, [epochs[0]], persist=False)
+    pipe.apply_epochs_bulk(changes, [epochs[0]])
 
     res = pipe.apply_epochs_bulk_files(_pairs(events_path), schema=CHANGE_EVENTS)
     by_epoch = {r.epoch_id: r for r in res}
@@ -136,17 +180,26 @@ def test_files_path_cross_path_restart_dedups(
     _assert_oracle_state(spark, pipe, stream_df)
 
 
+@pytest.mark.parametrize(
+    "route, writer",
+    [
+        ("files", "write_change_files_direct"),
+        ("apply_epoch", "write_data_files_direct"),
+    ],
+    ids=["files", "apply_epoch"],
+)
 def test_files_path_restages_once_on_spec_conflict(
-    spark, stream_df, events_path, tmp_path, monkeypatch
+    spark, stream_df, events_path, tmp_path, monkeypatch, route, writer
 ):
     """A commit that lost a race with a split/rebucket (SpecConflictError)
     restages the files under the fresh spec once, then commits: every
-    epoch lands exactly once and the state equals the oracle."""
+    epoch lands exactly once and the state equals the oracle — on the file
+    route (one call for all epochs) and on apply_epoch (one per epoch)."""
     from etl_documentos_spark.lake.table import SpecConflictError
 
     calls = {"commit": 0, "write": 0}
     real_commit = LakeTable.commit_append
-    real_write = LakeTable.write_change_files_direct
+    real_write = getattr(LakeTable, writer)
 
     def commit_conflicting_once(self, *a, **kw):
         calls["commit"] += 1
@@ -159,10 +212,24 @@ def test_files_path_restages_once_on_spec_conflict(
         return real_write(self, *a, **kw)
 
     monkeypatch.setattr(LakeTable, "commit_append", commit_conflicting_once)
-    monkeypatch.setattr(LakeTable, "write_change_files_direct", counting_write)
+    monkeypatch.setattr(LakeTable, writer, counting_write)
     pipe = _pipeline(spark, tmp_path)
-    res = pipe.apply_epochs_bulk_files(_pairs(events_path), schema=CHANGE_EVENTS)
-    assert calls == {"commit": 2, "write": 2}
+    epochs = list_epochs(events_path)
+    if route == "files":
+        res = pipe.apply_epochs_bulk_files(
+            _pairs(events_path), schema=CHANGE_EVENTS
+        )
+        stagings = 1
+    else:
+        res = [
+            pipe.apply_epoch(
+                spark.read.parquet(os.path.join(events_path, f"epoch={e}")), e
+            )
+            for e in epochs
+        ]
+        stagings = len(epochs)
+    # one restage on top of one staging per call
+    assert calls == {"commit": stagings + 1, "write": stagings + 1}
     assert sum(r.events for r in res) == stream_df.count()
     assert all(pipe.commitlog.is_committed(e) for e in list_epochs(events_path))
     _assert_oracle_state(spark, pipe, stream_df)
@@ -282,6 +349,24 @@ def test_replay_bulk_commits_empty_epochs(spark, tmp_path):
     # a re-run skips EVERYTHING, including the empty epoch
     again = {r.epoch_id: r for r in replay_bulk(pipe, src)}
     assert all(r.skipped for r in again.values())
+
+    # the same empty epoch through apply_epoch leaves the same records:
+    # commit record, one zero-event metrics row, a lineage file
+    from etl_documentos_spark.streaming.lineage import read_metrics
+
+    pipe_df = CdcPipeline(spark, root, str(tmp_path / "w_df"))
+    res = pipe_df.apply_epoch(spark.createDataFrame([], CHANGE_EVENTS), 9)
+    assert res.events == 0 and not res.skipped
+    for p in (pipe, pipe_df):
+        rec = p.commitlog.get(9)
+        assert (rec.input_fingerprint, rec.source_partition_offsets) == (
+            "0:0:0:0", {}
+        )
+        assert os.path.exists(
+            os.path.join(p.lineage_path, "lineage-epoch-9.parquet")
+        )
+        met = read_metrics(spark, p.metrics_path).filter("epoch_id = 9")
+        assert [r.events_per_sec for r in met.collect()] == [0.0]
 
 
 def test_replay_bulk_ignores_hidden_files(spark, tmp_path):

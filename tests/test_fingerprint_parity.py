@@ -1,9 +1,10 @@
 """The exactly-once fingerprint must agree across every path that computes
-it: the JVM aggregation (`batch_stats` / `observe_exprs`, used by the
-per-epoch apply) and the Arrow-writer inline aggregation (pyarrow shifts +
-group_by, used by the bulk backfill). If they diverge, a bulk-applied epoch
-re-delivered to the streaming path (or vice versa) would be treated as
-different input."""
+it: the JVM aggregation (`batch_stats`, used by the COW apply) and the
+Arrow-writer inline aggregation (pyarrow shifts + group_by over the
+position hash, used by every MOR route, from the JVM hash column on the
+DataFrame writer and from numpy on the file writer). If they diverge, an
+epoch committed on one route and re-delivered to another would be treated
+as different input."""
 
 from __future__ import annotations
 

@@ -29,7 +29,6 @@ def main() -> None:
     ap.add_argument("--workdir", required=True, help="commits/lineage/metrics dir")
     ap.add_argument("--mode", default="mor", choices=["mor", "cow"])
     ap.add_argument("--num-buckets", type=int, default=32)
-    ap.add_argument("--n-source-partitions", type=int, default=8)
     ap.add_argument("--stream", action="store_true",
                     help="tail via Structured Streaming (else batch replay)")
     ap.add_argument("--checkpoint", default=None)
@@ -71,7 +70,6 @@ def main() -> None:
         args.table,
         args.workdir,
         mode=args.mode,
-        n_source_partitions=args.n_source_partitions,
         lateness_seconds=args.lateness_seconds,
     )
 
