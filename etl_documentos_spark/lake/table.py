@@ -322,11 +322,10 @@ def _manifest_matches(man: dict, files: list, stats: dict) -> bool:
 _FLUSH_ROWS = 48_000
 
 
-
 def _arrow_type(dt: T.DataType, tz: str):
     """Spark type → the Arrow type Spark's own Arrow conversion produces
-    (what `mapInArrow` batches carry), so the file-driven writer's parquet
-    schemas are bit-identical to the DataFrame writer's."""
+    (what `mapInArrow` batches carry): the change kernel projects onto
+    these, so both feeders write bit-identical parquet schemas."""
     import pyarrow as pa
 
     if isinstance(dt, T.StringType):
@@ -354,6 +353,39 @@ def _arrow_type(dt: T.DataType, tz: str):
     if isinstance(dt, T.BinaryType):
         return pa.binary()
     raise TypeError(f"no Arrow mapping for {dt}")
+
+
+#: the direct writers' output rows, one schema for every kind: "f" data
+#: file, "m" manifest stats, "s" per-(epoch, source partition) stats, "l"
+#: key sketch, "q" quarantined-row count per epoch. A kind leaves the
+#: columns it does not use null.
+_OUT_FIELDS = [
+    ("kind", "string"), ("bucket", "int"), ("path", "string"),
+    ("nrows", "long"), ("epoch", "int"), ("sp", "int"), ("h0", "long"),
+    ("h1", "long"), ("h2", "long"), ("n", "long"), ("ndel", "long"),
+    ("max_lsn", "long"), ("max_ts", "long"), ("sketch", "binary"),
+    ("stats_json", "string"),
+]
+_OUT_DDL = ", ".join(f"{c} {t}" for c, t in _OUT_FIELDS)
+
+
+def _out_batch(kind: str, size: int, **cols):
+    """``size`` output rows of ``kind``; ``cols`` maps column -> values."""
+    import pyarrow as pa
+
+    types = {
+        "string": pa.string(), "int": pa.int32(), "long": pa.int64(),
+        "binary": pa.binary(),
+    }
+    schema = pa.schema([(c, types[t]) for c, t in _OUT_FIELDS])
+    data = {}
+    for f in schema:
+        v = cols.get(f.name, pa.nulls(size, f.type))
+        if isinstance(v, pa.ChunkedArray):
+            v = v.combine_chunks()
+        data[f.name] = v
+    data["kind"] = [kind] * size
+    return pa.RecordBatch.from_pydict(data, schema=schema)
 
 
 def _gather_direct_rows(rows, rel: str, stats: bool):
@@ -424,23 +456,194 @@ def fold_hll(sketches: dict, ch, keys) -> None:
         sketches[k] = r if cur is None else np.maximum(cur, r)
 
 
+#: row-level validity checks of a change row, in order, as (column, reason):
+#: the first failing check names the row's ``_dlq_reason``
+_DLQ_CHECKS = (
+    ("op", "unknown_op"),
+    ("conv_id", "null_conv_id"),
+    ("turn_idx", "null_turn_idx"),
+    ("lsn", "null_lsn"),
+    ("ts", "null_ts"),
+)
+
+
+def _split_invalid(tbl, epoch, bad: dict):
+    """Quarantine mask: return ``tbl``'s valid rows and append the others,
+    with every source column plus ``_dlq_reason``, to ``bad[epoch]``.
+
+    Valid = a known op (a NULL op counts as unknown) and non-null key,
+    version and event-time columns — the invariants bucketing and the LWW
+    merge rely on; an absent column fails its check. ``epoch`` None reads
+    each row's ``epoch`` column."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = tbl.num_rows
+    names = set(tbl.schema.names)
+    reason = np.full(n, None, object)
+    failed = np.zeros(n, bool)
+    for col, why in reversed(_DLQ_CHECKS):
+        if col not in names:
+            hit = np.ones(n, bool)
+        elif col == "op":
+            known = pa.array(["insert", "update", "delete"])
+            hit = ~pc.is_in(tbl.column(col), known).to_numpy()
+        else:
+            hit = tbl.column(col).is_null().to_numpy()
+        reason[hit] = why
+        failed |= hit
+    if not failed.any():
+        return tbl
+    # drop the source file's schema metadata: a Spark-written file's embedded
+    # row schema would hide ``_dlq_reason`` from Spark readers of the DLQ
+    rows = (
+        tbl.filter(pa.array(failed))
+        .append_column("_dlq_reason", pa.array(reason[failed], pa.string()))
+        .replace_schema_metadata(None)
+    )
+    epochs = (
+        np.full(rows.num_rows, epoch)
+        if epoch is not None
+        else rows.column("epoch").to_numpy(zero_copy_only=False)
+    )
+    if "epoch" in rows.schema.names:  # the DLQ directory names the epoch
+        rows = rows.drop_columns(["epoch"])
+    for e in np.unique(epochs).tolist():
+        bad.setdefault(int(e), []).append(rows.filter(pa.array(epochs == e)))
+    return tbl.filter(pa.array(~failed))
+
+
+def change_batches(
+    sources,
+    phys_fields: list,
+    bucket_col: str,
+    num_buckets: int,
+    split: list[int] | None,
+    fence: int | None = None,
+    dlq: str | None = None,
+    quarantined: dict | None = None,
+):
+    """The change-batch kernel: raw change rows → bucketed physical rows.
+
+    ``sources`` yields ``(tbl, epoch)``: a pyarrow Table of change rows
+    (op, key, payload, ts, lsn, source_partition) and its epoch id, or
+    None to read each row's ``epoch`` column. Both writer feeders run it
+    inside their tasks — `LakeTable.write_change_files_direct` over batches
+    read from change-log parquet, `LakeTable.write_data_files_direct` over
+    ``mapInArrow`` batches of a DataFrame. Per batch, in order:
+
+    1. ``dlq`` given (quarantine on): invalid rows leave the batch
+       (`_split_invalid`) — before the fence, so a null-``lsn`` row is
+       quarantined, not silently fenced out;
+    2. bootstrap fence: keep ``lsn > fence``;
+    3. projection onto ``phys_fields`` (physical name, Arrow type): ``op``
+       becomes ``_deleted``, ``lsn`` ``_lsn``, absent columns null;
+    4. sidecars, hashed in numpy (`functions.xxh64`, bit-equal to Spark's
+       ``xxhash64``): ``_h``, the binlog position hash
+       ``xxhash64(source_partition, lsn)`` the epoch fingerprint sums; the
+       bucket key hashed once, giving ``_bucket`` and, on ``conv_id``
+       tables, ``_ch`` (the key-sketch hash); ``epoch`` and
+       ``source_partition`` as int.
+
+    Yields RecordBatches for `_make_write_partition`. Once ``sources`` is
+    drained, each epoch's quarantined rows go to
+    ``<dlq>/epoch=N/part-<task partition id>.parquet`` (a retried task
+    overwrites its own file) and their count to ``quarantined[N]``.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from etl_documentos_spark.functions.xxh64 import bucket_from_hash, xxh64_key
+
+    schema = pa.schema(
+        [pa.field(n, t) for n, t in phys_fields]
+        + [
+            ("_h", pa.int64()),
+            ("_ch", pa.int64()),
+            ("epoch", pa.int32()),
+            ("source_partition", pa.int32()),
+            ("_bucket", pa.int32()),
+        ]
+    )
+    bad: dict[int, list] = {}
+    for tbl, epoch in sources:
+        if dlq is not None:
+            tbl = _split_invalid(tbl, epoch, bad)
+        if fence is not None:
+            tbl = tbl.filter(pc.greater(tbl.column("lsn"), fence))
+        n = tbl.num_rows
+        if n == 0:
+            continue
+        present = set(tbl.schema.names)
+        cols = {}  # physical name -> projected array
+        for name, typ in phys_fields:
+            if name == "_deleted":
+                a = pc.equal(tbl.column("op"), "delete")
+            elif name == "_lsn":
+                a = tbl.column("lsn")
+            elif name in present:
+                a = tbl.column(name)
+            else:
+                a = pa.nulls(n, typ)
+            if isinstance(a, pa.ChunkedArray):
+                a = a.combine_chunks()
+            if a.type != typ:
+                a = pc.cast(a, typ, safe=False)
+            cols[name] = a
+        sp = tbl.column("source_partition")
+        h = xxh64_key(tbl.column("lsn"), seed=xxh64_key(sp))
+        kh = xxh64_key(cols[bucket_col])
+        ch = kh if bucket_col == "conv_id" else xxh64_key(cols["conv_id"])
+        ep = (
+            pa.array(np.full(n, epoch, np.int32))
+            if epoch is not None
+            else pc.cast(tbl.column("epoch"), pa.int32()).combine_chunks()
+        )
+        yield pa.record_batch(
+            [
+                *cols.values(),
+                pa.array(h, pa.int64()),
+                pa.array(ch, pa.int64()),
+                ep,
+                pc.cast(sp.combine_chunks(), pa.int32()),
+                pa.array(bucket_from_hash(kh, num_buckets, split), pa.int32()),
+            ],
+            schema=schema,
+        )
+    if bad:
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        name = f"part-{ctx.partitionId() if ctx else 0:05d}.parquet"
+        for e, parts in bad.items():
+            d = os.path.join(dlq, f"epoch={e}")
+            os.makedirs(d, exist_ok=True)
+            pq.write_table(
+                pa.concat_tables(parts, promote_options="default"),
+                os.path.join(d, name),
+            )
+            quarantined[e] = sum(p.num_rows for p in parts)
+
+
 def _make_write_partition(
     out: str,
     data_cols: list,
     stats: bool,
-    with_key_sketch: bool,
     man_on: bool,
     man_cols: list,
     man_blooms: list,
     codec: str,
 ):
-    """Build the per-task Arrow write generator shared by BOTH direct
-    writers: the DataFrame path (`LakeTable._write_data_direct`, batches
-    arrive from the JVM via mapInArrow) and the file-driven path
-    (`write_change_files_direct`, batches are read from change-log parquet
-    in-process — the JVM never touches the data). One code path means the
-    two writers produce bit-identical files, stats rows, sketches and
-    manifest entries for the same input batches."""
+    """Build the per-task Arrow write generator shared by every direct
+    writer: the change feeders (`change_batches` output, from files or
+    from ``mapInArrow``) and the physical-row append
+    (`LakeTable._write_data_direct`). One code path means the writers
+    produce bit-identical files, stats rows, sketches and manifest entries
+    for the same physical batches. ``out`` is created with the first file,
+    so a staging that writes no row leaves no directory behind."""
     def write_partition(batches):
         import os as _os
         import uuid as _uuid
@@ -504,6 +707,7 @@ def _make_write_partition(
             if w is None:
                 name = f"b{b:05d}-{_uuid.uuid4().hex[:16]}.parquet"
                 names[b] = name
+                _os.makedirs(out, exist_ok=True)
                 writers[b] = w = _pq.ParquetWriter(
                     _os.path.join(out, name),
                     tbl.schema,
@@ -524,11 +728,10 @@ def _make_write_partition(
             bcol = tbl.column("_bucket")
             data = tbl.select(data_cols)
             if stats:
-                # fingerprint chunks from the JVM row hash. Arithmetic
-                # shift + mask on signed int64 == Spark's
-                # shiftrightunsigned + mask: the mask keeps only bits
-                # below the sign-extension, so the chunk values agree
-                # bit-for-bit with commitlog.hash_chunk_exprs.
+                # fingerprint chunks of the position hash _h: 22+22+20-bit
+                # chunk sums are commutative (any partitioning), keep
+                # duplicates (unlike XOR) and cannot overflow int64 below
+                # ~2x10^12 rows per epoch
                 h = tbl.column("_h")
                 m22 = _pa.scalar(0x3FFFFF, _pa.int64())
                 m20 = _pa.scalar(0xFFFFF, _pa.int64())
@@ -580,12 +783,11 @@ def _make_write_partition(
                         ]
                     )
                 )
-                if with_key_sketch:
-                    ep, sp, ch = (
-                        tbl.column(c).to_numpy(zero_copy_only=False)
-                        for c in ("epoch", "source_partition", "_ch")
-                    )
-                    fold_hll(sketches, ch, (ep.astype("int64") << 20) | sp)
+                ep, sp, ch = (
+                    tbl.column(c).to_numpy(zero_copy_only=False)
+                    for c in ("epoch", "source_partition", "_ch")
+                )
+                fold_hll(sketches, ch, (ep.astype("int64") << 20) | sp)
             for b in _pc.unique(bcol).to_pylist():
                 sub = data.filter(_pc.equal(bcol, b))
                 buf.setdefault(b, []).append(sub)
@@ -597,46 +799,13 @@ def _make_write_partition(
         for w in writers.values():
             w.close()
 
-        out_schema = _pa.schema(
-            [
-                ("kind", _pa.string()),
-                ("bucket", _pa.int32()),
-                ("path", _pa.string()),
-                ("nrows", _pa.int64()),
-                ("epoch", _pa.int32()),
-                ("sp", _pa.int32()),
-                ("h0", _pa.int64()),
-                ("h1", _pa.int64()),
-                ("h2", _pa.int64()),
-                ("n", _pa.int64()),
-                ("ndel", _pa.int64()),
-                ("max_lsn", _pa.int64()),
-                ("max_ts", _pa.int64()),
-                ("sketch", _pa.binary()),
-                ("stats_json", _pa.string()),
-            ]
-        )
-        nil = [None] * len(names)
         if writers:
-            yield _pa.RecordBatch.from_pydict(
-                {
-                    "kind": ["f"] * len(names),
-                    "bucket": list(names.keys()),
-                    "path": list(names.values()),
-                    "nrows": [counts[b] for b in names],
-                    "epoch": nil,
-                    "sp": nil,
-                    "h0": nil,
-                    "h1": nil,
-                    "h2": nil,
-                    "n": nil,
-                    "ndel": nil,
-                    "max_lsn": nil,
-                    "max_ts": nil,
-                    "sketch": nil,
-                    "stats_json": nil,
-                },
-                schema=out_schema,
+            yield _out_batch(
+                "f",
+                len(names),
+                bucket=list(names.keys()),
+                path=list(names.values()),
+                nrows=[counts[b] for b in names],
             )
         if man_on and names:
             import json as _json
@@ -651,26 +820,12 @@ def _make_write_partition(
                 if per:
                     mstats[b] = _json.dumps(per)
             if mstats:
-                nm = [None] * len(mstats)
-                yield _pa.RecordBatch.from_pydict(
-                    {
-                        "kind": ["m"] * len(mstats),
-                        "bucket": list(mstats.keys()),
-                        "path": [names[b] for b in mstats],
-                        "nrows": nm,
-                        "epoch": nm,
-                        "sp": nm,
-                        "h0": nm,
-                        "h1": nm,
-                        "h2": nm,
-                        "n": nm,
-                        "ndel": nm,
-                        "max_lsn": nm,
-                        "max_ts": nm,
-                        "sketch": nm,
-                        "stats_json": list(mstats.values()),
-                    },
-                    schema=out_schema,
+                yield _out_batch(
+                    "m",
+                    len(mstats),
+                    bucket=list(mstats.keys()),
+                    path=[names[b] for b in mstats],
+                    stats_json=list(mstats.values()),
                 )
         if stat_parts:
             merged = (
@@ -688,63 +843,27 @@ def _make_write_partition(
                     ]
                 )
             )
-            k = merged.num_rows
-            none_s = [None] * k
-            yield _pa.RecordBatch.from_pydict(
-                {
-                    "kind": ["s"] * k,
-                    "bucket": _pa.nulls(k, _pa.int32()),
-                    "path": none_s,
-                    "nrows": none_s,
-                    "epoch": _pc.cast(
-                        merged.column("epoch"), _pa.int32(), safe=False
-                    ).combine_chunks(),
-                    "sp": _pc.cast(
-                        merged.column("sp"), _pa.int32(), safe=False
-                    ).combine_chunks(),
-                    "h0": _pc.cast(
-                        merged.column("h0_sum_sum"), _pa.int64()
-                    ).combine_chunks(),
-                    "h1": _pc.cast(
-                        merged.column("h1_sum_sum"), _pa.int64()
-                    ).combine_chunks(),
-                    "h2": _pc.cast(
-                        merged.column("h2_sum_sum"), _pa.int64()
-                    ).combine_chunks(),
-                    "n": merged.column("lsn_count_sum").combine_chunks(),
-                    "ndel": merged.column("ndel_sum_sum").combine_chunks(),
-                    "max_lsn": merged.column("lsn_max_max").combine_chunks(),
-                    "max_ts": _pc.cast(
-                        merged.column("ts_max_max"), _pa.int64()
-                    ).combine_chunks(),
-                    "sketch": [None] * k,
-                    "stats_json": [None] * k,
-                },
-                schema=out_schema,
+            yield _out_batch(
+                "s",
+                merged.num_rows,
+                epoch=merged.column("epoch"),
+                sp=merged.column("sp"),
+                h0=merged.column("h0_sum_sum"),
+                h1=merged.column("h1_sum_sum"),
+                h2=merged.column("h2_sum_sum"),
+                n=merged.column("lsn_count_sum"),
+                ndel=merged.column("ndel_sum_sum"),
+                max_lsn=merged.column("lsn_max_max"),
+                max_ts=merged.column("ts_max_max"),
             )
         if sketches:
             ks = sorted(sketches)
-            nk = len(ks)
-            none_k = [None] * nk
-            yield _pa.RecordBatch.from_pydict(
-                {
-                    "kind": ["l"] * nk,
-                    "bucket": _pa.nulls(nk, _pa.int32()),
-                    "path": none_k,
-                    "nrows": none_k,
-                    "epoch": [int(k) >> 20 for k in ks],
-                    "sp": [int(k) & ((1 << 20) - 1) for k in ks],
-                    "h0": none_k,
-                    "h1": none_k,
-                    "h2": none_k,
-                    "n": none_k,
-                    "ndel": none_k,
-                    "max_lsn": none_k,
-                    "max_ts": none_k,
-                    "sketch": [sketches[k].tobytes() for k in ks],
-                    "stats_json": none_k,
-                },
-                schema=out_schema,
+            yield _out_batch(
+                "l",
+                len(ks),
+                epoch=[int(k) >> 20 for k in ks],
+                sp=[int(k) & ((1 << 20) - 1) for k in ks],
+                sketch=[sketches[k].tobytes() for k in ks],
             )
 
     return write_partition
@@ -1393,14 +1512,32 @@ class LakeTable:
             )
         return files
 
-    def _write_data_direct(
-        self,
-        df: DataFrame,
-        target_tasks: int | None = None,
-        stats: bool = False,
-    ):
-        """Shuffle-free Arrow-native append writer (Hudi ``bulk_insert`` /
-        Iceberg unsorted-write shape).
+    def _write_partition(self, out: str, data_cols: list, stats: bool):
+        """`_make_write_partition` for this table's codec and manifest
+        stats. Writer-inline manifest stats are opt-in: each write task
+        folds running min/max + a bloom distinct-set for the stat columns
+        over the Arrow batches it already holds and ships them back as "m"
+        rows — the cluster-scale form of `collect_parquet_stats`, which
+        would otherwise re-read one column of every new file ON THE DRIVER
+        per epoch. Cost when the table has not opted in: zero."""
+        man_on = (
+            bool(self.stat_bloom_cols())
+            or self._meta["properties"].get("stats.on-epoch-append") == "true"
+        )
+        return _make_write_partition(
+            out,
+            data_cols,
+            stats,
+            man_on,
+            [c for c in self.stat_cols() if c in data_cols],
+            [c for c in self.stat_bloom_cols() if c in data_cols],
+            self.write_compression(),
+        )
+
+    def _write_data_direct(self, df: DataFrame, target_tasks: int | None = None):
+        """Shuffle-free Arrow-native append writer for PHYSICAL rows
+        (`append_direct`; Hudi ``bulk_insert`` / Iceberg unsorted-write
+        shape). Change rows take the change feeders instead.
 
         Each input task partitions its own Arrow batches by bucket locally
         and streams them into per-(task, bucket) parquet files written
@@ -1423,82 +1560,92 @@ class LakeTable:
         ``target_tasks × buckets-per-task`` and reduced later by compaction,
         which is the standard bulk-ingest trade.
 
-        Python touches data only as Arrow batches (vectorized C++ filter +
-        parquet encode); no per-row Python.
-
-        ``stats``: single-pass mode for the exactly-once bookkeeping. The
-        caller adds sidecar columns — ``_h`` (`commitlog.position_hash`),
-        ``epoch``, ``source_partition``, and optionally ``_ch`` (xxhash64
-        of ``conv_id``) — which are NOT written to parquet;
-        instead the writer aggregates, per (epoch, source_partition) and
-        fully in Arrow C++ (group_by), the fingerprint chunk sums
-        (h0/h1/h2, same split as ``commitlog.hash_chunk_exprs``),
-        event/delete counts and max LSN, and yields them alongside the
-        file manifest. When ``_ch`` is present it additionally folds a
-        per-(epoch, sp) HyperLogLog register sketch over the key hashes
-        (``kind="l"`` rows, 1 KiB binary each) so the caller gets the
-        distinct-conversation lineage counter from the SAME pass — no
-        second scan of the batch anywhere. One scan of the input instead
-        of a stats pass + an append pass (+ a distinct pass) — the
-        scan/decode/hash is the dominant memory traffic at scale, so
-        cutting passes directly buys scaling headroom.
+        Returns ``(files, manifest_stats)``.
         """
         rel = f"data/w-{uuid.uuid4().hex[:12]}"
-        out = os.path.join(self.root, rel)
-        os.makedirs(out, exist_ok=True)
         p = df.sparkSession.sparkContext.defaultParallelism
-        target = target_tasks or 2 * p
         with_b = df.withColumn(
             "_bucket", self.bucket_expr().cast("int")
-        ).coalesce(target)
-
-        sidecar = ["_h", "_ch", "epoch", "source_partition"] if stats else []
-        data_cols = [c for c in df.columns if c not in sidecar]
-        with_key_sketch = stats and "_ch" in df.columns
-
-        # writer-inline manifest stats (opt-in): each write task folds
-        # running min/max + a bloom distinct-set for the stat columns for
-        # the stat columns over the Arrow batches it already holds and
-        # ships them back as "m" rows — the cluster-scale form of
-        # `collect_parquet_stats`, which would otherwise re-read one column
-        # of every new file ON THE DRIVER per epoch (a driver bottleneck at
-        # 1000 executors). Cost when the table has not opted in: zero.
-        man_on = (
-            bool(self.stat_bloom_cols())
-            or self._meta["properties"].get("stats.on-epoch-append") == "true"
+        ).coalesce(target_tasks or 2 * p)
+        write_partition = self._write_partition(
+            os.path.join(self.root, rel), df.columns, stats=False
         )
-        man_cols = [c for c in self.stat_cols() if c in data_cols]
-        man_blooms = [c for c in self.stat_bloom_cols() if c in data_cols]
-        codec = self.write_compression()
+        rows = with_b.mapInArrow(write_partition, _OUT_DDL).collect()
+        return _gather_direct_rows(rows, rel, stats=False)
 
-        write_partition = _make_write_partition(
-            out, data_cols, stats, with_key_sketch,
-            man_on, man_cols, man_blooms, codec,
+    def _change_task(
+        self, spark: SparkSession, fence_lsn: int | None, dlq: str | None
+    ):
+        """The task body both change feeders run, bound to a fresh
+        ``data/w-*`` staging dir: ``task(sources)`` feeds ``(change table,
+        epoch)`` pairs through `change_batches` into the shared write
+        generator and yields its output batches, then one "q" row per epoch
+        that had rows quarantined. Returns ``(rel, task)``."""
+        rel = f"data/w-{uuid.uuid4().hex[:12]}"
+        write_partition = self._write_partition(
+            os.path.join(self.root, rel),
+            [f.name for f in self.schema.fields],
+            stats=True,
+        )
+        tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
+        kernel = dict(
+            phys_fields=[
+                (f.name, _arrow_type(f.dataType, tz)) for f in self.schema.fields
+            ],
+            bucket_col=self.bucket_col,
+            num_buckets=self.num_buckets,
+            split=list(self.split_buckets) or None,
+            fence=None if fence_lsn is None else int(fence_lsn),
+            dlq=dlq,
         )
 
-        rows = with_b.mapInArrow(
-            write_partition,
-            "kind string, bucket int, path string, nrows long, epoch int, "
-            "sp int, h0 long, h1 long, h2 long, n long, ndel long, "
-            "max_lsn long, max_ts long, sketch binary, stats_json string",
-        ).collect()
-        return _gather_direct_rows(rows, rel, stats)
+        def task(sources):
+            quarantined: dict[int, int] = {}
+            yield from write_partition(
+                change_batches(sources, quarantined=quarantined, **kernel)
+            )
+            if quarantined:
+                yield _out_batch(
+                    "q",
+                    len(quarantined),
+                    epoch=list(quarantined),
+                    n=list(quarantined.values()),
+                )
+
+        return rel, task
 
     def write_data_files_direct(
         self,
-        df: DataFrame,
+        changes: DataFrame,
+        epoch: int | None = None,
+        fence_lsn: int | None = None,
         target_tasks: int | None = None,
-        stats: bool = False,
+        dlq: str | None = None,
     ):
-        """Stage files via the shuffle-free Arrow writer (no commit).
+        """DataFrame feeder of the change-batch kernel: stage the raw change
+        rows of ``changes`` as bucket files (no commit).
 
-        Returns ``(files, manifest_stats)`` — manifest_stats is the
-        writer-inline per-file stats dict (None unless the table opted in
-        via ``stats.bloom.cols`` / ``stats.on-epoch-append``).
-        ``stats=True``: df carries ``_h``/``epoch``/``source_partition``
-        sidecar columns; returns ``(files, stats_rows, manifest_stats)``
-        (see ``_write_data_direct``)."""
-        return self._write_data_direct(df, target_tasks, stats=stats)
+        ``changes.coalesce(target_tasks).mapInArrow(...)``: each task runs
+        `change_batches` over its Arrow batches (fence at ``fence_lsn``,
+        quarantine into ``dlq`` when given) and the shared write generator.
+        ``epoch``: the epoch id of every row; None reads the ``epoch``
+        column (a many-epoch bulk batch). Returns ``(files, stat_rows,
+        manifest_stats)`` like `write_change_files_direct`."""
+        spark = changes.sparkSession
+        rel, task = self._change_task(spark, fence_lsn, dlq)
+
+        def run(batches):
+            import pyarrow as _pa
+
+            yield from task((_pa.Table.from_batches([b]), epoch) for b in batches)
+
+        p = spark.sparkContext.defaultParallelism
+        rows = (
+            changes.coalesce(target_tasks or 2 * p)
+            .mapInArrow(run, _OUT_DDL)
+            .collect()
+        )
+        return _gather_direct_rows(rows, rel, stats=True)
 
     def write_change_files_direct(
         self,
@@ -1506,58 +1653,31 @@ class LakeTable:
         file_epochs: list[tuple[str, int]],
         fence_lsn: int | None = None,
         target_tasks: int | None = None,
+        dlq: str | None = None,
     ):
-        """File-driven Arrow writer: the JVM never touches the data plane.
+        """File feeder of the change-batch kernel: the JVM never touches
+        the data plane.
 
         ``file_epochs``: (change-log parquet path, epoch id) pairs. Each
-        writer TASK opens its files with pyarrow directly, applies the
-        bootstrap fence, projects onto the physical table shape, hashes in
-        numpy (`functions.xxh64`, bit-equal to the DataFrame routes' JVM
-        ``F.xxhash64``) each row's binlog position ``(source_partition,
-        lsn)`` for the position fingerprint — two integers, not every
-        payload column — and its bucket key, once (the bucket and, on
-        ``conv_id`` tables, the ``_ch`` sketch column derive from that
-        hash), and streams bucket files through the SAME
-        `_make_write_partition` generator as the DataFrame writer.
-        Spark distributes only file paths in and manifest
-        rows out — the ~2.2 s/super-batch JVM→Python Arrow-socket drain of
-        the mapInArrow path (the single largest bulk-replay cost at bench
+        writer TASK opens its files with pyarrow directly and runs
+        `change_batches` (quarantine mask when ``dlq`` is given, bootstrap
+        fence at ``fence_lsn``, projection, position and key hashes in
+        numpy) over their batches, each file carrying its own epoch, into
+        the shared write generator. Spark distributes only file paths in
+        and manifest rows out — the JVM→Python Arrow-socket drain of the
+        DataFrame feeder (the single largest bulk-replay cost at bench
         scale) disappears, along with the JVM-side decode.
 
         Scale shape: tasks are byte-balanced over files (greedy LPT), the
         data plane is per-task parquet→parquet with vectorized C++ decode/
         encode and numpy hashing; driver work is O(files) listing + tiny
-        manifest rows, identical to the DataFrame path. On a real cluster
-        the change log lives on shared storage, so a path is as readable
-        from an executor as a DataFrame partition would be.
+        manifest rows. On a real cluster the change log lives on shared
+        storage, so a path is as readable from an executor as a DataFrame
+        partition would be.
 
-        Returns ``(files, stat_rows, manifest_stats)`` exactly like
-        ``write_data_files_direct(stats=True)``.
+        Returns ``(files, stat_rows, manifest_stats)``.
         """
-        rel = f"data/w-{uuid.uuid4().hex[:12]}"
-        out = os.path.join(self.root, rel)
-        os.makedirs(out, exist_ok=True)
-
-        data_cols = [f.name for f in self.schema.fields]
-        man_on = (
-            bool(self.stat_bloom_cols())
-            or self._meta["properties"].get("stats.on-epoch-append") == "true"
-        )
-        man_cols = [c for c in self.stat_cols() if c in data_cols]
-        man_blooms = [c for c in self.stat_bloom_cols() if c in data_cols]
-        codec = self.write_compression()
-        write_partition = _make_write_partition(
-            out, data_cols, True, True, man_on, man_cols, man_blooms, codec
-        )
-
-        tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-        phys_fields = [
-            (f.name, _arrow_type(f.dataType, tz)) for f in self.schema.fields
-        ]
-        num_buckets = self.num_buckets
-        split = list(self.split_buckets) or None
-        bucket_col = self.bucket_col
-        fence = None if fence_lsn is None else int(fence_lsn)
+        rel, task = self._change_task(spark, fence_lsn, dlq)
 
         # byte-balanced chunks (greedy LPT, largest file first): the slowest
         # task sets the job span, so balance bytes, not file counts
@@ -1576,94 +1696,22 @@ class LakeTable:
             heapq.heappush(heap, (load + sz, i))
         chunks = [c for c in chunks if c]
 
-        def task(chunk_iter):
-            import numpy as _np
+        def run(chunk_iter):
             import pyarrow as _pa
-            import pyarrow.compute as _pc
             import pyarrow.parquet as _pq
 
-            from etl_documentos_spark.functions.xxh64 import (
-                bucket_from_hash,
-                xxh64_key,
+            sources = (
+                (_pa.Table.from_batches([rb]), epoch)
+                for chunk in chunk_iter
+                for path, epoch in chunk
+                for rb in _pq.ParquetFile(path).iter_batches(batch_size=1 << 16)
             )
-
-            side_fields = [
-                ("_h", _pa.int64()),
-                ("_ch", _pa.int64()),
-                ("epoch", _pa.int32()),
-                ("source_partition", _pa.int32()),
-                ("_bucket", _pa.int32()),
-            ]
-            out_schema = _pa.schema(
-                [_pa.field(n, t) for n, t in phys_fields + side_fields]
-            )
-
-            def batches():
-                for chunk in chunk_iter:
-                    for path, epoch in chunk:
-                        pf = _pq.ParquetFile(path)
-                        present = set(pf.schema_arrow.names)
-                        for rb in pf.iter_batches(batch_size=1 << 16):
-                            tbl = _pa.Table.from_batches([rb])
-                            if fence is not None:
-                                tbl = tbl.filter(
-                                    _pc.greater(tbl.column("lsn"), fence)
-                                )
-                            n = tbl.num_rows
-                            if n == 0:
-                                continue
-                            cols = {}  # physical name -> projected array
-                            for name, typ in phys_fields:
-                                if name == "_deleted":
-                                    a = _pc.equal(tbl.column("op"), "delete")
-                                elif name == "_lsn":
-                                    a = tbl.column("lsn")
-                                elif name in present:
-                                    a = tbl.column(name)
-                                else:
-                                    a = _pa.nulls(n, typ)
-                                if isinstance(a, _pa.ChunkedArray):
-                                    a = a.combine_chunks()
-                                if a.type != typ:
-                                    a = _pc.cast(a, typ, safe=False)
-                                cols[name] = a
-                            sp = tbl.column("source_partition")
-                            h = xxh64_key(
-                                tbl.column("lsn"), seed=xxh64_key(sp)
-                            )
-                            kh = xxh64_key(cols[bucket_col])
-                            ch = (
-                                kh
-                                if bucket_col == "conv_id"
-                                else xxh64_key(cols["conv_id"])
-                            )
-                            yield _pa.record_batch(
-                                [
-                                    *cols.values(),
-                                    _pa.array(h, _pa.int64()),
-                                    _pa.array(ch, _pa.int64()),
-                                    _pa.array(
-                                        _np.full(n, epoch, _np.int32)
-                                    ),
-                                    _pc.cast(
-                                        sp.combine_chunks(), _pa.int32()
-                                    ),
-                                    _pa.array(
-                                        bucket_from_hash(
-                                            kh, num_buckets, split
-                                        ),
-                                        _pa.int32(),
-                                    ),
-                                ],
-                                schema=out_schema,
-                            )
-
-            for rb in write_partition(batches()):
+            for rb in task(sources):
                 yield from rb.to_pylist()
 
         rows = (
             spark.sparkContext.parallelize(chunks, len(chunks))
-            .mapPartitions(task)
+            .mapPartitions(run)
             .collect()
         )
         return _gather_direct_rows(rows, rel, stats=True)

@@ -63,8 +63,8 @@ class MergeStats:
     conv_ids_touched: int
 
 
-def physical_exprs(changes: DataFrame, table_schema: T.StructType) -> list:
-    """Column expressions projecting a change batch onto the physical shape."""
+def changes_to_physical(changes: DataFrame, table_schema: T.StructType) -> DataFrame:
+    """Project a change batch (op/.../lsn) onto the physical table shape."""
     cols = []
     change_cols = set(changes.columns)
     for f in table_schema.fields:
@@ -76,12 +76,7 @@ def physical_exprs(changes: DataFrame, table_schema: T.StructType) -> list:
             cols.append(F.col(f.name))
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return cols
-
-
-def changes_to_physical(changes: DataFrame, table_schema: T.StructType) -> DataFrame:
-    """Project a change batch (op/.../lsn) onto the physical table shape."""
-    return changes.select(*physical_exprs(changes, table_schema))
+    return changes.select(*cols)
 
 
 def merge_into(
@@ -90,7 +85,6 @@ def merge_into(
     changes: DataFrame,
     dedup: bool = True,
     compute_stats: bool = False,
-    assume_all_buckets: bool = False,
 ) -> MergeStats | None:
     """Apply one change batch to the table. See module docstring for the plan.
 
@@ -108,9 +102,7 @@ def merge_into(
     """
     for _ in range(5):
         try:
-            return _merge_into_once(
-                spark, table, changes, dedup, compute_stats, assume_all_buckets
-            )
+            return _merge_into_once(spark, table, changes, dedup, compute_stats)
         except SpecConflictError:
             table._refresh()
     raise SpecConflictError("spec kept changing across 5 merge retries")
@@ -122,24 +114,18 @@ def _merge_into_once(
     changes: DataFrame,
     dedup: bool,
     compute_stats: bool,
-    assume_all_buckets: bool,
 ) -> MergeStats | None:
     updates = changes_to_physical(changes, table.schema)
 
     # ---- partition pruning: which buckets does this batch touch?
     # (cheap distinct over the — typically cached — batch; result is at most
-    # num_buckets ints). When the caller knows the batch spans all buckets
-    # (large uniform epochs), skip the job — overestimating "touched" is
-    # always safe, it only widens the read.
-    if assume_all_buckets:
-        touched = table.live_buckets()
-    else:
-        touched = [
-            r[0]
-            for r in updates.select(table.bucket_expr().alias("b"))
-            .distinct()
-            .collect()
-        ]
+    # num_buckets ints)
+    touched = [
+        r[0]
+        for r in updates.select(table.bucket_expr().alias("b"))
+        .distinct()
+        .collect()
+    ]
     if not touched:
         return MergeStats(0, 0, 0, 0, 0) if compute_stats else None
 

@@ -21,8 +21,9 @@ differently across formatters).
 
 Rows whose envelope does not parse, or whose ``op`` is unknown, surface
 with a NULL ``op`` — exactly the shape ``CdcPipeline``'s dead-letter queue
-quarantines (``streaming/apply.py`` ``_quarantine_split``), so malformed
-wire data diverts instead of poisoning the merge.
+quarantines (the writer kernel's validity mask, ``lake/table.py``
+``change_batches``), so malformed wire data diverts instead of poisoning
+the merge.
 
 ``to_envelope`` is the inverse (canonical rows -> envelope strings), used
 by tests, the round-trip oracle query, and as the wire format for shipping

@@ -4,10 +4,12 @@ Every route runs one core, ``CdcPipeline._apply``, over a set of epochs:
 
 1. commit-log guard: skip the epochs already committed (restart replay);
 2. additive schema evolution if the batch carries new columns;
-3. the route's writer stages and commits the epochs' rows and returns one
-   `BatchStats` per epoch (position fingerprint, per-source-partition
-   offsets, lineage counters, max event time);
-4. watermark advance and threshold compaction, once per call;
+3. the route's feeder stages the epochs' rows, the table commits them, and
+   the writer's stats rows fold into one `BatchStats` per epoch (position
+   fingerprint, per-source-partition offsets, lineage counters, max event
+   time, quarantined rows);
+4. watermark advance and compaction, once per call: MOR compacts buckets
+   past the file threshold, COW every bucket the staging wrote;
 5. per epoch, ``_record``: lineage rows, one metrics row, then the commit
    record (atomic rename) — the epoch is now durable.
 
@@ -15,32 +17,34 @@ An epoch without rows takes the same steps: it commits the empty
 fingerprint ``0:0:0:0`` next to an empty lineage file and a zero-event
 metrics row.
 
-Routes and their writers:
+Routes and their feeders. Every route stages rows through the one
+change-batch kernel (`lake.table.change_batches`: quarantine mask, bootstrap
+fence, projection, position and key hashes, bucket), fed two ways:
 
-- ``apply_epochs_bulk_files``: MOR epochs as local parquet files; writer
-  tasks read them with pyarrow (``write_change_files_direct``), so no row
-  crosses the JVM→Python Arrow socket. ``stream.replay_epochs`` (one epoch
-  per call) and ``stream.replay_bulk`` (all at once) use it for every
-  local MOR epoch without quarantine.
+- ``apply_epochs_bulk_files``: epochs as local parquet files; writer tasks
+  read them with pyarrow (``write_change_files_direct``), so no row crosses
+  the JVM→Python Arrow socket. ``stream.replay_epochs`` (one epoch per
+  call) and ``stream.replay_bulk`` (all at once) use it for every local
+  epoch.
 - ``apply_epoch``: one epoch as a DataFrame — the route for inputs that are
   not local files (foreachBatch, synthetic sources, bootstrap, ``://``
-  paths), for COW and for quarantine (the validity split is a DataFrame
-  filter). MOR uses the DataFrame writer
-  (``write_data_files_direct(stats=True)``: the stats come out of the same
-  ``mapInArrow`` pass); COW aggregates ``batch_stats`` and then
-  ``merge_into`` rewrites the touched buckets.
-- ``apply_epochs_bulk``: many MOR epochs as one DataFrame through the
-  DataFrame writer (``replay_bulk``'s fallback for ``://`` paths).
+  paths); ``apply_epochs_bulk``: many epochs as one DataFrame with an
+  ``epoch`` column (``replay_bulk``'s route for ``://`` paths). Both feed
+  the kernel from ``mapInArrow`` (``write_data_files_direct``).
 
-Both MOR writers emit the same per-(epoch, source partition) stats rows,
+Both feeders emit the same per-(epoch, source partition) stats rows,
 folded by ``epoch_stats``, and commit through the table's one stage →
 commit → restage-on-spec-conflict loop (`LakeTable.append_staged`).
+``mode="cow"`` is the same append followed by a compaction of every bucket
+the staging wrote. With quarantine on, the kernel writes invalid rows to
+``dlq/epoch=N`` and their count rides the stats rows into
+``EpochResult.quarantined``.
 
 Crash-safety ordering: the table snapshot commit (step 3) lands before the
 commit record (step 5). A crash between them leaves a committed snapshot and
-no commit record; on replay the epoch re-applies, and the version-checked
-merge makes that re-application a no-op (idempotence test asserts table-hash
-equality). Reference analogue of the lifecycle: insert ``processando`` ->
+no commit record; on replay the epoch re-applies, and the read-time LWW
+(version-checked on ``(ts, lsn)``) makes that re-application a no-op for
+readers. Reference analogue of the lifecycle: insert ``processando`` ->
 update ``concluido``/``erro`` + audit rows
 (``/root/reference/app/services/document_processor.py:126-143, 205-218,
 615-631``).
@@ -49,27 +53,22 @@ update ``concluido``/``erro`` + audit rows
 from __future__ import annotations
 
 import os
+import shutil
 import threading
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_documentos_spark.lake.table import LakeTable
 from etl_documentos_spark.operators.evolve import evolve_if_needed
-from etl_documentos_spark.operators.merge import (
-    compact,
-    merge_into,
-    physical_exprs,
-)
+from etl_documentos_spark.operators.merge import compact
 from etl_documentos_spark.streaming.commitlog import (
     BatchStats,
     CommitLog,
-    batch_stats,
     combine_chunks,
-    position_hash,
 )
 from etl_documentos_spark.streaming.lineage import (
     append_lineage_rows,
@@ -78,8 +77,8 @@ from etl_documentos_spark.streaming.lineage import (
 
 
 def merge_hll_counts(sketch_rows) -> dict[tuple[int, int], int]:
-    """Merge per-task HyperLogLog register rows (``kind="l"`` from
-    ``LakeTable._write_data_direct`` stats mode) into per-(epoch,
+    """Merge per-task HyperLogLog register rows (``kind="l"`` from the
+    change feeders' writer tasks) into per-(epoch,
     source_partition) distinct counts.
 
     Register-wise max across tasks, then the standard bias-corrected HLL
@@ -110,18 +109,22 @@ def merge_hll_counts(sketch_rows) -> dict[tuple[int, int], int]:
 
 
 def epoch_stats(stat_rows, epochs: list[int]) -> dict[int, BatchStats]:
-    """Fold the direct writers' stats rows into one `BatchStats` per epoch.
+    """Fold the change feeders' stats rows into one `BatchStats` per epoch.
 
     ``stat_rows``: the writer's "s" rows (one partial per task and
-    (epoch, source partition): max for offsets, sum for counters) and "l"
-    rows (HyperLogLog registers, merged by `merge_hll_counts`); pyspark Rows
-    or dicts — both index by name. An epoch of ``epochs`` without rows gets
-    the empty stats (fingerprint ``0:0:0:0``)."""
+    (epoch, source partition): max for offsets, sum for counters), "l"
+    rows (HyperLogLog registers, merged by `merge_hll_counts`) and "q" rows
+    (quarantined rows per task and epoch); pyspark Rows or dicts — both
+    index by name. An epoch of ``epochs`` without rows gets the empty stats
+    (fingerprint ``0:0:0:0``)."""
     convs = merge_hll_counts(r for r in stat_rows if r["kind"] == "l")
     per_epoch: dict[int, list] = {e: [] for e in epochs}
+    quarantined = dict.fromkeys(epochs, 0)
     for r in stat_rows:
         if r["kind"] == "s":
             per_epoch[int(r["epoch"])].append(r)
+        elif r["kind"] == "q":
+            quarantined[int(r["epoch"])] += int(r["n"])
     out = {}
     for e, ers in per_epoch.items():
         n = sum(int(r["n"]) for r in ers)
@@ -145,6 +148,7 @@ def epoch_stats(stat_rows, epochs: list[int]) -> dict[int, BatchStats]:
                 for sp, (n_sp, ndel) in sorted(per_sp.items())
             ],
             max_ts=max(ts, default=None),
+            quarantined=quarantined[e],
         )
     return out
 
@@ -195,8 +199,9 @@ class CdcPipeline:
     - ``"mor"`` (default): merge-on-read — per-epoch appends of delta files,
       LWW at read time, automatic compaction when a bucket accumulates more
       than ``compact_at_files`` files. The high-throughput ingest shape.
-    - ``"cow"``: copy-on-write — every epoch rewrites the touched buckets
-      with the reduction applied. Read-optimal, write-amplified.
+    - ``"cow"``: copy-on-write — every epoch appends like MOR, then
+      compacts every bucket it touched, so each bucket holds one reduced
+      row per key after every epoch. Read-optimal, write-amplified.
     """
 
     def __init__(
@@ -233,8 +238,8 @@ class CdcPipeline:
         #: dead-letter queue: rows failing row-level validity (unknown op,
         #: null key/version) divert to ``<workdir>/dlq/epoch=N`` instead of
         #: poisoning the merge (a null conv_id has no bucket; an unknown op
-        #: would silently upsert). Opt-in — the validity split costs one
-        #: extra filter pass over each batch. Schema-LEVEL drift (type
+        #: would silently upsert). Opt-in — the writer kernel's validity
+        #: mask costs a few null checks per batch. Schema-LEVEL drift (type
         #: changes) still raises: that is a pipeline bug, not a bad row.
         self.quarantine = quarantine
         self.dlq_path = os.path.join(workdir, "dlq")
@@ -284,9 +289,9 @@ class CdcPipeline:
             try:
                 v.refresh(self.spark, table)
             except ValueError:
-                # a logical overwrite/rollback broke the incremental feed
-                # (COW-mode pipeline): resync from a full read — correct
-                # always, incremental only when the source allows it
+                # a logical overwrite/rollback broke the incremental feed:
+                # resync from a full read — correct always, incremental
+                # only when the source allows it
                 v.full_refresh(self.spark, table)
 
     @property
@@ -324,9 +329,8 @@ class CdcPipeline:
         or before the snapshot position are already reflected in the
         snapshot, and REPLAYING them would resurrect rows whose delete
         predates the snapshot (the snapshot has no tombstone for them — the
-        stale insert would win against nothing). The filter is a pushed-down
-        range predicate, so parquet/Kafka sources prune pre-watermark
-        files/offsets without scanning them.
+        stale insert would win against nothing). The writer kernel applies
+        the filter to every batch before projection.
 
         Crash-safe and idempotent: the snapshot apply commits under
         ``epoch_id`` in the commit log, so a re-call after any crash skips
@@ -368,27 +372,18 @@ class CdcPipeline:
         the deltas."""
         return max(2, self.spark.sparkContext.defaultParallelism)
 
-    def _fence(self, changes: DataFrame) -> DataFrame:
-        """Snapshot-bootstrap handoff: events at or before the snapshot's
-        log position are already in the table state and must not replay (a
-        pre-snapshot insert would resurrect a pre-snapshot delete). Plain
-        attribute check when no bootstrap happened; when set, a pushed-down
-        range predicate that prunes pre-watermark files."""
-        wm = self.bootstrap_watermark
-        if wm is None:
-            return changes
-        return changes.filter(F.col("lsn") > F.lit(wm))
-
     def _apply(
-        self, epoch_ids: list[int], t0: float, frame, write
+        self, epoch_ids: list[int], t0: float, frame, feed
     ) -> list[EpochResult]:
         """The exactly-once apply every route runs (module docstring steps).
 
         ``frame(todo)``: the DataFrame whose columns drive schema evolution
         for the epochs still to apply, or None when no row will be written.
-        ``write(table, todo)``: stage and commit those epochs' rows through
-        ``table`` (the handle evolution used); returns ``{epoch:
-        BatchStats}`` covering every epoch of ``todo``."""
+        ``feed(table, todo, fence_lsn=…, dlq=…)``: one change feeder staging
+        those epochs' rows under ``table``'s spec; returns ``(files,
+        stat_rows, manifest_stats)``. Each staging first clears the epochs'
+        DLQ directories, so a restage or a crash-replay rewrites the DLQ
+        instead of doubling it."""
         todo = [e for e in epoch_ids if not self.commitlog.is_committed(e)]
         results = [
             EpochResult(e, True, 0, 0.0, []) for e in epoch_ids if e not in todo
@@ -399,15 +394,38 @@ class CdcPipeline:
         with self._commit_lock:
             table = self.table
             added = [] if df is None else evolve_if_needed(df, table)
-        stats = write(table, todo)
+        touched: list[int] = []
+
+        def stage(t: LakeTable):
+            if self.quarantine:
+                for e in todo:
+                    shutil.rmtree(
+                        os.path.join(self.dlq_path, f"epoch={e}"),
+                        ignore_errors=True,
+                    )
+            staged = feed(
+                t, todo,
+                fence_lsn=self.bootstrap_watermark,
+                dlq=self.dlq_path if self.quarantine else None,
+            )
+            touched[:] = sorted(int(b) for b in staged[0])
+            return staged
+
+        _, rows = table.append_staged(
+            stage, lock=self._commit_lock, commit_empty=False
+        )
+        stats = epoch_stats(rows, todo)
         for st in stats.values():
             self._advance_watermark(st.max_ts)
-        self._maybe_compact(table)
+        self._maybe_compact(table, touched)
         duration = time.monotonic() - t0
         for e in sorted(todo):
             self._record(e, stats[e], duration / len(todo))
             results.append(
-                EpochResult(e, False, stats[e].n_events, duration, added)
+                EpochResult(
+                    e, False, stats[e].n_events, duration, added,
+                    stats[e].quarantined,
+                )
             )
         return results
 
@@ -431,42 +449,6 @@ class CdcPipeline:
         if epoch_id % 256 == 0:
             self.commitlog.compact_log(self.commitlog_keep_last)
 
-    def _write_frame(
-        self,
-        table: LakeTable,
-        batch: DataFrame,
-        epoch: Column,
-        todo: list[int],
-        target_tasks: int | None = None,
-    ) -> dict[int, BatchStats]:
-        """The DataFrame writer: one ``mapInArrow`` pass writes the delta
-        files and aggregates the stats per (``epoch``, source partition)
-        inside the Arrow writer (`LakeTable._write_data_direct` stats mode)
-        from sidecar columns that never reach parquet: ``_h``, the same
-        JVM position hash the file writer computes in numpy, so both routes
-        fingerprint alike, and ``_ch``, xxhash64 of ``conv_id`` for the
-        per-task HyperLogLog of ``conv_ids_touched``. A restage after a
-        spec conflict re-derives the stats from the same batch."""
-
-        def stage(t: LakeTable):
-            aug = batch.select(
-                *physical_exprs(batch, t.schema),
-                position_hash().alias("_h"),
-                F.xxhash64(F.col("conv_id")).alias("_ch"),
-                epoch.cast("int").alias("epoch"),
-                F.col("source_partition")
-                .cast("int")
-                .alias("source_partition"),
-            )
-            return t.write_data_files_direct(
-                aug, target_tasks=target_tasks, stats=True
-            )
-
-        _, rows = table.append_staged(
-            stage, lock=self._commit_lock, commit_empty=False
-        )
-        return epoch_stats(rows, todo)
-
     def apply_epochs_bulk(
         self, changes: DataFrame, epoch_ids: list[int]
     ) -> list[EpochResult]:
@@ -480,22 +462,17 @@ class CdcPipeline:
         exactly-once contract per epoch: already-committed epochs are
         filtered out up front, fingerprints/offsets/lineage stay per-epoch.
 
-        ``changes`` must carry an ``epoch`` column; MOR mode only (the
-        reduction happens at read/compaction, so epochs need no ordering
-        barrier between them — LWW is order-insensitive by construction).
+        ``changes`` must carry an ``epoch`` column. The reduction happens
+        at read/compaction time, so epochs need no ordering barrier between
+        them — LWW is order-insensitive by construction.
         """
-        assert self.mode == "mor", "bulk backfill requires merge-on-read"
         t0 = time.monotonic()
-        changes = self._fence(changes)
         return self._apply(
             epoch_ids,
             t0,
             lambda todo: changes,
-            lambda table, todo: self._write_frame(
-                table,
-                changes.filter(F.col("epoch").isin(todo)),
-                F.col("epoch"),
-                todo,
+            lambda t, todo, **kw: t.write_data_files_direct(
+                changes.filter(F.col("epoch").isin(todo)), **kw
             ),
         )
 
@@ -511,13 +488,12 @@ class CdcPipeline:
 
         Same exactly-once contract (per-epoch fingerprints, offsets,
         lineage; committed epochs skipped up front), but writer tasks read
-        the listed files DIRECTLY with pyarrow and bucket/hash rows in
-        numpy (`lake.table.write_change_files_direct`), so the batch never
-        crosses the JVM→Python Arrow socket and the JVM never decodes it.
-        Position fingerprints (``xxhash64(source_partition, lsn)`` per row:
-        two integers, not every payload column) are hashed bit-equal to the
-        DataFrame paths, so a backfill started here and resumed through
-        `apply_epochs_bulk` (or vice versa) dedups correctly.
+        the listed files DIRECTLY with pyarrow and run the change-batch
+        kernel on them (`lake.table.write_change_files_direct`), so the
+        batch never crosses the JVM→Python Arrow socket and the JVM never
+        decodes it. Fingerprints and stats rows equal the DataFrame
+        routes' (same kernel), so a backfill started here and resumed
+        through `apply_epochs_bulk` (or vice versa) dedups correctly.
 
         ``file_epochs``: (parquet path, epoch id) pairs — an epoch may span
         many files. ``schema``: the declared change-stream schema (drives
@@ -527,11 +503,9 @@ class CdcPipeline:
         ZERO files (an external writer's empty epoch directory) must still
         commit its empty fingerprint, otherwise the commit-log gap stalls
         the contiguous HWM roll-up forever and the epoch re-processes on
-        every future replay. MOR mode only, like all bulk paths.
+        every future replay.
         """
-        assert self.mode == "mor", "bulk backfill requires merge-on-read"
         t0 = time.monotonic()
-        wm = self.bootstrap_watermark
         epoch_ids = sorted({e for _, e in file_epochs} | set(epochs or []))
 
         def pairs(todo: list[int]) -> list[tuple[str, int]]:
@@ -546,21 +520,15 @@ class CdcPipeline:
                 [], schema or _union_footer_schema(todo_pairs)
             )
 
-        def write(table, todo):
+        def feed(t, todo, **kw):
             todo_pairs = pairs(todo)
-            rows = []
-            if todo_pairs:
-                _, rows = table.append_staged(
-                    lambda t: t.write_change_files_direct(
-                        self.spark, todo_pairs, fence_lsn=wm,
-                        target_tasks=target_tasks,
-                    ),
-                    lock=self._commit_lock,
-                    commit_empty=False,
-                )
-            return epoch_stats(rows, todo)
+            if not todo_pairs:
+                return {}, [], None
+            return t.write_change_files_direct(
+                self.spark, todo_pairs, target_tasks=target_tasks, **kw
+            )
 
-        return self._apply(epoch_ids, t0, frame, write)
+        return self._apply(epoch_ids, t0, frame, feed)
 
     def _advance_watermark(self, max_ts_us) -> None:
         """Advance the event-time watermark; ``max_ts_us`` is epoch
@@ -582,27 +550,32 @@ class CdcPipeline:
             return None
         return self._max_event_ts - int(self.lateness_seconds * 1_000_000)
 
-    def _maybe_compact(self, table: LakeTable) -> None:
-        """Compact buckets whose delta-file count exceeds the threshold —
-        bounds MOR read amplification; amortized O(table/epochs) instead of
-        COW's O(table) per epoch. Tombstones older than the lateness
-        watermark are expired in the same rewrite.
+    def _maybe_compact(self, table: LakeTable, touched: list[int]) -> None:
+        """Compact after a staging. MOR: the buckets whose delta-file count
+        exceeds the threshold — bounds read amplification; amortized
+        O(table/epochs) instead of COW's O(touched slice) per epoch. COW:
+        every bucket the staging wrote (``touched``). Tombstones older than
+        the lateness watermark are expired in the same rewrite.
 
         The in-process commit lock avoids duplicate compaction work between
         threads; cross-process safety comes from ``commit_overwrite``'s
         expected-files merge (a racing append survives as a delta file).
         """
-        files = table.current_snapshot.files
-        hot = [int(b) for b, fs in files.items() if len(fs) > self.compact_at_files]
-        if hot:
+
+        def due(t: LakeTable) -> list[int]:
+            if self.mode == "cow":
+                return touched
+            return [
+                int(b)
+                for b, fs in t.current_snapshot.files.items()
+                if len(fs) > self.compact_at_files
+            ]
+
+        if due(table):
             with self._commit_lock:
                 fresh = self.table  # recheck under the lock (another thread
                 # may have compacted these buckets already)
-                hot = [
-                    int(b)
-                    for b, fs in fresh.current_snapshot.files.items()
-                    if len(fs) > self.compact_at_files
-                ]
+                hot = due(fresh)
                 if hot:
                     compact(
                         self.spark,
@@ -610,38 +583,6 @@ class CdcPipeline:
                         buckets=hot,
                         expire_tombstones_before=self.tombstone_expiry,
                     )
-
-    def _quarantine_split(
-        self, changes: DataFrame, epoch_id: int
-    ) -> tuple[DataFrame, int]:
-        """Divert row-level-invalid events to the DLQ; return (valid, n_bad).
-
-        Validity = known op + non-null key/version columns — exactly the
-        invariants the merge/bucketing relies on. The DLQ write is an
-        overwrite of ``dlq/epoch=N``, so a crash-replayed epoch rewrites
-        the same rows instead of duplicating them (idempotent like every
-        other per-epoch sink). Quarantined rows keep every source column
-        plus a ``_dlq_reason`` for triage/replay tooling.
-        """
-        reason = (
-            F.when(
-                ~F.col("op").isin("insert", "update", "delete"),
-                F.lit("unknown_op"),
-            )
-            .when(F.col("conv_id").isNull(), F.lit("null_conv_id"))
-            .when(F.col("turn_idx").isNull(), F.lit("null_turn_idx"))
-            .when(F.col("lsn").isNull(), F.lit("null_lsn"))
-            .when(F.col("ts").isNull(), F.lit("null_ts"))
-        )
-        bad = changes.withColumn("_dlq_reason", reason).filter(
-            F.col("_dlq_reason").isNotNull()
-        )
-        n_bad = bad.count()
-        if n_bad:
-            bad.write.mode("overwrite").parquet(
-                os.path.join(self.dlq_path, f"epoch={epoch_id}")
-            )
-        return changes.filter(reason.isNull()), n_bad
 
     def read_dlq(self, epochs: list[int] | None = None) -> DataFrame:
         """Quarantined events (all epochs or a subset) for triage/replay."""
@@ -661,39 +602,16 @@ class CdcPipeline:
             "basePath", self.dlq_path
         ).parquet(*dirs)
 
-    def _merge_cow(self, table: LakeTable, changes: DataFrame) -> BatchStats:
-        """The COW writer: one stats aggregation, then the merge that
-        rewrites the touched buckets (two passes over the cached batch).
-        A batch much larger than the bucket count almost surely touches
-        every bucket — skip the pruning job (safe overestimate). COW merges
-        hold the lock for their whole read-modify-write (no concurrent
-        COW)."""
-        changes = changes.persist()
-        try:
-            stats = batch_stats(changes)
-            if stats.n_events:
-                with self._commit_lock:
-                    merge_into(
-                        self.spark,
-                        table,
-                        changes,
-                        assume_all_buckets=stats.n_events
-                        > 1000 * table.num_buckets,
-                    )
-            return stats
-        finally:
-            changes.unpersist()
-
     def apply_epoch(
         self,
         changes: DataFrame,
         epoch_id: int,
         write_tasks: int | None = None,
     ) -> EpochResult:
-        """Exactly-once apply of one micro-batch: bootstrap fence, then (for
-        an epoch not yet committed) the optional quarantine split and the
-        MOR DataFrame writer or the COW merge. The writer's ``epoch`` is
-        ``epoch_id``, whatever ``epoch`` column the batch carries.
+        """Exactly-once apply of one micro-batch through the DataFrame
+        feeder (`LakeTable.write_data_files_direct`); the kernel fences,
+        quarantines and hashes. The writer's ``epoch`` is ``epoch_id``,
+        whatever ``epoch`` column the batch carries.
 
         ``write_tasks``: writer-task count for this epoch's append job.
         Concurrent replayers pass a byte-proportional share of the cluster
@@ -701,21 +619,15 @@ class CdcPipeline:
         instead of piling 2x-parallelism jobs onto the scheduler; serial
         callers leave it None and get full parallelism."""
         t0 = time.monotonic()
-        changes = self._fence(changes)
-        n_bad = 0
-
-        def write(table, todo):
-            nonlocal n_bad
-            batch = changes
-            if self.quarantine:
-                batch, n_bad = self._quarantine_split(changes, epoch_id)
-            if self.mode == "cow":
-                return {epoch_id: self._merge_cow(table, batch)}
-            return self._write_frame(
-                table, batch, F.lit(epoch_id), todo,
-                write_tasks or self._epoch_write_tasks,
-            )
-
-        [res] = self._apply([epoch_id], t0, lambda todo: changes, write)
-        res.quarantined = n_bad
+        [res] = self._apply(
+            [epoch_id],
+            t0,
+            lambda todo: changes,
+            lambda t, todo, **kw: t.write_data_files_direct(
+                changes,
+                epoch=epoch_id,
+                target_tasks=write_tasks or self._epoch_write_tasks,
+                **kw,
+            ),
+        )
         return res

@@ -17,7 +17,10 @@ events the epoch held at two integer hashes per row; hashing every payload
 column cost about half of the bulk writer's CPU. Records written before
 ``fingerprint_kind`` existed hold such a content fingerprint and read back
 as "content"; exactly-once is decided on epoch ids and offsets only, so both
-kinds resume alike, and fingerprints compare only within one kind.
+kinds resume alike, and fingerprints compare only within one kind. The
+row hashes and their chunk sums come from one place, the writer kernel
+(`lake.table.change_batches` and the write generator it feeds); this module
+only folds (`combine_chunks`) and records them.
 Reference analogue: status-transition audit rows that make reprocessing
 detectable (``/root/reference/app/core/document_tracking.py:307-317``).
 """
@@ -28,9 +31,6 @@ import json
 import os
 import time
 from dataclasses import dataclass
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 #: fingerprint kind of new records; records without the field are "content"
 FINGERPRINT_KIND = "position"
@@ -47,11 +47,10 @@ class CommitRecord:
 
 @dataclass
 class BatchStats:
-    """Everything the exactly-once + lineage machinery needs for one epoch:
-    folded from the MOR writers' stats rows (`streaming.apply.epoch_stats`)
-    or aggregated by `batch_stats` on the COW route — either way grouped by
-    source partition, so the driver collects #source-partitions rows, never
-    data rows."""
+    """Everything the exactly-once + lineage machinery needs for one epoch,
+    folded from the writer tasks' stats rows (`streaming.apply.epoch_stats`)
+    — grouped by source partition, so the driver collects
+    #source-partitions rows, never data rows."""
 
     fingerprint: str
     offsets: dict[int, int]
@@ -67,90 +66,19 @@ class BatchStats:
     #: the watermark by the UTC offset). None when the batch is empty or
     #: carries no ts column.
     max_ts: int | None = None
-
-
-def position_hash():
-    """Per-row binlog-position hash; the file writer computes it bit-equal
-    in numpy (`functions.xxh64.xxh64_key`, chained) for int/long columns."""
-    return F.xxhash64(F.col("source_partition"), F.col("lsn"))
-
-
-def hash_chunk_exprs() -> list:
-    """Order-insensitive position fingerprint as THREE plain long sums.
-
-    It sums `position_hash`, not a payload hash: the position identifies
-    the event at a fraction of the cost of hashing every column.
-
-    The 64-bit row hash is split into 22+22+20-bit chunks and each chunk is
-    summed: commutative (stable under any partitioning/parallelism),
-    multiplicity-preserving (duplicates don't cancel, unlike XOR), and
-    overflow-safe under ANSI mode up to ~2x10^12 rows per batch — all in
-    whole-stage-codegen long arithmetic. A decimal(38,0) sum is semantically
-    equivalent but allocates a Decimal object per row, and at 16-32 threads
-    the resulting GC churn dominates the job (measured 2.6x CPU inflation).
-    """
-    h = position_hash()
-    return [
-        F.sum(h.bitwiseAND(F.lit(0x3FFFFF))).alias("h0"),
-        F.sum(
-            F.shiftrightunsigned(h, 22).bitwiseAND(F.lit(0x3FFFFF))
-        ).alias("h1"),
-        F.sum(F.shiftrightunsigned(h, 44)).alias("h2"),
-    ]
+    #: rows the writer kernel diverted to the dead-letter queue
+    quarantined: int = 0
 
 
 def combine_chunks(parts: list[tuple[int, int, int]]) -> str:
+    """Fold per-(task, source partition) chunk sums of the position hash
+    (the writer splits each 64-bit row hash into 22+22+20-bit chunks and
+    sums each: commutative, so stable under any partitioning, and
+    duplicates do not cancel) into the fingerprint's ``h0:h1:h2``."""
     s0 = sum(p[0] for p in parts)
     s1 = sum(p[1] for p in parts)
     s2 = sum(p[2] for p in parts)
     return f"{s0}:{s1}:{s2}"
-
-
-def batch_stats(changes: DataFrame) -> BatchStats:
-    """Single partial-aggregatable pass: position fingerprint (order-
-    insensitive chunked long sums of row hashes — stable under any
-    partitioning), per-partition max offsets, and the lineage counters."""
-    has_ts = "ts" in changes.columns
-    # unix_micros reads the internal UTC-micros value directly — immune to
-    # the session-timezone round trip a timestamp collect() would take
-    ts_expr = (
-        F.max(F.unix_micros("ts"))
-        if has_ts
-        else F.max(F.lit(None).cast("long"))
-    )
-    rows = (
-        changes.groupBy("source_partition")
-        .agg(
-            *hash_chunk_exprs(),
-            F.count("*").alias("n"),
-            F.max("lsn").alias("max_lsn"),
-            ts_expr.alias("max_ts"),
-            F.sum(F.when(F.col("op") != "delete", 1).otherwise(0)).alias("up"),
-            F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("del"),
-            F.approx_count_distinct("conv_id").alias("convs"),
-        )
-        .collect()
-    )
-    total_h = combine_chunks(
-        [(int(r["h0"]), int(r["h1"]), int(r["h2"])) for r in rows]
-    )
-    n = sum(int(r["n"]) for r in rows)
-    offsets = {int(r["source_partition"]): int(r["max_lsn"]) for r in rows}
-    lineage = [
-        (
-            int(r["source_partition"]),
-            int(r["n"]),
-            int(r["up"]),
-            int(r["del"]),
-            int(r["convs"]),
-        )
-        for r in rows
-    ]
-    ts_vals = [int(r["max_ts"]) for r in rows if r["max_ts"] is not None]
-    return BatchStats(
-        f"{total_h}:{n}", offsets, n, lineage,
-        max_ts=max(ts_vals) if ts_vals else None,
-    )
 
 
 class CommitLog:

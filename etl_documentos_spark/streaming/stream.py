@@ -3,19 +3,18 @@
 Batch replay walks ``{path}/epoch={k}`` directories in log order through
 the exactly-once `CdcPipeline`: ``replay_epochs`` one epoch per apply (the
 tail), ``replay_bulk`` all in one (the backfill). Every route ends in the
-pipeline's one apply core; they differ in the writer:
+pipeline's one apply core and its one change-batch kernel; they differ in
+how the kernel is fed:
 
-- local path, MOR pipeline (``replay_bulk``; ``replay_epochs`` without
-  quarantine): ``apply_epochs_bulk_files`` and the file writer
+- local path (``replay_bulk``; ``replay_epochs`` in every pipeline mode,
+  quarantine included): ``apply_epochs_bulk_files`` and the file feeder
   (``write_change_files_direct``), whose tasks read the epoch files with
   pyarrow — no row crosses the JVM→Python Arrow socket;
-- ``replay_epochs`` on COW or quarantine (DLQ) pipelines, or on a ``://``
-  path: ``apply_epoch`` on the epoch read as a DataFrame — the MOR
-  DataFrame writer (``write_data_files_direct``) or the COW merge; the COW
-  merge and the DLQ validity split are DataFrame operations, and a remote
-  path has no local listing;
+- ``replay_epochs`` on a ``://`` path: ``apply_epoch`` on the epoch read
+  as a DataFrame (the ``mapInArrow`` feeder, ``write_data_files_direct``)
+  — a remote path has no local listing;
 - ``replay_bulk`` on a ``://`` path: ``apply_epochs_bulk``, the DataFrame
-  writer over all epochs at once;
+  feeder over all epochs at once;
 - ``replay_source`` and the streaming tail: ``apply_epoch``.
 
 The streaming driver (``start_stream`` / ``run_stream_until_drained``) is the
@@ -88,9 +87,8 @@ def replay_epochs(
 ) -> list[EpochResult]:
     """Apply each epoch directory through the exactly-once path.
 
-    A MOR pipeline without quarantine applies each local epoch with
-    ``apply_epochs_bulk_files`` (the zero-IPC file writer of
-    ``replay_bulk``); COW, quarantine and ``://`` paths read it as a
+    Each local epoch applies with ``apply_epochs_bulk_files`` (the
+    zero-IPC file feeder of ``replay_bulk``); a ``://`` path reads it as a
     DataFrame into ``apply_epoch``. Both commit the same fingerprint.
 
     ``concurrency > 1`` (MOR mode only) overlaps epoch applies: the LWW
@@ -110,7 +108,6 @@ def replay_epochs(
         for f, e, n in epoch_files(events_path, list(files)):
             files[e].append((f, e))
             sizes[e] += n
-    by_file = local and pipeline.mode == "mor" and not pipeline.quarantine
 
     # Byte-proportional writer-task allocation across the in-flight window:
     # overlapped epochs split the cores in proportion to their input size,
@@ -129,7 +126,7 @@ def replay_epochs(
         return max(2, min(2 * p, round(share)))
 
     def one(ep: int) -> EpochResult:
-        if by_file:
+        if local:
             return pipeline.apply_epochs_bulk_files(
                 files[ep], schema=_file_schema(schema), epochs=[ep],
                 target_tasks=tasks_for(ep),
@@ -236,7 +233,7 @@ def replay_bulk(
     Per-epoch exactly-once records are preserved; the per-epoch driver
     overhead is paid once.
 
-    Local paths route through the zero-IPC file writer (see the module
+    Local paths route through the zero-IPC file feeder (see the module
     docstring); ``epoch`` comes from each file's directory name."""
     if epochs is None:
         epochs = list_epochs(events_path)

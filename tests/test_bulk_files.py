@@ -13,6 +13,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
@@ -57,10 +58,12 @@ def _pairs(events_path):
     ]
 
 
-def _pipeline(spark, root, num_buckets=8) -> CdcPipeline:
+def _pipeline(spark, root, num_buckets=8, quarantine=False) -> CdcPipeline:
     troot = str(root / "transcripts")
     LakeTable.create(troot, physical_schema(TRANSCRIPTS), num_buckets=num_buckets)
-    return CdcPipeline(spark, troot, str(root / "work"), mode="mor")
+    return CdcPipeline(
+        spark, troot, str(root / "work"), mode="mor", quarantine=quarantine
+    )
 
 
 def _records(pipe: CdcPipeline, epochs) -> dict:
@@ -99,31 +102,26 @@ def _assert_oracle_state(spark, pipe: CdcPipeline, stream_df) -> None:
     ]
 
 
-def test_files_path_bit_equals_dataframe_path(
-    spark, stream_df, events_path, tmp_path
-):
-    """Same input through apply_epochs_bulk (JVM data plane),
-    apply_epochs_bulk_files (pyarrow data plane) and one apply_epoch per
-    epoch (the DataFrame writer, epoch by epoch): identical commit records
-    (fingerprints and offsets), identical lineage rows including the
-    HyperLogLog conv_ids_touched, identical physical parquet schemas and
-    identical final state — the cross-path exactly-once guarantee."""
+def _three_routes(spark, events_path, tmp_path, quarantine=False):
+    """The same epochs through apply_epochs_bulk (DataFrame feeder, many
+    epochs), apply_epochs_bulk_files (file feeder) and one apply_epoch per
+    epoch (DataFrame feeder, epoch by epoch): ``[(pipeline, results)]``."""
     epochs = list_epochs(events_path)
-
-    pa_pipe = _pipeline(spark, tmp_path / "A")
+    pipes = [
+        _pipeline(spark, tmp_path / name, quarantine=quarantine)
+        for name in ("A", "B", "C")
+    ]
     changes = (
         spark.read.schema(BULK_SCHEMA)
         .option("basePath", events_path)
         .parquet(*[os.path.join(events_path, f"epoch={e}") for e in epochs])
     )
-    res_a = pa_pipe.apply_epochs_bulk(changes, epochs)
-
-    pb_pipe = _pipeline(spark, tmp_path / "B")
-    res_b = pb_pipe.apply_epochs_bulk_files(_pairs(events_path), schema=CHANGE_EVENTS)
-
-    pc_pipe = _pipeline(spark, tmp_path / "C")
+    res_a = pipes[0].apply_epochs_bulk(changes, epochs)
+    res_b = pipes[1].apply_epochs_bulk_files(
+        _pairs(events_path), schema=CHANGE_EVENTS
+    )
     res_c = [
-        pc_pipe.apply_epoch(
+        pipes[2].apply_epoch(
             spark.read.schema(CHANGE_EVENTS).parquet(
                 os.path.join(events_path, f"epoch={e}")
             ),
@@ -131,6 +129,30 @@ def test_files_path_bit_equals_dataframe_path(
         )
         for e in epochs
     ]
+    return list(zip(pipes, (res_a, res_b, res_c)))
+
+
+def _bucket_rows(spark, pipe: CdcPipeline) -> dict:
+    """Per bucket, the multiset of physical rows (tombstones included)."""
+    t = pipe.table
+    return {
+        b: Counter(tuple(r) for r in t.scan(spark, buckets=[b]).collect())
+        for b in t.live_buckets()
+    }
+
+
+def test_files_path_bit_equals_dataframe_path(
+    spark, stream_df, events_path, tmp_path
+):
+    """The two feeders of the one change-batch kernel agree: identical
+    commit records (fingerprints and offsets), identical lineage rows
+    including the HyperLogLog conv_ids_touched, row-equal data in every
+    bucket, identical physical parquet schemas and identical final state
+    — the cross-path exactly-once guarantee."""
+    epochs = list_epochs(events_path)
+    (pa_pipe, res_a), (pb_pipe, res_b), (pc_pipe, res_c) = _three_routes(
+        spark, events_path, tmp_path
+    )
 
     assert (
         sum(r.events for r in res_a)
@@ -147,6 +169,10 @@ def test_files_path_bit_equals_dataframe_path(
     ).distinct().count()
     assert _lineage(spark, pa_pipe) == lineage
     assert _lineage(spark, pc_pipe) == lineage
+    rows = _bucket_rows(spark, pb_pipe)
+    assert sum(sum(c.values()) for c in rows.values()) == stream_df.count()
+    assert _bucket_rows(spark, pa_pipe) == rows
+    assert _bucket_rows(spark, pc_pipe) == rows
 
     b = read_current(spark, pb_pipe.table)
     for other in (pa_pipe, pc_pipe):
@@ -156,6 +182,93 @@ def test_files_path_bit_equals_dataframe_path(
     fa = glob.glob(os.path.join(str(tmp_path / "A"), "transcripts", "data", "w-*", "*.parquet"))[0]
     fb = glob.glob(os.path.join(str(tmp_path / "B"), "transcripts", "data", "w-*", "*.parquet"))[0]
     assert pq.read_schema(fa) == pq.read_schema(fb)
+
+
+def test_files_path_bit_equals_dataframe_path_quarantine(
+    spark, stream_df, tmp_path
+):
+    """Quarantine pipelines on the three routes: the same rows divert to
+    the DLQ with the same reasons, the same ``quarantined`` counts per
+    epoch, and the same commit records and bucket data for the rest."""
+    poisoned = (
+        stream_df.withColumn(
+            "op",
+            F.when(F.col("lsn") % 97 == 0, "noop").otherwise(F.col("op")),
+        )
+        .withColumn(
+            "conv_id",
+            F.when(F.col("lsn") % 89 == 3, None).otherwise(F.col("conv_id")),
+        )
+        .withColumn(
+            "ts", F.when(F.col("lsn") % 83 == 7, None).otherwise(F.col("ts"))
+        )
+        .withColumn(
+            "lsn", F.when(F.col("lsn") % 79 == 5, None).otherwise(F.col("lsn"))
+        )
+    )
+    events = str(tmp_path / "poisoned")
+    datagen.write_epochs(poisoned, events, files_per_epoch=4)
+    epochs = list_epochs(events)
+    routes = _three_routes(spark, events, tmp_path, quarantine=True)
+
+    per_epoch = {
+        r["epoch"]: r["count"]
+        for r in poisoned.filter(
+            ~F.col("op").isin("insert", "update", "delete")
+            | F.col("conv_id").isNull()
+            | F.col("ts").isNull()
+            | F.col("lsn").isNull()
+        )
+        .groupBy("epoch")
+        .count()
+        .collect()
+    }
+    assert sum(per_epoch.values()) > 0
+
+    def dlq_rows(pipe):
+        return sorted(
+            repr(sorted(r.asDict().items())) for r in pipe.read_dlq().collect()
+        )
+
+    (pb_pipe, res_b) = routes[1]
+    assert {r.epoch_id: r.quarantined for r in res_b} == {
+        e: per_epoch.get(e, 0) for e in epochs
+    }
+    dlq = dlq_rows(pb_pipe)
+    assert len(dlq) == sum(per_epoch.values())
+    records = _records(pb_pipe, epochs)
+    rows = _bucket_rows(spark, pb_pipe)
+    for pipe, res in (routes[0], routes[2]):
+        assert [(r.epoch_id, r.quarantined) for r in res] == [
+            (r.epoch_id, r.quarantined) for r in res_b
+        ]
+        assert dlq_rows(pipe) == dlq
+        assert _records(pipe, epochs) == records
+        assert _bucket_rows(spark, pipe) == rows
+
+
+@pytest.mark.parametrize("route", ["apply_epoch", "replay_bulk"])
+def test_empty_stagings_leave_no_data_dirs(spark, tmp_path, route):
+    """Three epochs without rows commit without leaving an empty
+    ``data/w-*`` staging directory behind: the writer creates it with the
+    first data file."""
+    pipe = _pipeline(spark, tmp_path)
+    if route == "apply_epoch":
+        for e in range(3):
+            pipe.apply_epoch(spark.createDataFrame([], CHANGE_EVENTS), e)
+    else:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        events = str(tmp_path / "events")
+        for e in range(3):
+            os.makedirs(os.path.join(events, f"epoch={e}"))
+            pq.write_table(
+                to_arrow_schema(CHANGE_EVENTS).empty_table(),
+                os.path.join(events, f"epoch={e}", "part-0.parquet"),
+            )
+        replay_bulk(pipe, events)
+    assert all(pipe.commitlog.is_committed(e) for e in range(3))
+    assert glob.glob(os.path.join(pipe.table_root, "data", "w-*")) == []
 
 
 def test_files_path_cross_path_restart_dedups(

@@ -99,7 +99,7 @@ def test_logical_overwrite_refused_then_skipped(spark, mor_table):
     cow = spark.createDataFrame(
         [ev("update", "c1", 0, 40, 9, "cow")], CHANGE_EVENTS
     )
-    merge_into(spark, table, cow, assume_all_buckets=False)
+    merge_into(spark, table, cow)
     table._refresh()
     with pytest.raises(ValueError, match="logical overwrite"):
         read_changes(spark, table, 1).collect()

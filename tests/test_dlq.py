@@ -113,14 +113,18 @@ def test_clean_epoch_writes_no_dlq(spark, dlq_pipeline):
         pipe.read_dlq()
 
 
-def test_replay_epochs_keeps_quarantine_on_dataframe_route(
-    spark, dlq_pipeline, tmp_path
+def test_replay_epochs_quarantines_on_file_route(
+    spark, dlq_pipeline, tmp_path, monkeypatch
 ):
-    """replay_epochs routes a quarantine pipeline through apply_epoch (the
-    validity split is a DataFrame filter), so malformed rows in an epoch
-    file still divert to the DLQ instead of reaching the file writer."""
+    """replay_epochs applies a quarantine pipeline's local epochs through
+    the file feeder — the DataFrame feeder never runs — and the kernel's
+    validity mask still diverts the malformed rows to the DLQ."""
     from etl_documentos_spark.streaming.stream import replay_epochs
 
+    def dataframe_writer(*a, **kw):
+        raise AssertionError("replay_epochs took the DataFrame writer")
+
+    monkeypatch.setattr(LakeTable, "write_data_files_direct", dataframe_writer)
     good, bad = _rows()
     events = str(tmp_path / "events")
     spark.createDataFrame(good + bad, SCHEMA).write.parquet(
@@ -133,3 +137,36 @@ def test_replay_epochs_keeps_quarantine_on_dataframe_route(
     assert read_current(spark, dlq_pipeline.table).count() == len(
         {(e[1], e[2]) for e in good}
     )
+
+
+@pytest.mark.parametrize("route", ["apply_epoch", "replay_epochs"])
+def test_null_lsn_quarantined_behind_bootstrap_fence(
+    spark, dlq_pipeline, tmp_path, route
+):
+    """With a bootstrap watermark set, a null-``lsn`` row is quarantined
+    like any invalid row: the validity mask runs before the fence, which
+    would otherwise drop it silently (``NULL > wm`` is not true)."""
+    from etl_documentos_spark.streaming.stream import replay_epochs
+
+    pipe = dlq_pipeline
+    snapshot = spark.createDataFrame(
+        [("conv_9", 0, "user", "snap", None, T0)],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp",
+    )
+    pipe.bootstrap(snapshot, watermark_lsn=10)
+    rows = [
+        ("insert", "conv_0", 0, "user", "good", None, T0, 20, 0),
+        ("insert", "conv_1", 0, "user", "no lsn", None, T0, None, 0),
+        ("frobnicate", "conv_2", 0, "user", "bad op", None, T0, 21, 0),
+    ]
+    df = spark.createDataFrame(rows, SCHEMA)
+    if route == "apply_epoch":
+        res = pipe.apply_epoch(df, 1)
+    else:
+        events = str(tmp_path / "events")
+        df.write.parquet(os.path.join(events, "epoch=1"))
+        (res,) = replay_epochs(pipe, events, epochs=[1])
+    assert (res.events, res.quarantined) == (1, 2)
+    reasons = sorted(r["_dlq_reason"] for r in pipe.read_dlq([1]).collect())
+    assert reasons == ["null_lsn", "unknown_op"]

@@ -147,7 +147,7 @@ def test_logical_overwrite_raises_then_full_refresh_resyncs(
     cow = spark.createDataFrame(
         [ev("update", "c1", 1, 40, 9, "cow-path")], CHANGE_EVENTS
     )
-    merge_into(spark, src, cow, assume_all_buckets=False)
+    merge_into(spark, src, cow)
     src._refresh()
     with pytest.raises(ValueError, match="logical overwrite"):
         mv.refresh(spark, src)

@@ -27,7 +27,10 @@ def main() -> None:
     ap.add_argument("--events", required=True, help="change-stream directory")
     ap.add_argument("--table", required=True, help="lake table root")
     ap.add_argument("--workdir", required=True, help="commits/lineage/metrics dir")
-    ap.add_argument("--mode", default="mor", choices=["mor", "cow"])
+    ap.add_argument("--mode", default="mor", choices=["mor", "cow"],
+                    help="mor: append delta files, compact a bucket past "
+                    "the file threshold; cow: append, then compact every "
+                    "bucket an epoch touched")
     ap.add_argument("--num-buckets", type=int, default=32)
     ap.add_argument("--stream", action="store_true",
                     help="tail via Structured Streaming (else batch replay)")
