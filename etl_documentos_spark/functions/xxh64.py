@@ -14,7 +14,8 @@ files must land where pruned reads look; `xxh64_key` hashes the key once,
 `bucket_from_hash` derives the bucket), and the position fingerprint
 ``xxhash64(source_partition, lsn)`` (`streaming.commitlog`): a binlog event
 is identified by its position, so two integers per row are hashed instead
-of every payload byte (`xxh64_chain`, ~40x the cost on transcript text).
+of every payload byte (`xxh64_chain`, ~40x the cost on transcript text,
+which compaction uses only to break exact version ties).
 Parity with Spark is pinned by ``tests/test_xxh64_parity.py`` over
 adversarial inputs (empty strings, multi-byte UTF-8, lengths straddling
 every block boundary, ±2^63 longs).
@@ -398,10 +399,12 @@ def xxh64_chain(tbl, cols: list[str], seed: int = 42) -> np.ndarray:
     multi-column form (HashExpression: each column's hash seeds the next;
     a NULL value leaves the running hash untouched).
 
-    Off the write path: epoch fingerprints hash the binlog position
-    (`xxh64_key` over ``source_partition`` then ``lsn``), not the payload.
-    Kept only for ``perfbench/layers.py``, which times it; parity pinned
-    in tests/test_xxh64_parity.py.
+    The compaction kernel's tie-break (`operators.merge.lww_arrow`): rows
+    that tie a key's winning ``(ts, _lsn)`` are ranked, like Spark's
+    ``lww._version_struct``, by this hash over every other column in
+    schema order, computed for the tied rows only. Epoch fingerprints do
+    not use it (they hash the binlog position with `xxh64_key`). Parity
+    pinned in tests/test_xxh64_parity.py.
 
     Type dispatch mirrors XxHash64Expression: string → hashUnsafeBytes of
     UTF-8; long/timestamp → hashLong (a timestamp's hash input is its

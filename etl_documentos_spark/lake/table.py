@@ -35,6 +35,7 @@ import contextlib
 import json
 import os
 import re
+import threading
 import time
 import uuid
 from dataclasses import dataclass
@@ -44,6 +45,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _HINT = "version-hint.text"
+
+#: the commit protocol each thread's open transaction entered with, per
+#: table handle (``id``): `LakeTable._commit_txn` pins it and
+#: `LakeTable._write_metadata` honors it. Thread-local, so two threads
+#: committing through one handle never see (or clear) each other's pin.
+_TXN_MODE = threading.local()
 
 
 class CommitConflictError(RuntimeError):
@@ -1129,9 +1136,7 @@ class LakeTable:
         permanent data loss."""
         if not files:
             return spark.createDataFrame([], self.schema)
-        ren = self._meta.get("renamed_columns", {})
-        live = {f.name for f in self.schema.fields}
-        ren = {k: v for k, v in ren.items() if k in live}
+        ren = self._renamed()
         if not ren:
             return spark.read.schema(self.schema).parquet(*files)
         # Renamed columns: files written before the rename physically hold
@@ -1153,6 +1158,43 @@ class LakeTable:
             for f in cur.fields
         ]
         return df.select(*cols)
+
+    def _renamed(self) -> dict[str, list[str]]:
+        """Live columns' historical names from the rename history, oldest
+        first: ``{current name: [older names]}``."""
+        live = {f.name for f in self.schema.fields}
+        ren = self._meta.get("renamed_columns", {})
+        return {k: v for k, v in ren.items() if k in live}
+
+    @staticmethod
+    def read_data_files_arrow(files: list[str], fields: list, renamed: dict):
+        """The pyarrow twin of `_read_data_files`: one threaded
+        ``pyarrow.dataset`` read of ``files`` projected onto ``fields``,
+        the current schema as (name, `_arrow_type`) pairs. Columns a file
+        lacks (added later) read as null; a renamed column reads every
+        historical name in ``renamed`` (`_renamed`) too and folds them
+        back with the same reverse-history coalesce. Returns a pyarrow
+        Table with exactly ``fields``."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        types = dict(fields)
+        read = list(fields) + [
+            (h, types[new]) for new, hist in renamed.items() for h in hist
+        ]
+        tbl = ds.dataset(files, schema=pa.schema(read), format="parquet").to_table()
+        if not renamed:
+            return tbl
+        return pa.table(
+            [
+                pc.coalesce(tbl[n], *[tbl[h] for h in reversed(renamed[n])])
+                if n in renamed
+                else tbl[n]
+                for n, _ in fields
+            ],
+            schema=pa.schema(fields),
+        )
 
     @staticmethod
     def _stats_overlap(st: dict | None, prune: dict[str, tuple]) -> bool:
@@ -1208,11 +1250,8 @@ class LakeTable:
                     self._refresh()
                     if self.commit_mode == "cas":
                         continue  # flipped under us: redo as CAS
-                    self._txn_commit_mode = "flock"
-                    try:
+                    with self._pin_txn_mode("flock"):
                         return body()
-                    finally:
-                        del self._txn_commit_mode
             else:
                 last: Exception | None = None
                 flipped = False
@@ -1221,14 +1260,12 @@ class LakeTable:
                     if self.commit_mode != "cas":
                         flipped = True
                         break
-                    self._txn_commit_mode = "cas"
                     try:
-                        return body()
+                        with self._pin_txn_mode("cas"):
+                            return body()
                     except CommitConflictError as e:
                         last = e
                         time.sleep(min(0.002 * attempt, 0.05))
-                    finally:
-                        del self._txn_commit_mode
                 if flipped:
                     continue  # flipped under us: redo under the lock
                 raise CommitConflictError(
@@ -1238,6 +1275,21 @@ class LakeTable:
             f"commit.mode flipped repeatedly during a transaction on "
             f"{self.root}"
         )
+
+    @contextlib.contextmanager
+    def _pin_txn_mode(self, mode: str):
+        """Pin this thread's transaction on this handle to ``mode``
+        (`_TXN_MODE`); a nested pin restores the outer one on exit."""
+        modes = _TXN_MODE.__dict__.setdefault("modes", {})
+        outer = modes.get(id(self))
+        modes[id(self)] = mode
+        try:
+            yield
+        finally:
+            if outer is None:
+                del modes[id(self)]
+            else:
+                modes[id(self)] = outer
 
     def _write_metadata(self) -> None:
         """Publish current in-memory metadata: sharded manifests + pointer.
@@ -1280,7 +1332,9 @@ class LakeTable:
         # honor the protocol the surrounding transaction ENTERED with
         # (_commit_txn pins it); fall back to the property for callers
         # outside a transaction (create, initial bootstrap)
-        mode = getattr(self, "_txn_commit_mode", None) or self.commit_mode
+        mode = (
+            getattr(_TXN_MODE, "modes", {}).get(id(self)) or self.commit_mode
+        )
         if mode == "cas":
             # optimistic commit point: put-if-absent of the next version,
             # atomic WITH its content — write the full JSON to a private
@@ -1295,8 +1349,6 @@ class LakeTable:
             # publish the other's content and report success for a commit
             # that was never persisted, and the loser's cleanup would
             # mask its CommitConflictError with FileNotFoundError
-            import threading
-
             tmp = path + f".stage{os.getpid()}.{threading.get_ident()}"
             with open(tmp, "w") as f:
                 json.dump(meta_out, f)
@@ -1336,7 +1388,10 @@ class LakeTable:
             cur = 0
         if v <= cur:
             return
-        tmp = os.path.join(self.root, _HINT + f".tmp{os.getpid()}")
+        # pid + thread id: two threads of one process may advance at once
+        tmp = os.path.join(
+            self.root, _HINT + f".tmp{os.getpid()}.{threading.get_ident()}"
+        )
         with open(tmp, "w") as f:
             f.write(str(v))
         os.replace(tmp, os.path.join(self.root, _HINT))

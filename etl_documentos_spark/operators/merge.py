@@ -32,13 +32,21 @@ tasks. There is no global sort anywhere.
 
 from __future__ import annotations
 
+import logging
+import os
+import time
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_documentos_spark.lake.table import LakeTable, SpecConflictError
+from etl_documentos_spark.lake.table import (
+    LakeTable,
+    SpecConflictError,
+    _arrow_type,
+)
 from etl_documentos_spark.operators.lww import lww_dedup
 from etl_documentos_spark.schemas import KEY_COLS
 
@@ -48,6 +56,8 @@ SYSTEM_COLS = [
     T.StructField("_lsn", T.LongType(), True),
 ]
 SYSTEM_COL_NAMES = [f.name for f in SYSTEM_COLS]
+
+_log = logging.getLogger("etl_documentos_spark")
 
 
 def physical_schema(logical: T.StructType) -> T.StructType:
@@ -255,20 +265,25 @@ def compact(
 ) -> None:
     """Rewrite buckets with the LWW reduction applied (read-optimize).
 
-    Equivalent to the COW merge with an empty batch: one hash aggregation
-    per key over the bucket's base+delta files, then a bucketed rewrite.
-    ``expire_tombstones_before``: optionally drop delete tombstones older
-    than the lateness watermark (they exist only to fence late updates).
-    The bound is EPOCH MICROSECONDS (int) and is compared against
-    ``unix_micros(ts)`` — both sides live in the UTC-micros domain, so the
-    comparison is independent of ``spark.sql.session.timeZone`` (a naive
-    timestamp literal would be re-interpreted in the session zone and could
-    expire tombstones hours early in a non-UTC session).
+    Equivalent to the COW merge with an empty batch: per key, the row with
+    the greatest ``(ts, _lsn, payload hash)`` survives; the rewrite is
+    sorted by key and commits as one maintenance overwrite
+    (`_compact_once`). ``expire_tombstones_before``: optionally drop
+    delete tombstones older than the lateness watermark (they exist only
+    to fence late updates). The bound is EPOCH MICROSECONDS (int) and is
+    compared against ``unix_micros(ts)`` — both sides live in the
+    UTC-micros domain, so the comparison is independent of
+    ``spark.sql.session.timeZone``; a tombstone with a NULL ``ts`` is
+    dropped too.
 
-    ``target_file_bytes``: output-file sizing for the rewrite (per-bucket
-    salt count is capped at ``ceil(bucket_bytes / target)``) — compaction is
-    a read-optimize pass, so it must REDUCE file counts on small buckets,
-    not re-fragment them at the parallel write width.
+    ``target_file_bytes``: output-file sizing. Target buckets totalling at
+    most this (and at most `ARROW_COMPACT_MAX_BYTES`) are reduced in the
+    driver by the Arrow kernel (`compact_bucket`), one file per bucket.
+    Larger compactions, ``zorder=`` and tables with a column type Arrow
+    does not map take the Spark rewrite, whose per-bucket salt count is
+    capped at ``ceil(bucket_bytes / target)`` — compaction is a
+    read-optimize pass, so it must REDUCE file counts on small buckets,
+    not re-fragment them.
 
     Split-safe: retried whole against fresh metadata on ``SpecConflictError``
     (same contract as ``merge_into``).
@@ -285,6 +300,14 @@ def compact(
     raise SpecConflictError("spec kept changing across 5 compact retries")
 
 
+#: the most parquet bytes one compaction reduces in the driver's memory,
+#: the size the kernel's peak was measured at: one 129 MiB snappy bucket
+#: of text-heavy rows (293k rows, ~1.4 KB of decoded text each, 3x its
+#: file bytes) raised the driver's RSS high-water mark by 1.15 GB and took
+#: 2.6 s. Larger compactions take the Spark rewrite, which can spill.
+ARROW_COMPACT_MAX_BYTES = 128 << 20
+
+
 def _compact_once(
     spark: SparkSession,
     table: LakeTable,
@@ -293,7 +316,19 @@ def _compact_once(
     target_file_bytes: int,
     zorder: tuple[str, ...] | None = None,
 ) -> None:
+    """One compaction against the current snapshot, committed as ONE
+    maintenance overwrite of the target buckets.
+
+    Routes: the Arrow kernel `compact_bucket`, run in the driver one
+    bucket at a time (``driver``), when the target buckets total at most
+    ``target_file_bytes`` and `ARROW_COMPACT_MAX_BYTES` and every column
+    has an Arrow type; else the Spark ``lww_dedup`` + range-partitioned
+    sorted rewrite (`_spark_rewrite`, ``spark``), which ``zorder=``
+    always takes. Logs one line per compaction on the
+    ``etl_documentos_spark`` logger."""
+    t0 = time.perf_counter()
     target = table.live_buckets() if buckets is None else buckets
+    spec = table.spec_fingerprint()
     # capture the exact file lists this rewrite reads: the commit replaces
     # only these, so an append landing concurrently (another process) in a
     # target bucket survives as a delta file instead of being dropped
@@ -302,8 +337,108 @@ def _compact_once(
         for b, fs in table.current_snapshot.files.items()
         if int(b) in target
     }
+    in_bytes = sum(table.bucket_sizes(target).values())
+    fields = None if zorder else _arrow_fields(spark, table)
+    if fields is not None and in_bytes <= min(
+        target_file_bytes, ARROW_COMPACT_MAX_BYTES
+    ):
+        route = "driver"
+        files, rows_in, rows_out = _arrow_rewrite(
+            table, fields, expected, expire_tombstones_before
+        )
+    else:
+        route = "spark"
+        files, rows_in, rows_out = _spark_rewrite(
+            spark, table, target, expected, expire_tombstones_before,
+            target_file_bytes, zorder,
+        )
+    table.commit_overwrite(
+        files,
+        target,
+        expected=expected,
+        staged_spec=spec,
+        new_stats=table._collect_stats(files),
+        maintenance=True,  # logical no-op: changelog readers skip it
+    )
+    _log.info(
+        "compact buckets=%d route=%s files=%d->%d rows=%d->%d "
+        "bytes=%d->%d ms=%.1f",
+        len(target),
+        route,
+        sum(len(fs) for fs in expected.values()),
+        sum(len(fs) for fs in files.values()),
+        rows_in,
+        rows_out,
+        in_bytes,
+        sum(
+            os.path.getsize(os.path.join(table.root, p))
+            for fs in files.values()
+            for p in fs
+        ),
+        (time.perf_counter() - t0) * 1e3,
+    )
+
+
+def _arrow_fields(spark: SparkSession, table: LakeTable):
+    """The table schema as (name, Arrow type) pairs, or None when a column
+    has no Arrow mapping (`_arrow_type`)."""
+    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
+    try:
+        return [(f.name, _arrow_type(f.dataType, tz)) for f in table.schema.fields]
+    except TypeError:
+        return None
+
+
+def _arrow_rewrite(
+    table: LakeTable,
+    fields: list,
+    expected: dict[str, list[str]],
+    expire_tombstones_before,
+):
+    """The driver route: `compact_bucket` over each target bucket in turn,
+    staged into one ``data/w-<uuid>`` dir (no commit). Returns
+    ``(files, rows_in, rows_out)``."""
+    rel = f"data/w-{uuid.uuid4().hex[:12]}"
+    expire = (
+        None if expire_tombstones_before is None else int(expire_tombstones_before)
+    )
+    files, rows_in, rows_out = {}, 0, 0
+    for b, fs in expected.items():
+        if not fs:
+            continue
+        names, n_in, n_out = compact_bucket(
+            table, int(b), [os.path.join(table.root, p) for p in fs],
+            os.path.join(table.root, rel), fields, expire,
+        )
+        if names:
+            files[b] = [f"{rel}/{n}" for n in names]
+        rows_in += n_in
+        rows_out += n_out
+    return files, rows_in, rows_out
+
+
+def _footer_rows(root: str, rels: list[str]) -> int:
+    """Row count of data files from their parquet footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(os.path.join(root, p)).num_rows for p in rels)
+
+
+def _spark_rewrite(
+    spark: SparkSession,
+    table: LakeTable,
+    buckets: list[int],
+    expected: dict[str, list[str]],
+    expire_tombstones_before,
+    target_file_bytes: int,
+    zorder: tuple[str, ...] | None,
+):
+    """The Spark compaction route: ``lww_dedup`` over the buckets' scan,
+    the tombstone filter, then a range-partitioned sorted write. Stages
+    the files (no commit). Returns ``(files, rows_in, rows_out)``, the
+    row counts from the parquet footers."""
     merged = lww_dedup(
-        table.scan(spark, buckets=target),
+        table.scan(spark, buckets=buckets),
         key_cols=KEY_COLS,
         order_cols=("ts", "_lsn"),
     )
@@ -313,17 +448,16 @@ def _compact_once(
             | (F.unix_micros(F.col("ts")) >= F.lit(int(expire_tombstones_before)))
         )
     salts = adaptive_salts(
-        table, target, spark, target_file_bytes=target_file_bytes
+        table, buckets, spark, target_file_bytes=target_file_bytes
     )
-    # clustered rewrite: compaction is the read-optimize pass. Default:
-    # sort by key — files cover contiguous (conv_id, turn_idx) ranges, the
-    # manifest min/max stats are tight, and point lookups prune to ~1
-    # file. ``zorder=(colA, colB, ...)``: sort by the Morton interleave of
-    # per-bucket quantile codes instead (operators/zorder.py) — every
-    # dimension's per-file range shrinks to ~sqrt of the bucket, so point
-    # lookups AND range slices on a second dimension both skip files
-    # (record the dims in the ``stats.cols`` property to activate the
-    # pruning).
+    # clustered rewrite: sort by key — files cover contiguous (conv_id,
+    # turn_idx) ranges, the manifest min/max stats are tight, and point
+    # lookups prune to ~1 file. ``zorder=(colA, colB, ...)``: sort by the
+    # Morton interleave of per-bucket quantile codes instead
+    # (operators/zorder.py) — every dimension's per-file range shrinks to
+    # ~sqrt of the bucket, so point lookups AND range slices on a second
+    # dimension both skip files (record the dims in the ``stats.cols``
+    # property to activate the pruning).
     if zorder:
         from etl_documentos_spark.operators.zorder import (
             ZCLUSTER_COL,
@@ -336,14 +470,145 @@ def _compact_once(
         cluster_cols: tuple[str, ...] = (ZCLUSTER_COL,)
     else:
         cluster_cols = KEY_COLS
-    table.overwrite_buckets(
-        merged,
-        target,
-        salts=salts,
-        expected=expected,
-        sort_cols=cluster_cols,
-        maintenance=True,  # logical no-op: changelog readers skip it
+    files = table._write_data(merged, salts=salts, sort_cols=cluster_cols)
+    return (
+        files,
+        _footer_rows(
+            table.root, [p for b in buckets for p in expected.get(str(b), [])]
+        ),
+        _footer_rows(table.root, [p for fs in files.values() for p in fs]),
     )
+
+
+#: the LWW version order, lowest first: a NULL sorts below every value
+_VERSION_COLS = ("ts", "_lsn")
+
+#: rows per output chunk (and parquet row group) of `compact_bucket`
+_CHUNK_ROWS = 1 << 15
+
+
+def lww_arrow(tbl):
+    """``lww_dedup`` over a pyarrow Table of physical rows: the indices of
+    the row per ``KEY_COLS`` with the greatest ``(ts, _lsn)``, NULL
+    lowest, in key order.
+
+    One sort by ``(*KEY_COLS, ts, _lsn)`` with nulls first keeps the last
+    row of each key; only the key and version columns are reordered.
+    Rows that tie the winner on ``(ts, _lsn)`` are broken the way Spark's
+    ``_version_struct`` does: the greatest signed ``xxhash64`` over every
+    other column in schema order (`xxh64_chain`), computed for the tied
+    rows only; the later row wins a full tie."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    from etl_documentos_spark.functions.xxh64 import xxh64_chain
+
+    n = tbl.num_rows
+    if n == 0:
+        return np.zeros(0, np.int64)
+    cols = [*KEY_COLS, *_VERSION_COLS]
+    order = pc.sort_indices(
+        tbl.select(cols),
+        sort_keys=[(c, "ascending") for c in cols],
+        null_placement="at_start",
+    )
+    srt = tbl.select(cols).take(order)
+    order = order.to_numpy()
+
+    def same(c):  # row i equals row i + 1 on column c (NULL == NULL)
+        a, b = srt[c].slice(0, n - 1), srt[c].slice(1)
+        eq = pc.or_(
+            pc.fill_null(pc.equal(a, b), False),
+            pc.and_(pc.is_null(a), pc.is_null(b)),
+        )
+        return eq.to_numpy(zero_copy_only=False).astype(bool)
+
+    same_key = np.logical_and.reduce([same(c) for c in KEY_COLS])
+    keep = np.flatnonzero(np.append(~same_key, True))  # last row per key
+    tie = same_key & np.logical_and.reduce([same(c) for c in _VERSION_COLS])
+    if tie.any():
+        run = np.concatenate(([0], np.cumsum(~tie)))  # (key, version) runs
+        win = run[keep]
+        multi = np.bincount(run)[win] > 1
+        if multi.any():
+            cand = np.flatnonzero(np.isin(run, win[multi]))
+            payload = [c for c in tbl.column_names if c not in _VERSION_COLS]
+            h = xxh64_chain(tbl.take(order[cand]), payload)
+            o = np.lexsort((cand, h, run[cand]))  # by run, hash, position
+            r = run[cand][o]
+            keep[multi] = cand[o][np.append(r[1:] != r[:-1], True)]
+    return order[keep]
+
+
+def compact_bucket(
+    table: LakeTable,
+    bucket: int,
+    files: list[str],
+    out: str,
+    fields: list,
+    expire: int | None,
+) -> tuple[list[str], int, int]:
+    """The Arrow compaction kernel: one bucket's snapshot ``files`` → its
+    LWW-reduced, key-sorted data file(s) in the staging dir ``out``.
+
+    Steps: threaded read projected onto ``fields`` (the schema as
+    (name, Arrow type) pairs; `LakeTable.read_data_files_arrow`),
+    `lww_arrow`, tombstone expiry (``_deleted`` and ``ts`` NULL or below
+    ``expire``, epoch micros, when set), then ONE file
+    ``out/b<bucket>-<uuid>.parquet`` in the table's codec, or one per
+    ``write.max-records-per-file`` rows when that is set. Output rows are
+    gathered and written in `_CHUNK_ROWS` row groups, so memory holds
+    the decoded input plus one chunk of output. Columns whose distinct count in a
+    file's first chunk is at most a tenth of its rows are
+    dictionary-encoded; the rest are not, as a dictionary only adds
+    bytes to near-unique columns (text, ``_lsn``).
+
+    Returns ``(file names in out, rows_in, rows_out)``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    # one chunk per column: a take from a chunked column concatenates it
+    tbl = LakeTable.read_data_files_arrow(
+        files, fields, table._renamed()
+    ).combine_chunks()
+    keep = lww_arrow(tbl)
+    if expire is not None:
+        last = tbl.select(["_deleted", "ts"]).take(keep)
+        ts = last["ts"]
+        old = pc.or_(
+            pc.is_null(ts),
+            pc.fill_null(pc.less(pc.cast(ts, pa.int64()), expire), False),
+        )
+        drop = pc.and_(pc.fill_null(last["_deleted"], False), old)
+        keep = keep[~np.asarray(drop.to_numpy(zero_copy_only=False), bool)]
+    n = len(keep)
+    per_file = int(table.get_property("write.max-records-per-file", 0)) or n or 1
+    names = []
+    for lo in range(0, n, per_file):
+        idx = keep[lo:lo + per_file]
+        first = tbl.take(idx[:_CHUNK_ROWS])
+        dict_cols = [
+            c for c in first.column_names
+            if pc.count_distinct(first[c]).as_py() * 10 <= first.num_rows
+        ]
+        name = f"b{bucket:05d}-{uuid.uuid4().hex[:16]}.parquet"
+        os.makedirs(out, exist_ok=True)
+        with pq.ParquetWriter(
+            os.path.join(out, name),
+            first.schema,
+            compression=table.write_compression(),
+            use_dictionary=dict_cols,
+        ) as w:
+            w.write_table(first, row_group_size=_CHUNK_ROWS)
+            del first
+            for c in range(_CHUNK_ROWS, len(idx), _CHUNK_ROWS):
+                w.write_table(
+                    tbl.take(idx[c:c + _CHUNK_ROWS]), row_group_size=_CHUNK_ROWS
+                )
+        names.append(name)
+    return names, tbl.num_rows, n
 
 
 def read_current(
@@ -368,12 +633,27 @@ def read_current(
 
 
 def bucket_of(spark: SparkSession, table: LakeTable, value) -> int:
-    """The bucket id a key value hashes to, evaluated with the TABLE'S OWN
-    transform expression (split-bucket aware) on a one-row plan — so driver
-    code and executor writes can never disagree on the hash. One tiny local
-    job, same as Iceberg evaluating its bucket transform for a lookup."""
+    """The bucket id a key value hashes to under the table's transform
+    (split-bucket aware). A string or integer key is computed on the
+    driver with no Spark job: the value as the bucket column's Arrow type,
+    hashed by `xxh64_key` and bucketed by `bucket_from_hash` — the same
+    functions the writers bucket rows with, bit-equal to
+    ``LakeTable.bucket_expr``. Any other key type evaluates the table's own
+    ``bucket_expr`` over the value, cast to the column's type, on a
+    one-row plan."""
+    import pyarrow as pa
+
+    from etl_documentos_spark.functions.xxh64 import bucket_from_hash, xxh64_key
+
+    dt = table.schema[table.bucket_col].dataType
+    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
+    try:
+        h = xxh64_key(pa.array([value], _arrow_type(dt, tz)))
+    except TypeError:
+        lit = F.lit(value).cast(dt)
+        return int(spark.range(1).select(table.bucket_expr(lit)).first()[0])
     return int(
-        spark.range(1).select(table.bucket_expr(F.lit(value))).first()[0]
+        bucket_from_hash(h, table.num_buckets, table.split_buckets or None)[0]
     )
 
 

@@ -121,6 +121,45 @@ def test_cas_mode_uses_no_flock(tmp_path, monkeypatch):
     assert final.current_snapshot.snapshot_id == 21
 
 
+def test_cas_threads_on_one_handle_pin_their_own_mode(tmp_path):
+    """Two threads committing through ONE handle in CAS mode, both held
+    inside ``body()`` at once: each thread's pinned commit mode is its own
+    (thread-local), so neither clears the other's and both commits land."""
+    import threading
+
+    root = str(tmp_path / "t")
+    LakeTable.create(
+        root, SCHEMA, num_buckets=2, properties={"commit.mode": "cas"}
+    )
+    table = LakeTable.load(root)
+    barrier = threading.Barrier(2)
+    waited: set[str] = set()
+    errors: list[BaseException] = []
+
+    def commit(key: str) -> None:
+        def body():
+            if key not in waited:  # only the first attempt waits
+                waited.add(key)
+                barrier.wait(timeout=30)
+            table._meta["properties"][key] = "v"
+            table._meta["metadata_version"] += 1
+            table._write_metadata()
+
+        try:
+            table._commit_txn(body)
+        except BaseException as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=commit, args=(k,)) for k in ("a", "b")]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(60)
+    assert not errors, errors
+    props = LakeTable.load(root).properties
+    assert props.get("a") == "v" and props.get("b") == "v", props
+
+
 def test_cas_hint_is_floor_probe_finds_newest(tmp_path):
     """A regressed version hint (possible when two unlocked winners race
     the pointer swap) must not strand readers: load() probes forward."""

@@ -11,6 +11,8 @@ int32 hashInt path.
 
 from __future__ import annotations
 
+import datetime
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -99,6 +101,45 @@ def test_bucket_parity_vs_bucket_expr(spark, split, tmp_path):
     want = [r[0] for r in df.select(t.bucket_expr().alias("b")).collect()]
     got = spark_bucket(pa.array(keys), t.num_buckets, split_buckets=split)
     assert got.tolist() == want
+
+
+@pytest.mark.parametrize("split", [None, [0, 1, 2]])
+@pytest.mark.parametrize(
+    "dtype,values",
+    [
+        ("string", ["conv-000123", "", "café", "你好世界", "\U0001f600", None]),
+        ("int", [0, 1, -7, 2**31 - 1, -(2**31), None]),
+        ("long", [0, 5, -1, 2**40, -(2**63), 2**63 - 1, None]),
+        # not hashed on the driver: the one-row bucket_expr plan
+        ("date", [datetime.date(2024, 1, 2), datetime.date(1969, 12, 31), None]),
+    ],
+)
+def test_bucket_of_parity_vs_bucket_expr(spark, tmp_path, dtype, values, split):
+    """`merge.bucket_of` (driver-side, no job) == ``bucket_expr`` over the
+    value as the bucket column's type — where the writers put the row.
+    (A bare ``F.lit`` of a small Python int is an IntegerType literal, so
+    on a long column it would hash as an int, not as the stored long.)"""
+    from pyspark.sql import types as T
+
+    from etl_documentos_spark.lake.table import LakeTable
+    from etl_documentos_spark.operators.merge import bucket_of
+
+    t = LakeTable.create(
+        str(tmp_path / "t"),
+        schema=T.StructType([T.StructField("k", T._parse_datatype_string(dtype))]),
+        bucket_col="k",
+        num_buckets=4,
+    )
+    if split:
+        t._meta["partition_spec"]["split_buckets"] = split
+    want = list(
+        spark.range(1)
+        .select(*[t.bucket_expr(F.lit(v).cast(dtype)) for v in values])
+        .first()
+    )
+    assert [bucket_of(spark, t, v) for v in values] == want
+    if split:
+        assert set(want) & {0, 1, 2, 4, 5, 6}, "no key in a split bucket"
 
 
 def test_randomized_string_parity(spark):
