@@ -32,7 +32,9 @@ immutable-file lake table so updates become set-oriented partition rewrites.
 from __future__ import annotations
 
 import contextlib
+import heapq
 import json
+import logging
 import os
 import re
 import threading
@@ -46,11 +48,17 @@ from pyspark.sql import types as T
 
 _HINT = "version-hint.text"
 
-#: the commit protocol each thread's open transaction entered with, per
-#: table handle (``id``): `LakeTable._commit_txn` pins it and
-#: `LakeTable._write_metadata` honors it. Thread-local, so two threads
-#: committing through one handle never see (or clear) each other's pin.
-_TXN_MODE = threading.local()
+_log = logging.getLogger("etl_documentos_spark")
+
+#: each thread's open transaction per table handle (``id``), as ``[commit
+#: protocol, private metadata]``: `LakeTable._txn_scope` opens it,
+#: `LakeTable._write_metadata` honors the protocol and ``_meta`` resolves
+#: to the private metadata. Thread-local, so two threads committing
+#: through one handle never see, publish or clear each other's work.
+_TXN = threading.local()
+#: serializes a returning transaction's hand-over of its metadata to the
+#: handle (check the version, then set)
+_ADOPT = threading.Lock()
 
 
 class CommitConflictError(RuntimeError):
@@ -530,15 +538,18 @@ def change_batches(
     fence: int | None = None,
     dlq: str | None = None,
     quarantined: dict | None = None,
+    part: int | None = None,
 ):
     """The change-batch kernel: raw change rows → bucketed physical rows.
 
     ``sources`` yields ``(tbl, epoch)``: a pyarrow Table of change rows
     (op, key, payload, ts, lsn, source_partition) and its epoch id, or
-    None to read each row's ``epoch`` column. Both writer feeders run it
-    inside their tasks — `LakeTable.write_change_files_direct` over batches
-    read from change-log parquet, `LakeTable.write_data_files_direct` over
-    ``mapInArrow`` batches of a DataFrame. Per batch, in order:
+    None to read each row's ``epoch`` column. Both writer feeders run it:
+    `LakeTable.write_change_files_direct` over batches read from
+    change-log parquet, once per chunk of files (in the driver for a small
+    input, else in Spark tasks), and `LakeTable.write_data_files_direct`
+    inside its tasks over ``mapInArrow`` batches of a DataFrame. Per
+    batch, in order:
 
     1. ``dlq`` given (quarantine on): invalid rows leave the batch
        (`_split_invalid`) — before the fence, so a null-``lsn`` row is
@@ -555,8 +566,10 @@ def change_batches(
 
     Yields RecordBatches for `_make_write_partition`. Once ``sources`` is
     drained, each epoch's quarantined rows go to
-    ``<dlq>/epoch=N/part-<task partition id>.parquet`` (a retried task
-    overwrites its own file) and their count to ``quarantined[N]``.
+    ``<dlq>/epoch=N/part-<part>.parquet`` and their count to
+    ``quarantined[N]``. ``part`` is the caller's chunk index; None takes
+    the Spark task's partition id. Either way a retried chunk overwrites
+    its own file, and no two chunks of one staging share a name.
     """
     import numpy as np
     import pyarrow as pa
@@ -621,10 +634,13 @@ def change_batches(
         )
     if bad:
         import pyarrow.parquet as pq
-        from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        name = f"part-{ctx.partitionId() if ctx else 0:05d}.parquet"
+        if part is None:
+            from pyspark import TaskContext
+
+            ctx = TaskContext.get()
+            part = ctx.partitionId() if ctx else 0
+        name = f"part-{part:05d}.parquet"
         for e, parts in bad.items():
             d = os.path.join(dlq, f"epoch={e}")
             os.makedirs(d, exist_ok=True)
@@ -881,7 +897,25 @@ class LakeTable:
 
     def __init__(self, root: str, meta: dict):
         self.root = root
-        self._meta = meta
+        self._committed = meta
+
+    @property
+    def _meta(self) -> dict:
+        """The metadata this thread works on: inside a transaction on this
+        handle, that transaction's own copy (`_txn_scope`); else the
+        handle's."""
+        txn = getattr(_TXN, "open", {}).get(id(self))
+        if txn is None or txn[1] is None:
+            return self._committed
+        return txn[1]
+
+    @_meta.setter
+    def _meta(self, meta: dict) -> None:
+        txn = getattr(_TXN, "open", {}).get(id(self))
+        if txn is None:
+            self._committed = meta
+        else:
+            txn[1] = meta
 
     # ------------------------------------------------------------------ init
     @classmethod
@@ -1233,8 +1267,10 @@ class LakeTable:
         metadata and ends in ``_write_metadata`` (usually via
         ``_next_snapshot``). flock mode serializes with the cross-process
         mutex; CAS mode retries the whole read-merge-write when another
-        committer wins the version (losers' in-memory ``_meta`` mutations
-        are discarded by the next ``_refresh``). Deterministic linear
+        committer wins the version. Each attempt works on its own
+        metadata (`_txn_scope`), so a loser's mutations are discarded with
+        it, and threads committing through one handle cannot overwrite each
+        other's in-flight change. Deterministic linear
         backoff — under N contenders someone always wins, so progress is
         global even when one process starves briefly."""
         # the protocol branch here and the publish path in
@@ -1246,22 +1282,21 @@ class LakeTable:
         # CAS-entered txn could leak CommitConflictError uncaught.
         for _redispatch in range(4):
             if self.commit_mode != "cas":
-                with self._process_commit_lock():
+                with self._process_commit_lock(), self._txn_scope("flock"):
                     self._refresh()
                     if self.commit_mode == "cas":
                         continue  # flipped under us: redo as CAS
-                    with self._pin_txn_mode("flock"):
-                        return body()
+                    return body()
             else:
                 last: Exception | None = None
                 flipped = False
                 for attempt in range(200):
-                    self._refresh()
-                    if self.commit_mode != "cas":
-                        flipped = True
-                        break
                     try:
-                        with self._pin_txn_mode("cas"):
+                        with self._txn_scope("cas"):
+                            self._refresh()
+                            if self.commit_mode != "cas":
+                                flipped = True
+                                break
                             return body()
                     except CommitConflictError as e:
                         last = e
@@ -1277,19 +1312,36 @@ class LakeTable:
         )
 
     @contextlib.contextmanager
-    def _pin_txn_mode(self, mode: str):
-        """Pin this thread's transaction on this handle to ``mode``
-        (`_TXN_MODE`); a nested pin restores the outer one on exit."""
-        modes = _TXN_MODE.__dict__.setdefault("modes", {})
-        outer = modes.get(id(self))
-        modes[id(self)] = mode
+    def _txn_scope(self, mode: str):
+        """One transaction attempt of this thread on this handle (`_TXN`):
+        pins its commit protocol ``mode`` and gives it private metadata,
+        which `_refresh` fills and which becomes the handle's (or the
+        enclosing attempt's) only when the attempt returns. Threads
+        sharing a handle thus never publish each other's half-made change,
+        nor lose their own to each other's refresh; a failed attempt
+        leaves the handle as it was. A nested scope restores the outer one
+        on exit."""
+        txns = _TXN.__dict__.setdefault("open", {})
+        outer = txns.get(id(self))
+        txns[id(self)] = txn = [mode, None]
         try:
             yield
         finally:
             if outer is None:
-                del modes[id(self)]
+                del txns[id(self)]
             else:
-                modes[id(self)] = outer
+                txns[id(self)] = outer
+        meta = txn[1]
+        if meta is None:
+            return
+        with _ADOPT:
+            # never step back past a newer commit another thread adopted
+            if (
+                outer is not None
+                or meta["metadata_version"]
+                >= self._committed["metadata_version"]
+            ):
+                self._meta = meta
 
     def _write_metadata(self) -> None:
         """Publish current in-memory metadata: sharded manifests + pointer.
@@ -1332,9 +1384,8 @@ class LakeTable:
         # honor the protocol the surrounding transaction ENTERED with
         # (_commit_txn pins it); fall back to the property for callers
         # outside a transaction (create, initial bootstrap)
-        mode = (
-            getattr(_TXN_MODE, "modes", {}).get(id(self)) or self.commit_mode
-        )
+        txn = getattr(_TXN, "open", {}).get(id(self))
+        mode = self.commit_mode if txn is None else txn[0]
         if mode == "cas":
             # optimistic commit point: put-if-absent of the next version,
             # atomic WITH its content — write the full JSON to a private
@@ -1632,10 +1683,11 @@ class LakeTable:
         self, spark: SparkSession, fence_lsn: int | None, dlq: str | None
     ):
         """The task body both change feeders run, bound to a fresh
-        ``data/w-*`` staging dir: ``task(sources)`` feeds ``(change table,
-        epoch)`` pairs through `change_batches` into the shared write
-        generator and yields its output batches, then one "q" row per epoch
-        that had rows quarantined. Returns ``(rel, task)``."""
+        ``data/w-*`` staging dir: ``task(sources, part)`` feeds ``(change
+        table, epoch)`` pairs through `change_batches` (``part`` names its
+        DLQ file) into the shared write generator and yields its output
+        batches, then one "q" row per epoch that had rows quarantined.
+        Returns ``(rel, task)``."""
         rel = f"data/w-{uuid.uuid4().hex[:12]}"
         write_partition = self._write_partition(
             os.path.join(self.root, rel),
@@ -1654,10 +1706,12 @@ class LakeTable:
             dlq=dlq,
         )
 
-        def task(sources):
+        def task(sources, part=None):
             quarantined: dict[int, int] = {}
             yield from write_partition(
-                change_batches(sources, quarantined=quarantined, **kernel)
+                change_batches(
+                    sources, quarantined=quarantined, part=part, **kernel
+                )
             )
             if quarantined:
                 yield _out_batch(
@@ -1713,36 +1767,41 @@ class LakeTable:
         """File feeder of the change-batch kernel: the JVM never touches
         the data plane.
 
-        ``file_epochs``: (change-log parquet path, epoch id) pairs. Each
-        writer TASK opens its files with pyarrow directly and runs
-        `change_batches` (quarantine mask when ``dlq`` is given, bootstrap
-        fence at ``fence_lsn``, projection, position and key hashes in
-        numpy) over their batches, each file carrying its own epoch, into
-        the shared write generator. Spark distributes only file paths in
-        and manifest rows out — the JVM→Python Arrow-socket drain of the
-        DataFrame feeder (the single largest bulk-replay cost at bench
-        scale) disappears, along with the JVM-side decode.
+        ``file_epochs``: (change-log parquet path, epoch id) pairs, split
+        into byte-balanced chunks (greedy LPT, largest file first: the
+        slowest chunk sets the span). Each chunk opens its files with
+        pyarrow and runs `change_batches` (quarantine mask when ``dlq`` is
+        given, bootstrap fence at ``fence_lsn``, projection, position and
+        key hashes in numpy) over their batches, each file carrying its
+        own epoch, into the shared write generator. The input's total
+        bytes pick where the chunks run:
 
-        Scale shape: tasks are byte-balanced over files (greedy LPT), the
-        data plane is per-task parquet→parquet with vectorized C++ decode/
-        encode and numpy hashing; driver work is O(files) listing + tiny
-        manifest rows. On a real cluster the change log lives on shared
-        storage, so a path is as readable from an executor as a DataFrame
-        partition would be.
+        - ``driver``: at most ``spark.sql.files.openCostInBytes``, Spark's
+          own estimate of what opening one file costs, the chunks run one
+          after another in this process. A 5k-event tail epoch (4 files,
+          0.17 MB) writes in ~40 ms here and in ~310 ms as a Spark job,
+          which is almost all job overhead.
+        - ``tasks``: otherwise one Spark task per chunk. Spark distributes
+          only file paths in and manifest rows out, so no row crosses the
+          JVM→Python Arrow socket and the JVM decodes nothing. On a real
+          cluster the change log lives on shared storage, so a path is as
+          readable from an executor as a DataFrame partition would be.
+
+        Both routes write one file per chunk per bucket and return the
+        same rows: chunk ``i`` is partition ``i`` of the task route, so
+        even the DLQ file names agree. Logs one line per call on the
+        ``etl_documentos_spark`` logger.
 
         Returns ``(files, stat_rows, manifest_stats)``.
         """
+        t0 = time.perf_counter()
         rel, task = self._change_task(spark, fence_lsn, dlq)
 
-        # byte-balanced chunks (greedy LPT, largest file first): the slowest
-        # task sets the job span, so balance bytes, not file counts
-        p = spark.sparkContext.defaultParallelism
-        n_chunks = min(target_tasks or 2 * p, len(file_epochs))
+        sc = spark.sparkContext
+        n_chunks = min(target_tasks or 2 * sc.defaultParallelism, len(file_epochs))
         sized = sorted(
             ((os.path.getsize(f), f, e) for f, e in file_epochs), reverse=True
         )
-        import heapq
-
         heap = [(0, i) for i in range(n_chunks)]
         chunks: list[list[tuple[str, int]]] = [[] for _ in range(n_chunks)]
         for sz, f, e in sized:
@@ -1750,8 +1809,9 @@ class LakeTable:
             chunks[i].append((f, e))
             heapq.heappush(heap, (load + sz, i))
         chunks = [c for c in chunks if c]
+        in_bytes = sum(sz for sz, _, _ in sized)
 
-        def run(chunk_iter):
+        def run(part, chunk_iter):
             import pyarrow as _pa
             import pyarrow.parquet as _pq
 
@@ -1761,13 +1821,37 @@ class LakeTable:
                 for path, epoch in chunk
                 for rb in _pq.ParquetFile(path).iter_batches(batch_size=1 << 16)
             )
-            for rb in task(sources):
+            for rb in task(sources, part):
                 yield from rb.to_pylist()
 
-        rows = (
-            spark.sparkContext.parallelize(chunks, len(chunks))
-            .mapPartitions(run)
-            .collect()
+        ids = [e for _, e in file_epochs]
+        span = f"{min(ids)}..{max(ids)}"
+        open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+        if in_bytes <= open_cost:
+            route = "driver"
+            rows = [r for i, c in enumerate(chunks) for r in run(i, [c])]
+        else:
+            route = "tasks"
+            desc = sc.getLocalProperty("spark.job.description")
+            sc.setJobDescription(f"epoch={span} phase=write")
+            try:
+                rows = (
+                    sc.parallelize(chunks, len(chunks))
+                    .mapPartitionsWithIndex(run)
+                    .collect()
+                )
+            finally:
+                sc.setJobDescription(desc)
+        _log.info(
+            "write route=%s epochs=%s files=%d chunks=%d bytes=%d rows=%d "
+            "ms=%.1f",
+            route,
+            span,
+            len(file_epochs),
+            len(chunks),
+            in_bytes,
+            sum(r["nrows"] for r in rows if r["kind"] == "f"),
+            (time.perf_counter() - t0) * 1e3,
         )
         return _gather_direct_rows(rows, rel, stats=True)
 

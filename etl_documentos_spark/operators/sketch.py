@@ -211,7 +211,8 @@ def cms_heavy_hitters(
     buckets and takes the row-wise MIN — the classic one-sided
     overestimate (``est >= true``, collisions only inflate). Buckets
     are ``md5(seed # key)`` so the sketch is a pure function of the
-    input multiset.
+    input multiset; a NULL key hashes as the empty string, on this side
+    and in the DuckDB twin alike.
 
     Scale: the sketch never exceeds ``depth*width`` rows (broadcast
     side), and the probe is a distinct-key scan — no per-key state
@@ -231,7 +232,11 @@ def cms_heavy_hitters(
         (
             F.conv(
                 F.substring(
-                    F.md5(F.concat_ws("#", F.col("_seed"), F.col("_k"))),
+                    F.md5(
+                        F.concat_ws(
+                            "#", F.col("_seed"), F.coalesce("_k", F.lit(""))
+                        )
+                    ),
                     1,
                     8,
                 ),
@@ -267,7 +272,7 @@ def cms_oracle_sql(
         WITH src AS ({source_sql}),
         hashed AS (
           SELECT CAST({key} AS VARCHAR) AS _k, s.seed AS _seed,
-                 CAST(CONCAT('0x', substring(md5(CONCAT(s.seed, '#', CAST({key} AS VARCHAR))), 1, 8)) AS BIGINT) % {width} AS _bucket
+                 CAST(CONCAT('0x', substring(md5(CONCAT(s.seed, '#', COALESCE(CAST({key} AS VARCHAR), ''))), 1, 8)) AS BIGINT) % {width} AS _bucket
           FROM src, (SELECT unnest(generate_series(0, {depth - 1})) AS seed) s),
         sketch AS (
           SELECT _seed, _bucket, count(*) AS _cnt

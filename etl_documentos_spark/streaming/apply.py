@@ -21,11 +21,12 @@ Routes and their feeders. Every route stages rows through the one
 change-batch kernel (`lake.table.change_batches`: quarantine mask, bootstrap
 fence, projection, position and key hashes, bucket), fed two ways:
 
-- ``apply_epochs_bulk_files``: epochs as local parquet files; writer tasks
-  read them with pyarrow (``write_change_files_direct``), so no row crosses
-  the JVM→Python Arrow socket. ``stream.replay_epochs`` (one epoch per
-  call) and ``stream.replay_bulk`` (all at once) use it for every local
-  epoch.
+- ``apply_epochs_bulk_files``: epochs as local parquet files, read with
+  pyarrow (``write_change_files_direct``) so no row crosses the
+  JVM→Python Arrow socket: in the driver when they total at most Spark's
+  ``spark.sql.files.openCostInBytes``, else in Spark tasks.
+  ``stream.replay_epochs`` (one epoch per call) and ``stream.replay_bulk``
+  (all at once) use it for every local epoch.
 - ``apply_epoch``: one epoch as a DataFrame — the route for inputs that are
   not local files (foreachBatch, synthetic sources, bootstrap, ``://``
   paths); ``apply_epochs_bulk``: many epochs as one DataFrame with an
@@ -487,13 +488,16 @@ class CdcPipeline:
         fast path of `apply_epochs_bulk`.
 
         Same exactly-once contract (per-epoch fingerprints, offsets,
-        lineage; committed epochs skipped up front), but writer tasks read
-        the listed files DIRECTLY with pyarrow and run the change-batch
-        kernel on them (`lake.table.write_change_files_direct`), so the
-        batch never crosses the JVM→Python Arrow socket and the JVM never
-        decodes it. Fingerprints and stats rows equal the DataFrame
-        routes' (same kernel), so a backfill started here and resumed
-        through `apply_epochs_bulk` (or vice versa) dedups correctly.
+        lineage; committed epochs skipped up front), but the listed files
+        are read DIRECTLY with pyarrow and run through the change-batch
+        kernel (`lake.table.write_change_files_direct`): in the driver
+        for an input of at most one Spark file-open cost
+        (``spark.sql.files.openCostInBytes``), such as one tail epoch,
+        else in Spark tasks. Either way the batch never crosses the
+        JVM→Python Arrow socket and the JVM never decodes it. Fingerprints
+        and stats rows equal the DataFrame routes' (same kernel), so a
+        backfill started here and resumed through `apply_epochs_bulk` (or
+        vice versa) dedups correctly.
 
         ``file_epochs``: (parquet path, epoch id) pairs — an epoch may span
         many files. ``schema``: the declared change-stream schema (drives

@@ -8,8 +8,10 @@ how the kernel is fed:
 
 - local path (``replay_bulk``; ``replay_epochs`` in every pipeline mode,
   quarantine included): ``apply_epochs_bulk_files`` and the file feeder
-  (``write_change_files_direct``), whose tasks read the epoch files with
-  pyarrow — no row crosses the JVM→Python Arrow socket;
+  (``write_change_files_direct``), which reads the epoch files with
+  pyarrow — in the driver when they total at most one Spark file-open
+  cost, as a tail epoch does, else in Spark tasks; no row crosses the
+  JVM→Python Arrow socket;
 - ``replay_epochs`` on a ``://`` path: ``apply_epoch`` on the epoch read
   as a DataFrame (the ``mapInArrow`` feeder, ``write_data_files_direct``)
   — a remote path has no local listing;
@@ -91,13 +93,14 @@ def replay_epochs(
     zero-IPC file feeder of ``replay_bulk``); a ``://`` path reads it as a
     DataFrame into ``apply_epoch``. Both commit the same fingerprint.
 
-    ``concurrency > 1`` (MOR mode only) overlaps epoch applies: the LWW
-    reduction is order-insensitive, so epochs need no ordering barrier —
-    data-file write jobs run in parallel on the executors while metadata
-    commits serialize on the pipeline's commit lock. This is the async
-    batch-pipelining that hides per-epoch driver-serial time (plan analysis,
-    job scheduling, snapshot fsync) behind executor work; exactly-once
-    bookkeeping is unchanged (one commit record per epoch).
+    ``concurrency > 1`` (MOR mode only) overlaps epoch applies in driver
+    threads: the LWW reduction is order-insensitive, so epochs need no
+    ordering barrier — each thread stages its epoch's data files (in the
+    driver for a small epoch, else as a write job on the executors) while
+    metadata commits serialize on the pipeline's commit lock. This hides
+    per-epoch driver-serial time (job scheduling, snapshot fsync) behind
+    other epochs' writes; exactly-once bookkeeping is unchanged (one commit
+    record per epoch).
     """
     spark = pipeline.spark
     epoch_ids = epochs if epochs is not None else list_epochs(events_path)

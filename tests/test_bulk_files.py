@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import glob
 import json
+import logging
 import os
 from collections import Counter
 
@@ -19,6 +20,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pyspark import SparkContext
 
 from etl_documentos_spark import datagen
 from etl_documentos_spark.lake.table import LakeTable
@@ -184,13 +187,9 @@ def test_files_path_bit_equals_dataframe_path(
     assert pq.read_schema(fa) == pq.read_schema(fb)
 
 
-def test_files_path_bit_equals_dataframe_path_quarantine(
-    spark, stream_df, tmp_path
-):
-    """Quarantine pipelines on the three routes: the same rows divert to
-    the DLQ with the same reasons, the same ``quarantined`` counts per
-    epoch, and the same commit records and bucket data for the rest."""
-    poisoned = (
+def _poison(stream_df):
+    """``stream_df`` with invalid rows of every quarantine reason."""
+    return (
         stream_df.withColumn(
             "op",
             F.when(F.col("lsn") % 97 == 0, "noop").otherwise(F.col("op")),
@@ -206,6 +205,15 @@ def test_files_path_bit_equals_dataframe_path_quarantine(
             "lsn", F.when(F.col("lsn") % 79 == 5, None).otherwise(F.col("lsn"))
         )
     )
+
+
+def test_files_path_bit_equals_dataframe_path_quarantine(
+    spark, stream_df, tmp_path
+):
+    """Quarantine pipelines on the three routes: the same rows divert to
+    the DLQ with the same reasons, the same ``quarantined`` counts per
+    epoch, and the same commit records and bucket data for the rest."""
+    poisoned = _poison(stream_df)
     events = str(tmp_path / "poisoned")
     datagen.write_epochs(poisoned, events, files_per_epoch=4)
     epochs = list_epochs(events)
@@ -632,3 +640,189 @@ def test_fold_hll_matches_per_key_reference(n_epochs):
     assert got.keys() == want.keys()
     for k in want:
         assert got[k].tolist() == want[k].tolist(), k
+
+
+# --- the file writer's two routes -------------------------------------------
+
+OPEN_COST = "spark.sql.files.openCostInBytes"
+
+
+@pytest.fixture
+def open_cost(spark):
+    """Set ``spark.sql.files.openCostInBytes`` inside a test: the cut-off
+    between the file writer's driver and Spark-task routes. ``"0"`` forces
+    the task route for any input. The session's value returns at
+    teardown."""
+    before = spark.conf.get(OPEN_COST)
+    yield lambda v: spark.conf.set(OPEN_COST, v)
+    spark.conf.set(OPEN_COST, before)
+
+
+@pytest.fixture(scope="module")
+def poisoned_path(stream_df, tmp_path_factory):
+    p = str(tmp_path_factory.mktemp("poisoned") / "stream")
+    datagen.write_epochs(_poison(stream_df), p, files_per_epoch=4)
+    return p
+
+
+def _write_lines(caplog) -> list[dict]:
+    """The file writer's log lines, as ``{field: value}``."""
+    return [
+        dict(kv.split("=", 1) for kv in m.split()[1:])
+        for m in caplog.messages
+        if m.startswith("write route=")
+    ]
+
+
+def _last_job_id(spark) -> int:
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(), default=-1)
+
+
+@pytest.mark.parametrize("variant", ["plain", "fence", "int_key", "quarantine"])
+def test_file_writer_routes_agree(
+    spark, stream_df, events_path, poisoned_path, tmp_path, open_cost,
+    monkeypatch, caplog, variant,
+):
+    """The same epochs staged in the driver and as Spark tasks give the same
+    files per bucket, the same stats rows (fingerprint chunks, counts,
+    offsets, HLL registers), the same commit records, the same DLQ and the
+    same ``read_current`` — with the bootstrap fence, on an int bucket key
+    and with quarantine on."""
+    events = poisoned_path if variant == "quarantine" else events_path
+    epochs = list_epochs(events)
+    staged = []
+    real_write = LakeTable.write_change_files_direct
+
+    def recording(self, *a, **kw):
+        staged.append(real_write(self, *a, **kw))
+        return staged[-1]
+
+    monkeypatch.setattr(LakeTable, "write_change_files_direct", recording)
+    caplog.set_level(logging.INFO, logger="etl_documentos_spark")
+
+    def run(name):
+        troot = str(tmp_path / name / "transcripts")
+        LakeTable.create(
+            troot, physical_schema(TRANSCRIPTS), num_buckets=8,
+            bucket_col="turn_idx" if variant == "int_key" else "conv_id",
+        )
+        pipe = CdcPipeline(
+            spark, troot, str(tmp_path / name / "work"), mode="mor",
+            quarantine=variant == "quarantine",
+        )
+        if variant == "fence":
+            wm = int(
+                stream_df.agg(F.expr("percentile_approx(lsn, 0.5)")).first()[0]
+            )
+            pipe.table.set_property("bootstrap.watermark-lsn", str(wm))
+            pipe._bootstrap_wm = "unloaded"  # force re-read of the property
+        res = pipe.apply_epochs_bulk_files(_pairs(events), schema=CHANGE_EVENTS)
+        files, stat_rows, _ = staged[-1]
+        dlq = {
+            e: sorted(os.listdir(os.path.join(pipe.dlq_path, f"epoch={e}")))
+            for e in epochs
+            if os.path.isdir(os.path.join(pipe.dlq_path, f"epoch={e}"))
+        }
+        return {
+            "results": [(r.epoch_id, r.events, r.quarantined) for r in res],
+            "files_per_bucket": {b: len(fs) for b, fs in files.items()},
+            "stat_rows": sorted(repr(sorted(r.items())) for r in stat_rows),
+            "records": _records(pipe, epochs),
+            "dlq_files": dlq,
+            "dlq": sorted(
+                repr(sorted(r.asDict().items())) for r in pipe.read_dlq().collect()
+            ) if pipe.quarantine else None,
+            "current": sorted(
+                tuple(r) for r in read_current(spark, pipe.table).collect()
+            ),
+        }
+
+    driver = run("driver")
+    open_cost("0")
+    tasks = run("tasks")
+    assert [w["route"] for w in _write_lines(caplog)] == ["driver", "tasks"]
+    assert driver["files_per_bucket"]
+    assert any("('kind', 'l')" in r for r in driver["stat_rows"])  # HLL
+    if variant == "quarantine":
+        assert sum(q for _, _, q in driver["results"]) > 0
+        assert all(len(fs) >= 2 for fs in driver["dlq_files"].values())
+    for key in driver:
+        assert driver[key] == tasks[key], key
+
+
+def test_file_writer_route_follows_open_cost(
+    spark, stream_df, events_path, tmp_path, open_cost, monkeypatch, caplog
+):
+    """The route is picked by the input's bytes against
+    ``spark.sql.files.openCostInBytes``, read as bytes: at most the
+    setting (a plain number or a unit string), the writer starts no Spark
+    job; one byte over, it starts one, described by its epoch span and
+    phase. Each call logs one line with its route and sizes."""
+    pairs = _pairs(events_path)
+    in_bytes = sum(os.path.getsize(f) for f, _ in pairs)
+    lo, hi = min(e for _, e in pairs), max(e for _, e in pairs)
+    descriptions = []
+    real_describe = SparkContext.setJobDescription
+    monkeypatch.setattr(
+        SparkContext,
+        "setJobDescription",
+        lambda self, v: descriptions.append(v) or real_describe(self, v),
+    )
+    caplog.set_level(logging.INFO, logger="etl_documentos_spark")
+    jobs = []
+    for i, cost in enumerate((str(in_bytes), "1MB", str(in_bytes - 1))):
+        open_cost(cost)
+        t = LakeTable.create(
+            str(tmp_path / f"t{i}"), physical_schema(TRANSCRIPTS), num_buckets=4
+        )
+        before = _last_job_id(spark)
+        files, _, _ = t.write_change_files_direct(spark, pairs, target_tasks=3)
+        jobs.append(_last_job_id(spark) - before)
+        assert sum(len(fs) for fs in files.values()) > 0
+    assert in_bytes < 1 << 20
+    assert jobs == [0, 0, 1]
+    lines = _write_lines(caplog)
+    assert [w["route"] for w in lines] == ["driver", "driver", "tasks"]
+    for w in lines:
+        assert w["epochs"] == f"{lo}..{hi}"
+        assert w["files"] == str(len(pairs))
+        assert w["chunks"] == "3"
+        assert w["bytes"] == str(in_bytes)
+        assert int(w["rows"]) == stream_df.count()
+        assert float(w["ms"]) > 0
+    assert descriptions == [f"epoch={lo}..{hi} phase=write", None]
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+
+
+def test_driver_route_keeps_every_chunks_dlq_rows(
+    spark, stream_df, poisoned_path, tmp_path, caplog
+):
+    """One small epoch of several files, each holding invalid rows, staged
+    in the driver: each chunk writes its own DLQ file, so every
+    quarantined row lands in ``dlq/epoch=N`` and the count equals
+    ``EpochResult.quarantined``."""
+    e = list_epochs(poisoned_path)[0]
+    pairs = [(f, ep) for f, ep in _pairs(poisoned_path) if ep == e]
+    assert len(pairs) >= 2
+    for f, _ in pairs:
+        tbl = pq.read_table(f)
+        assert tbl.num_rows > tbl.drop_null().num_rows, f  # invalid rows
+    want = sum(
+        pq.read_table(f).num_rows for f, _ in pairs
+    ) - (
+        _poison(stream_df).filter(F.col("epoch") == e)
+        .filter(
+            F.col("op").isin("insert", "update", "delete")
+            & F.col("conv_id").isNotNull()
+            & F.col("ts").isNotNull()
+            & F.col("lsn").isNotNull()
+        ).count()
+    )
+    caplog.set_level(logging.INFO, logger="etl_documentos_spark")
+    pipe = _pipeline(spark, tmp_path, quarantine=True)
+    (res,) = pipe.apply_epochs_bulk_files(pairs, schema=CHANGE_EVENTS)
+    assert [w["route"] for w in _write_lines(caplog)] == ["driver"]
+    assert want > 0 and res.quarantined == want
+    d = os.path.join(pipe.dlq_path, f"epoch={e}")
+    assert len(os.listdir(d)) == len(pairs)
+    assert pipe.read_dlq([e]).count() == want

@@ -160,6 +160,101 @@ def test_cas_threads_on_one_handle_pin_their_own_mode(tmp_path):
     assert props.get("a") == "v" and props.get("b") == "v", props
 
 
+def test_cas_threads_on_one_handle_keep_their_own_changes(
+    tmp_path, monkeypatch
+):
+    """Two threads calling ``set_property`` through ONE CAS-mode handle,
+    both held at ``_write_metadata`` at once: each transaction works on
+    its own metadata, so neither thread's refresh drops the other's
+    change and neither publishes the other's state as its own. Both
+    properties land in every trial."""
+    import threading
+
+    real_write = LakeTable._write_metadata
+    for trial in range(10):
+        root = str(tmp_path / f"t{trial}")
+        LakeTable.create(
+            root, SCHEMA, num_buckets=2, properties={"commit.mode": "cas"}
+        )
+        table = LakeTable.load(root)
+        barrier = threading.Barrier(2)
+        waited: set[int] = set()
+
+        def held_write(self):
+            me = threading.get_ident()
+            if me not in waited:  # only the first attempt waits
+                waited.add(me)
+                barrier.wait(timeout=30)
+            real_write(self)
+
+        monkeypatch.setattr(LakeTable, "_write_metadata", held_write)
+        errors: list[BaseException] = []
+
+        def setter(key: str) -> None:
+            try:
+                table.set_property(key, "v")
+            except BaseException as e:  # noqa: BLE001 - reported below
+                errors.append(e)
+
+        threads = [
+            threading.Thread(target=setter, args=(k,)) for k in ("a", "b")
+        ]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(60)
+        monkeypatch.setattr(LakeTable, "_write_metadata", real_write)
+        assert not errors, (trial, errors)
+        props = LakeTable.load(root).properties
+        assert props.get("a") == "v" and props.get("b") == "v", (trial, props)
+        assert table.properties == props, trial
+
+
+@pytest.mark.parametrize("mode", ["flock", "cas"])
+def test_threads_on_one_handle_stress(tmp_path, mode):
+    """More committing threads than cores on one handle, with a short
+    switch interval: every property each thread set lands, and the handle
+    ends on the newest metadata."""
+    import os
+    import sys
+    import threading
+
+    root = str(tmp_path / "t")
+    LakeTable.create(
+        root, SCHEMA, num_buckets=2, properties={"commit.mode": mode}
+    )
+    table = LakeTable.load(root)
+    n_threads, per_thread = 2 * (os.cpu_count() or 2), 5
+    errors: list[BaseException] = []
+
+    def setter(w: int) -> None:
+        try:
+            for i in range(per_thread):
+                table.set_property(f"w{w}-{i}", "v")
+        except BaseException as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=setter, args=(w,))
+            for w in range(n_threads)
+        ]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    props = LakeTable.load(root).properties
+    want = {f"w{w}-{i}" for w in range(n_threads) for i in range(per_thread)}
+    assert want <= props.keys(), sorted(want - props.keys())
+    assert table.properties == props
+
+
 def test_cas_hint_is_floor_probe_finds_newest(tmp_path):
     """A regressed version hint (possible when two unlocked winners race
     the pointer swap) must not strand readers: load() probes forward."""

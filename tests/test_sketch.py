@@ -189,3 +189,35 @@ def test_sketch_plans_bounded_exchange(keyed):
         keyed, "k", threshold=1
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan2
+
+
+def test_cms_null_keys_match_duckdb_oracle(spark, tmp_path):
+    """NULL keys hash the same way in the engine and its DuckDB twin: a
+    NULL hashes as the empty string on both sides, so every estimate,
+    the NULL key's included, agrees."""
+    import duckdb
+
+    from etl_documentos_spark.operators.sketch import cms_oracle_sql
+
+    rows = [(None,)] * 7 + [
+        (f"key-{i}",) for i in range(40) for _ in range(1 + i % 4)
+    ]
+    df = spark.createDataFrame(rows, "k string")
+    path = str(tmp_path / "keys.parquet")
+    df.coalesce(1).write.parquet(path)
+
+    got = sorted(
+        (r["k"] is None, r["k"] or "", r["est_count"])
+        for r in cms_heavy_hitters(
+            df, "k", threshold=0, depth=3, width=8
+        ).collect()
+    )
+    sql = cms_oracle_sql(
+        f"SELECT * FROM read_parquet('{path}/*.parquet')",
+        "k", threshold=0, depth=3, width=8,
+    )
+    want = sorted(
+        (k is None, k or "", n) for k, n in duckdb.sql(sql).fetchall()
+    )
+    assert got[-1][0], "the NULL key has an estimate"
+    assert got == want
