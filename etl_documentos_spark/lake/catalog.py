@@ -32,9 +32,9 @@ class Catalog:
     def __init__(self, root: str):
         self.root = root
         #: temp-view names this catalog has itself registered (snapshot
-        #: views of catalog tables, per statement). CTAS may freely
-        #: replace/drop these; a session view NOT in this set belongs to
-        #: the caller and must never be clobbered.
+        #: views of catalog tables, per statement) and not dropped since.
+        #: CTAS may freely replace/drop these; a session view NOT in this
+        #: set belongs to the caller and must never be clobbered.
         self._managed_views: set[str] = set()
         os.makedirs(root, exist_ok=True)
 
@@ -425,6 +425,11 @@ def run_ddl(
         finally:
             for v in registered:
                 spark.catalog.dropTempView(v)
+            # dropped views are no longer ours: a caller's later view of
+            # the same name must count as the caller's
+            getattr(catalog, "_managed_views", set()).difference_update(
+                registered
+            )
         return spark.createDataFrame(
             [(name, "create", True, n_rows)],
             "table string, operation string, created boolean, rows long",

@@ -255,6 +255,14 @@ def collect_parquet_stats(
     return out
 
 
+def _stage_rel(kind: str = "w") -> str:
+    """A fresh staging directory, relative to the table root. ``w``
+    (writes: appends, COW rewrites, splits) or ``c`` (compaction outputs,
+    which `Snapshot.reduced_buckets` reads as LWW-reduced) — the
+    ``delta_N``/``base_N`` split of Hive ACID."""
+    return f"data/{kind}-{uuid.uuid4().hex[:12]}"
+
+
 @dataclass
 class Snapshot:
     snapshot_id: int
@@ -291,6 +299,22 @@ class Snapshot:
             d["snapshot_id"], d["parent_id"], d["ts_ms"], d["operation"],
             d["summary"], d["files"], d.get("file_stats") or {},
         )
+
+    def reduced_buckets(self) -> list[int]:
+        """Buckets already LWW-reduced: every file sits under ONE
+        ``data/c-*`` directory, i.e. is the output of one compaction
+        (`_stage_rel`), so each key has at most one row there. A later
+        append, or a concurrent compaction's output, adds a second
+        directory and the bucket is read through the LWW again."""
+        out = []
+        for b, fs in self.files.items():
+            dirs = {
+                p.split("/", 2)[1] if p.startswith("data/c-") else None
+                for p in fs
+            }
+            if len(dirs) == 1 and None not in dirs:
+                out.append(int(b))
+        return out
 
 
 
@@ -1139,15 +1163,33 @@ class LakeTable:
         contiguous key ranges per file, so a point lookup opens ~1 file
         instead of the bucket's whole history.
         """
+        return self._read_data_files(
+            spark, self.data_files(buckets, snapshot_id, prune, ref)
+        )
+
+    def snapshot_at(
+        self, snapshot_id: int | None = None, ref: str | None = None
+    ) -> Snapshot:
+        """The current snapshot, or the one ``snapshot_id``/``ref`` names."""
         if ref is not None:
             if snapshot_id is not None:
                 raise ValueError("pass either ref or snapshot_id, not both")
             snapshot_id = self.resolve_ref(ref)
-        snap = (
-            self.current_snapshot
-            if snapshot_id is None
-            else next(s for s in self.snapshots if s.snapshot_id == snapshot_id)
-        )
+        if snapshot_id is None:
+            return self.current_snapshot
+        return next(s for s in self.snapshots if s.snapshot_id == snapshot_id)
+
+    def data_files(
+        self,
+        buckets: list[int] | None = None,
+        snapshot_id: int | None = None,
+        prune: dict[str, tuple] | None = None,
+        ref: str | None = None,
+    ) -> list[str]:
+        """The absolute paths of the data files `scan` reads for the same
+        arguments: the snapshot's files in ``buckets``, less those whose
+        manifest stats rule out ``prune`` (`_stats_overlap`)."""
+        snap = self.snapshot_at(snapshot_id, ref)
         stats = snap.file_stats if prune else {}
         files: list[str] = []
         for b, fs in snap.files.items():
@@ -1157,7 +1199,7 @@ class LakeTable:
                 if prune and not self._stats_overlap(stats.get(p), prune):
                     continue
                 files.append(os.path.join(self.root, p))
-        return self._read_data_files(spark, files)
+        return files
 
     def _read_data_files(self, spark: SparkSession, files: list[str]) -> DataFrame:
         """Read specific data files with the CURRENT schema, folding
@@ -1201,14 +1243,20 @@ class LakeTable:
         return {k: v for k, v in ren.items() if k in live}
 
     @staticmethod
-    def read_data_files_arrow(files: list[str], fields: list, renamed: dict):
+    def read_data_files_arrow(
+        files: list[str], fields: list, renamed: dict, filter=None
+    ):
         """The pyarrow twin of `_read_data_files`: one threaded
         ``pyarrow.dataset`` read of ``files`` projected onto ``fields``,
         the current schema as (name, `_arrow_type`) pairs. Columns a file
         lacks (added later) read as null; a renamed column reads every
         historical name in ``renamed`` (`_renamed`) too and folds them
-        back with the same reverse-history coalesce. Returns a pyarrow
-        Table with exactly ``fields``."""
+        back with the same reverse-history coalesce. ``filter``: a
+        pyarrow expression applied by the scan itself, so row groups
+        whose statistics rule it out are skipped; it must name only
+        columns without a rename history (the bucket column, which
+        `rename_column` refuses). Returns a pyarrow Table with exactly
+        ``fields``."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
@@ -1217,7 +1265,9 @@ class LakeTable:
         read = list(fields) + [
             (h, types[new]) for new, hist in renamed.items() for h in hist
         ]
-        tbl = ds.dataset(files, schema=pa.schema(read), format="parquet").to_table()
+        tbl = ds.dataset(files, schema=pa.schema(read), format="parquet").to_table(
+            filter=filter
+        )
         if not renamed:
             return tbl
         return pa.table(
@@ -1528,8 +1578,10 @@ class LakeTable:
         df: DataFrame,
         salts: int | None = None,
         sort_cols: tuple[str, ...] | None = None,
+        kind: str = "w",
     ) -> dict[str, list[str]]:
-        """Write df into a new snapshot dir, one subdir per bucket.
+        """Write df into a new snapshot dir (`_stage_rel` of ``kind``),
+        one subdir per bucket.
 
         ``sort_cols``: clustered-rewrite mode (compaction's read-optimize
         pass). Rows are RANGE-partitioned on ``(_bucket, *sort_cols)`` and
@@ -1557,7 +1609,7 @@ class LakeTable:
         counts low). Salt source is the log sequence number when present
         (unique -> uniform spread); falling back to the first payload column.
         """
-        rel = f"data/w-{uuid.uuid4().hex[:12]}"
+        rel = _stage_rel(kind)
         out = os.path.join(self.root, rel)
         if salts is not None:
             salt_k = max(1, salts)
@@ -1668,7 +1720,7 @@ class LakeTable:
 
         Returns ``(files, manifest_stats)``.
         """
-        rel = f"data/w-{uuid.uuid4().hex[:12]}"
+        rel = _stage_rel()
         p = df.sparkSession.sparkContext.defaultParallelism
         with_b = df.withColumn(
             "_bucket", self.bucket_expr().cast("int")
@@ -1688,7 +1740,7 @@ class LakeTable:
         DLQ file) into the shared write generator and yields its output
         batches, then one "q" row per epoch that had rows quarantined.
         Returns ``(rel, task)``."""
-        rel = f"data/w-{uuid.uuid4().hex[:12]}"
+        rel = _stage_rel()
         write_partition = self._write_partition(
             os.path.join(self.root, rel),
             [f.name for f in self.schema.fields],

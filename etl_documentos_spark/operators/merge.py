@@ -46,6 +46,7 @@ from etl_documentos_spark.lake.table import (
     LakeTable,
     SpecConflictError,
     _arrow_type,
+    _stage_rel,
 )
 from etl_documentos_spark.operators.lww import lww_dedup
 from etl_documentos_spark.schemas import KEY_COLS
@@ -62,6 +63,18 @@ _log = logging.getLogger("etl_documentos_spark")
 
 def physical_schema(logical: T.StructType) -> T.StructType:
     return T.StructType(list(logical.fields) + list(SYSTEM_COLS))
+
+
+def _lww(df: DataFrame) -> DataFrame:
+    """`lww_dedup` of physical rows: per key, the greatest (ts, _lsn)."""
+    return lww_dedup(df, key_cols=KEY_COLS, order_cols=("ts", "_lsn"))
+
+
+def _live(df: DataFrame) -> DataFrame:
+    """Reduced physical rows → the reader's rows: tombstones filtered out,
+    system columns dropped."""
+    live = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
+    return live.drop(*SYSTEM_COL_NAMES)
 
 
 @dataclass
@@ -147,11 +160,7 @@ def _merge_into_once(
     target_slice = table.scan(spark, buckets=touched)
 
     # ---- version-checked combine: LWW over (existing ∪ incoming)
-    merged = lww_dedup(
-        target_slice.unionByName(updates),
-        key_cols=KEY_COLS,
-        order_cols=("ts", "_lsn"),
-    )
+    merged = _lww(target_slice.unionByName(updates))
 
     stats = None
     if compute_stats:
@@ -396,9 +405,9 @@ def _arrow_rewrite(
     expire_tombstones_before,
 ):
     """The driver route: `compact_bucket` over each target bucket in turn,
-    staged into one ``data/w-<uuid>`` dir (no commit). Returns
+    staged into one ``data/c-<uuid>`` dir (no commit). Returns
     ``(files, rows_in, rows_out)``."""
-    rel = f"data/w-{uuid.uuid4().hex[:12]}"
+    rel = _stage_rel("c")
     expire = (
         None if expire_tombstones_before is None else int(expire_tombstones_before)
     )
@@ -435,13 +444,10 @@ def _spark_rewrite(
 ):
     """The Spark compaction route: ``lww_dedup`` over the buckets' scan,
     the tombstone filter, then a range-partitioned sorted write. Stages
-    the files (no commit). Returns ``(files, rows_in, rows_out)``, the
-    row counts from the parquet footers."""
-    merged = lww_dedup(
-        table.scan(spark, buckets=buckets),
-        key_cols=KEY_COLS,
-        order_cols=("ts", "_lsn"),
-    )
+    the files into one ``data/c-<uuid>`` dir (no commit). Returns
+    ``(files, rows_in, rows_out)``, the row counts from the parquet
+    footers."""
+    merged = _lww(table.scan(spark, buckets=buckets))
     if expire_tombstones_before is not None:
         merged = merged.filter(
             (~F.coalesce(F.col("_deleted"), F.lit(False)))
@@ -470,7 +476,9 @@ def _spark_rewrite(
         cluster_cols: tuple[str, ...] = (ZCLUSTER_COL,)
     else:
         cluster_cols = KEY_COLS
-    files = table._write_data(merged, salts=salts, sort_cols=cluster_cols)
+    files = table._write_data(
+        merged, salts=salts, sort_cols=cluster_cols, kind="c"
+    )
     return (
         files,
         _footer_rows(
@@ -618,18 +626,33 @@ def read_current(
     ref: str | None = None,
 ) -> DataFrame:
     """Reader view: LWW winner per key, live rows only, system columns
-    dropped. Correct over any mix of compacted base files and MOR deltas
-    (on a fully-compacted table the reduction is a no-op).
+    dropped. Correct over any mix of compacted base files and MOR deltas.
+
+    Buckets that hold only one compaction's output
+    (`Snapshot.reduced_buckets`: every file under one ``data/c-*`` dir)
+    already have one row per key, so they are scanned as they are; the
+    LWW aggregation (`lww_dedup`, one shuffle) runs over the other
+    buckets only, and the two parts are unioned before the tombstone
+    filter. A fully compacted table reads with no shuffle; with no
+    compacted bucket the plan is one ``lww_dedup`` over the whole scan.
 
     ``snapshot_id``/``ref`` pin the read to an older snapshot or a named
     tag (time travel) — same contract as ``LakeTable.scan``."""
-    df = lww_dedup(
-        table.scan(spark, snapshot_id=snapshot_id, ref=ref),
-        key_cols=KEY_COLS,
-        order_cols=("ts", "_lsn"),
-    )
-    live = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-    return live.drop(*SYSTEM_COL_NAMES)
+    snap = table.snapshot_at(snapshot_id, ref)
+    reduced = snap.reduced_buckets()
+    if not reduced:
+        return _live(_lww(table.scan(spark, snapshot_id=snap.snapshot_id)))
+    df = table.scan(spark, buckets=reduced, snapshot_id=snap.snapshot_id)
+    # lww_dedup's column order: keys first
+    df = df.select(*KEY_COLS, *[c for c in df.columns if c not in KEY_COLS])
+    rest = [
+        int(b) for b, fs in snap.files.items() if fs and int(b) not in reduced
+    ]
+    if rest:
+        df = df.unionByName(
+            _lww(table.scan(spark, buckets=rest, snapshot_id=snap.snapshot_id))
+        )
+    return _live(df)
 
 
 def bucket_of(spark: SparkSession, table: LakeTable, value) -> int:
@@ -657,6 +680,18 @@ def bucket_of(spark: SparkSession, table: LakeTable, value) -> int:
     )
 
 
+def lookup_files(spark: SparkSession, table: LakeTable, conv_id) -> list[str]:
+    """The data files `point_lookup` reads for ``conv_id``, as absolute
+    paths: the key's bucket (`bucket_of`) less the files whose manifest
+    min/max or bloom stats prove the key absent (`LakeTable.data_files`
+    with ``prune=``, the same `LakeTable._stats_overlap` test `scan`
+    uses)."""
+    return table.data_files(
+        buckets=[bucket_of(spark, table, conv_id)],
+        prune={table.bucket_col: (conv_id, conv_id)},
+    )
+
+
 def point_lookup(spark: SparkSession, table: LakeTable, conv_id) -> DataFrame:
     """Fetch ONE conversation's current turns with double pruning.
 
@@ -664,19 +699,39 @@ def point_lookup(spark: SparkSession, table: LakeTable, conv_id) -> DataFrame:
     (1) bucket pruning — the key's hash names exactly one manifest bucket,
     1/num_buckets of the table; (2) manifest min/max file skipping inside
     that bucket — after a sorted compaction each file covers a contiguous
-    conv_id range, so the scan opens ~1 base file plus any still-uncompacted
+    conv_id range, so the read opens ~1 base file plus any still-uncompacted
     MOR delta files (kept conservatively: no stats or overlapping range).
     With the ``stats.bloom.cols`` table property on, per-file bloom filters
     additionally prove the key absent from most of those unsorted delta
-    files (min/max is blind there), closing the read-amplification gap
-    between compactions.
-    The row-level filter + LWW reduction then run over that handful of
-    files. No shuffle beyond the per-key aggregation of a few hundred rows.
+    files (min/max is blind there). `lookup_files` names the files left.
+
+    When every column has an Arrow type (`_arrow_fields`, the compaction
+    kernel's gate) the lookup runs in the driver with no Spark job: one
+    `LakeTable.read_data_files_arrow` of those files filtered on the key
+    (row-group stats skip too), `lww_arrow`, then the tombstone filter.
+    The few rows come back as ``spark.createDataFrame`` of the Arrow
+    table, a local relation, so ``collect()`` starts no job and
+    ``inputFiles()`` is empty. Other tables read the same files through
+    Spark and reduce them with `lww_dedup`. Both return the columns of
+    `read_current`, keys first.
     """
-    b = bucket_of(spark, table, conv_id)
-    df = table.scan(
-        spark, buckets=[b], prune={table.bucket_col: (conv_id, conv_id)}
-    ).filter(F.col(table.bucket_col) == F.lit(conv_id))
-    win = lww_dedup(df, key_cols=KEY_COLS, order_cols=("ts", "_lsn"))
-    live = win.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-    return live.drop(*SYSTEM_COL_NAMES)
+    import pyarrow.compute as pc
+
+    files = lookup_files(spark, table, conv_id)
+    fields = _arrow_fields(spark, table)
+    if fields is None:
+        df = table._read_data_files(spark, files)
+        return _live(_lww(df.filter(F.col(table.bucket_col) == F.lit(conv_id))))
+    tbl = LakeTable.read_data_files_arrow(
+        files, fields, table._renamed(),
+        filter=pc.field(table.bucket_col) == conv_id,
+    )
+    win = tbl.take(lww_arrow(tbl))
+    live = win.filter(pc.invert(pc.fill_null(win["_deleted"], False)))
+    cols = [*KEY_COLS] + [
+        f.name for f in table.schema.fields
+        if f.name not in KEY_COLS and f.name not in SYSTEM_COL_NAMES
+    ]
+    return spark.createDataFrame(
+        live.select(cols), T.StructType([table.schema[c] for c in cols])
+    )

@@ -47,17 +47,25 @@ def scd2_history(
     emit no version row, so ``is_current`` is true iff the key's last
     event is a non-delete — a tombstoned turn has a fully-closed chain.
 
-    Exact re-delivered duplicates (same key + (ts, lsn), identical
-    payload — the at-least-once delivery case the LWW path collapses
-    for free) are collapsed BEFORE the window: without this a duplicate
-    would mint a phantom zero-width version and inflate ``version_n``.
+    Events sharing key + (ts, lsn) collapse to ONE before the chain:
+    without this an at-least-once re-delivery would mint a phantom
+    zero-width version and inflate ``version_n``. When their payloads
+    conflict, the row first in ``(op, *attr_cols)`` descending order,
+    NULLs last, is kept — the same pick `scd2_oracle_sql` makes, whatever
+    the input order.
 
     Output: key_cols + attr_cols + ``valid_from``, ``valid_to``,
     ``version_n`` (1-based per key, counting non-delete versions),
     ``is_current``.
     """
-    deduped = changes.dropDuplicates([*key_cols, ts_col, lsn_col])
-    w = Window.partitionBy(*key_cols).orderBy(ts_col, lsn_col)
+    tie = [F.col(c).desc_nulls_last() for c in (op_col, *attr_cols)]
+    w = Window.partitionBy(*key_cols).orderBy(ts_col, lsn_col, *tie)
+    # first row of its (ts, lsn) run in the window's order
+    first = F.lag(F.lit(True)).over(w).isNull() | ~(
+        F.lag(ts_col).over(w).eqNullSafe(F.col(ts_col))
+        & F.lag(lsn_col).over(w).eqNullSafe(F.col(lsn_col))
+    )
+    deduped = changes.withColumn("_first", first).filter("_first")
     chained = deduped.select(
         *key_cols,
         *attr_cols,
@@ -83,12 +91,13 @@ def scd2_oracle_sql(
     """DuckDB twin of :func:`scd2_history` for the correctness gate."""
     kcols = ", ".join(key_cols)
     acols = ", ".join(attr_cols)
+    tie = ", ".join(f"{c} DESC NULLS LAST" for c in ("op", *attr_cols))
     return f"""
         WITH src AS ({source_sql}),
         dedup AS (
           SELECT * FROM src
           QUALIFY row_number() OVER (
-            PARTITION BY {kcols}, ts, lsn ORDER BY ts) = 1),
+            PARTITION BY {kcols}, ts, lsn ORDER BY {tie}) = 1),
         chained AS (
           SELECT {kcols}, {acols}, op AS _op, ts AS valid_from,
                  lsn AS _lsn,

@@ -196,3 +196,34 @@ def test_ctas_refuses_to_clobber_caller_view(spark, tmp_path):
         " role, text, ts FROM raw_notes",
     ).collect()
     assert out[0]["created"] is True
+
+
+def test_ctas_forgets_the_views_it_dropped(spark, tmp_path):
+    """A name the catalog once registered and a CTAS then dropped is the
+    caller's again: the caller's own temp view of it survives a later
+    CTAS, which refuses the shadowing instead of replacing the view."""
+    from etl_documentos_spark.lake.catalog import Catalog
+
+    cat = Catalog(str(tmp_path / "cat"))
+    cat.sql(
+        spark,
+        "CREATE TABLE raw.notes (conv_id string, turn_idx int,"
+        " role string, text string, ts timestamp)",
+    )
+    cat.sql(spark, "SELECT count(*) AS n FROM raw_notes").collect()
+    cat.sql(
+        spark,
+        "CREATE TABLE derived.a AS SELECT conv_id, turn_idx, role, text,"
+        " ts FROM raw_notes",
+    ).collect()
+    spark.sql("SELECT 'mine' AS tag").createOrReplaceTempView("raw_notes")
+    try:
+        with pytest.raises(ValueError, match="shadows"):
+            cat.sql(
+                spark,
+                "CREATE TABLE derived.b AS SELECT conv_id, turn_idx,"
+                " role, text, ts FROM derived_a",
+            )
+        assert spark.sql("SELECT tag FROM raw_notes").first().tag == "mine"
+    finally:
+        spark.catalog.dropTempView("raw_notes")

@@ -17,6 +17,7 @@ from etl_documentos_spark.lake.table import LakeTable, Snapshot, _stat_json
 from etl_documentos_spark.operators.merge import (
     bucket_of,
     compact,
+    lookup_files,
     merge_into,
     physical_schema,
     point_lookup,
@@ -86,7 +87,7 @@ def test_point_lookup_prunes_and_matches_full_read(spark, stats_table):
         b = bucket_of(spark, table, conv)
         bucket_files = snap.files.get(str(b), [])
         looked = point_lookup(spark, table, conv)
-        opened = len(looked.inputFiles())
+        opened = len(lookup_files(spark, table, conv))
         expect = (
             read_current(spark, table)
             .filter(f"conv_id = '{conv}'")
@@ -112,7 +113,7 @@ def test_missing_key_opens_at_most_boundary_files(spark, stats_table):
     b = bucket_of(spark, table, ghost)
     bucket_files = table.current_snapshot.files.get(str(b), [])
     if len(bucket_files) > 1:
-        assert len(looked.inputFiles()) < len(bucket_files)
+        assert len(lookup_files(spark, table, ghost)) < len(bucket_files)
 
 
 def test_scan_prune_is_only_an_optimization(spark, stats_table):

@@ -101,6 +101,49 @@ def test_scd2_exact_duplicates_collapse(spark, changes):
     assert a == b
 
 
+def test_scd2_conflicting_payloads_pick_one_deterministically(spark):
+    """Two events at one (key, ts, lsn) with different payloads: one
+    version survives, the same one in either input order and in the
+    DuckDB oracle (first in (op, attrs) descending order, NULLs last)."""
+    import duckdb
+
+    from etl_documentos_spark.operators.scd2 import scd2_oracle_sql
+
+    rows = [
+        ("insert", "a", 0, "user", "v1", _ts(1), 1, 0),
+        ("update", "a", 0, "user", "left", _ts(2), 2, 0),
+        ("update", "a", 0, "user", "right", _ts(2), 2, 1),
+        ("update", "a", 0, "asst", None, _ts(3), 3, 0),
+        ("update", "a", 0, "asst", "t", _ts(3), 3, 1),
+        ("update", "a", 0, "user", "z", _ts(4), 4, 0),
+        ("delete", "a", 0, "user", "z", _ts(4), 4, 1),
+    ]
+    schema = (
+        "op string, conv_id string, turn_idx int, role string, "
+        "text string, ts timestamp, lsn long, source_partition int"
+    )
+    attrs = ("role", "text")
+    runs = []
+    for order in (rows, rows[::-1]):
+        df = spark.createDataFrame(order, schema)
+        for d in (df, df.repartition(3, "source_partition")):
+            hist = scd2_history(d, attr_cols=attrs).collect()
+            runs.append(sorted(map(tuple, hist)))
+    assert all(r == runs[0] for r in runs)
+    got = runs[0]
+    chain = sorted(got, key=lambda r: r[6])  # by version_n
+    assert [r[3] for r in chain] == ["v1", "right", "t", "z"]
+    assert [r[6] for r in chain] == [1, 2, 3, 4]
+    con = duckdb.connect()
+    con.register("ch", spark.createDataFrame(rows, schema).toPandas())
+    want = sorted(
+        con.execute(
+            scd2_oracle_sql("SELECT * FROM ch", attr_cols=attrs)
+        ).fetchall()
+    )
+    assert got == want
+
+
 def test_scd2_parallelism_independent(changes):
     a = scd2_history(changes, attr_cols=("role", "text"))
     b = scd2_history(changes.repartition(5), attr_cols=("role", "text"))
