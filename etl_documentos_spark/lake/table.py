@@ -37,6 +37,7 @@ import json
 import logging
 import os
 import re
+import shutil
 import threading
 import time
 import uuid
@@ -257,8 +258,9 @@ def collect_parquet_stats(
 
 def _stage_rel(kind: str = "w") -> str:
     """A fresh staging directory, relative to the table root. ``w``
-    (writes: appends, COW rewrites, splits) or ``c`` (compaction outputs,
-    which `Snapshot.reduced_buckets` reads as LWW-reduced) — the
+    (writes: appends, merge stagings, view refreshes, splits) or ``c``
+    (the LWW-reduced outputs of a compaction or a merge, which
+    `Snapshot.reduced_buckets` reads as reduced) — the
     ``delta_N``/``base_N`` split of Hive ACID."""
     return f"data/{kind}-{uuid.uuid4().hex[:12]}"
 
@@ -302,9 +304,9 @@ class Snapshot:
 
     def reduced_buckets(self) -> list[int]:
         """Buckets already LWW-reduced: every file sits under ONE
-        ``data/c-*`` directory, i.e. is the output of one compaction
-        (`_stage_rel`), so each key has at most one row there. A later
-        append, or a concurrent compaction's output, adds a second
+        ``data/c-*`` directory, i.e. is the output of one compaction or
+        merge (`_stage_rel`), so each key has at most one row there. A
+        later append, or a concurrent rewrite's output, adds a second
         directory and the bucket is read through the LWW again."""
         out = []
         for b, fs in self.files.items():
@@ -427,9 +429,9 @@ def _out_batch(kind: str, size: int, **cols):
     return pa.RecordBatch.from_pydict(data, schema=schema)
 
 
-def _gather_direct_rows(rows, rel: str, stats: bool):
+def _gather_direct_rows(rows, rel: str):
     """Fold the direct writers' manifest/stats output rows (pyspark Rows or
-    plain dicts — both index by name) into (files[, stat_rows], manifest)."""
+    plain dicts — both index by name) into (files, stat_rows, manifest)."""
     files: dict[str, list[str]] = {}
     stat_rows = []
     manifest: dict[str, dict] = {}
@@ -443,9 +445,7 @@ def _gather_direct_rows(rows, rel: str, stats: bool):
         else:
             stat_rows.append(r)
     files = {b: sorted(fs) for b, fs in files.items()}
-    if stats:
-        return files, stat_rows, manifest or None
-    return files, manifest or None
+    return files, stat_rows, manifest or None
 
 
 #: HyperLogLog precision of the writer's per-(epoch, sp) key sketch: m=2^10
@@ -678,18 +678,16 @@ def change_batches(
 def _make_write_partition(
     out: str,
     data_cols: list,
-    stats: bool,
     man_on: bool,
     man_cols: list,
     man_blooms: list,
     codec: str,
 ):
-    """Build the per-task Arrow write generator shared by every direct
-    writer: the change feeders (`change_batches` output, from files or
-    from ``mapInArrow``) and the physical-row append
-    (`LakeTable._write_data_direct`). One code path means the writers
-    produce bit-identical files, stats rows, sketches and manifest entries
-    for the same physical batches. ``out`` is created with the first file,
+    """Build the per-task Arrow write generator of the change-batch
+    kernel's two feeders (`change_batches` output, from files or from
+    ``mapInArrow``). One code path means the feeders produce
+    bit-identical files, stats rows, sketches and manifest entries for the
+    same physical batches. ``out`` is created with the first file,
     so a staging that writes no row leaves no directory behind."""
     def write_partition(batches):
         import os as _os
@@ -774,67 +772,54 @@ def _make_write_partition(
             tbl = _pa.Table.from_batches([batch])
             bcol = tbl.column("_bucket")
             data = tbl.select(data_cols)
-            if stats:
-                # fingerprint chunks of the position hash _h: 22+22+20-bit
-                # chunk sums are commutative (any partitioning), keep
-                # duplicates (unlike XOR) and cannot overflow int64 below
-                # ~2x10^12 rows per epoch
-                h = tbl.column("_h")
-                m22 = _pa.scalar(0x3FFFFF, _pa.int64())
-                m20 = _pa.scalar(0xFFFFF, _pa.int64())
-                has_ts = "ts" in tbl.schema.names
-                part = _pa.table(
-                    {
-                        "epoch": tbl.column("epoch"),
-                        "sp": tbl.column("source_partition"),
-                        "h0": _pc.bit_wise_and(h, m22),
-                        "h1": _pc.bit_wise_and(
-                            _pc.shift_right(h, 22), m22
-                        ),
-                        "h2": _pc.bit_wise_and(
-                            _pc.shift_right(h, 44), m20
-                        ),
-                        "ndel": _pc.cast(
-                            tbl.column("_deleted"), _pa.int64()
-                        ),
-                        "lsn": tbl.column("_lsn"),
-                        # event-time watermark in EPOCH MICROS (int64):
-                        # a tz-aware Arrow timestamp's storage is UTC
-                        # micros, so the int64 view is independent of the
-                        # Spark session timezone — naive-timestamp stats
-                        # would shift by the session UTC offset instead
-                        "ts": (
+            # fingerprint chunks of the position hash _h: 22+22+20-bit
+            # chunk sums are commutative (any partitioning), keep
+            # duplicates (unlike XOR) and cannot overflow int64 below
+            # ~2x10^12 rows per epoch
+            h = tbl.column("_h")
+            m22 = _pa.scalar(0x3FFFFF, _pa.int64())
+            m20 = _pa.scalar(0xFFFFF, _pa.int64())
+            has_ts = "ts" in tbl.schema.names
+            part = _pa.table(
+                {
+                    "epoch": tbl.column("epoch"),
+                    "sp": tbl.column("source_partition"),
+                    "h0": _pc.bit_wise_and(h, m22),
+                    "h1": _pc.bit_wise_and(_pc.shift_right(h, 22), m22),
+                    "h2": _pc.bit_wise_and(_pc.shift_right(h, 44), m20),
+                    "ndel": _pc.cast(tbl.column("_deleted"), _pa.int64()),
+                    "lsn": tbl.column("_lsn"),
+                    # event-time watermark in EPOCH MICROS (int64): a
+                    # tz-aware Arrow timestamp's storage is UTC micros, so
+                    # the int64 view is independent of the Spark session
+                    # timezone — naive-timestamp stats would shift by the
+                    # session UTC offset instead
+                    "ts": (
+                        _pc.cast(
                             _pc.cast(
-                                _pc.cast(
-                                    tbl.column("ts"),
-                                    _pa.timestamp("us"),
-                                    safe=False,
-                                ),
-                                _pa.int64(),
-                            )
-                            if has_ts
-                            else _pa.nulls(tbl.num_rows, _pa.int64())
-                        ),
-                    }
+                                tbl.column("ts"), _pa.timestamp("us"), safe=False
+                            ),
+                            _pa.int64(),
+                        )
+                        if has_ts
+                        else _pa.nulls(tbl.num_rows, _pa.int64())
+                    ),
+                }
+            )
+            stat_parts.append(
+                part.group_by(["epoch", "sp"]).aggregate(
+                    [
+                        ("h0", "sum"), ("h1", "sum"), ("h2", "sum"),
+                        ("ndel", "sum"), ("lsn", "max"), ("lsn", "count"),
+                        ("ts", "max"),
+                    ]
                 )
-                stat_parts.append(
-                    part.group_by(["epoch", "sp"]).aggregate(
-                        [
-                            ("h0", "sum"),
-                            ("h1", "sum"),
-                            ("h2", "sum"),
-                            ("ndel", "sum"),
-                            ("lsn", "max"),
-                            ("lsn", "count"),
-                            ("ts", "max"),
-                        ]
-                    )
-                )
-                ep, sp, ch = (
-                    tbl.column(c).to_numpy(zero_copy_only=False)
-                    for c in ("epoch", "source_partition", "_ch")
-                )
-                fold_hll(sketches, ch, (ep.astype("int64") << 20) | sp)
+            )
+            ep, sp, ch = (
+                tbl.column(c).to_numpy(zero_copy_only=False)
+                for c in ("epoch", "source_partition", "_ch")
+            )
+            fold_hll(sketches, ch, (ep.astype("int64") << 20) | sp)
             for b in _pc.unique(bcol).to_pylist():
                 sub = data.filter(_pc.equal(bcol, b))
                 buf.setdefault(b, []).append(sub)
@@ -1668,9 +1653,11 @@ class LakeTable:
                 for fn in os.listdir(bdir)
                 if fn.endswith(".parquet")
             )
+        if not files:  # an empty write leaves no staging dir behind
+            shutil.rmtree(out, ignore_errors=True)
         return files
 
-    def _write_partition(self, out: str, data_cols: list, stats: bool):
+    def _write_partition(self, out: str, data_cols: list):
         """`_make_write_partition` for this table's codec and manifest
         stats. Writer-inline manifest stats are opt-in: each write task
         folds running min/max + a bloom distinct-set for the stat columns
@@ -1685,51 +1672,11 @@ class LakeTable:
         return _make_write_partition(
             out,
             data_cols,
-            stats,
             man_on,
             [c for c in self.stat_cols() if c in data_cols],
             [c for c in self.stat_bloom_cols() if c in data_cols],
             self.write_compression(),
         )
-
-    def _write_data_direct(self, df: DataFrame, target_tasks: int | None = None):
-        """Shuffle-free Arrow-native append writer for PHYSICAL rows
-        (`append_direct`; Hudi ``bulk_insert`` / Iceberg unsorted-write
-        shape). Change rows take the change feeders instead.
-
-        Each input task partitions its own Arrow batches by bucket locally
-        and streams them into per-(task, bucket) parquet files written
-        DIRECTLY to their final (uuid) names — no repartition shuffle, no
-        Hadoop FileOutputCommitter temp/rename churn, no checksum sidecars.
-        The task yields one manifest batch ``(bucket, path, nrows)``; the
-        snapshot commit is metadata-only, so a retried task leaves only
-        invisible orphan files (swept by `expire_snapshots`), exactly the
-        real-Iceberg failure contract.
-
-        Why this scales where the shuffled writer cannot: the append's only
-        job is to get rows into *some* file of the right bucket. Grouping
-        rows by (bucket, salt) first costs a full shuffle (write + fetch of
-        the whole batch through one shared disk) purely to control file
-        count, and the salted writer tasks inherit the hot conversation that
-        the source partitions had already spread out. Writing from source
-        partitions keeps the input's balance (a binlog tail interleaves
-        conversations across shards), does zero extra I/O, and needs no salt
-        at all. File count is bounded by ``coalesce`` to
-        ``target_tasks × buckets-per-task`` and reduced later by compaction,
-        which is the standard bulk-ingest trade.
-
-        Returns ``(files, manifest_stats)``.
-        """
-        rel = _stage_rel()
-        p = df.sparkSession.sparkContext.defaultParallelism
-        with_b = df.withColumn(
-            "_bucket", self.bucket_expr().cast("int")
-        ).coalesce(target_tasks or 2 * p)
-        write_partition = self._write_partition(
-            os.path.join(self.root, rel), df.columns, stats=False
-        )
-        rows = with_b.mapInArrow(write_partition, _OUT_DDL).collect()
-        return _gather_direct_rows(rows, rel, stats=False)
 
     def _change_task(
         self, spark: SparkSession, fence_lsn: int | None, dlq: str | None
@@ -1742,9 +1689,7 @@ class LakeTable:
         Returns ``(rel, task)``."""
         rel = _stage_rel()
         write_partition = self._write_partition(
-            os.path.join(self.root, rel),
-            [f.name for f in self.schema.fields],
-            stats=True,
+            os.path.join(self.root, rel), [f.name for f in self.schema.fields]
         )
         tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
         kernel = dict(
@@ -1806,7 +1751,7 @@ class LakeTable:
             .mapInArrow(run, _OUT_DDL)
             .collect()
         )
-        return _gather_direct_rows(rows, rel, stats=True)
+        return _gather_direct_rows(rows, rel)
 
     def write_change_files_direct(
         self,
@@ -1905,25 +1850,7 @@ class LakeTable:
             sum(r["nrows"] for r in rows if r["kind"] == "f"),
             (time.perf_counter() - t0) * 1e3,
         )
-        return _gather_direct_rows(rows, rel, stats=True)
-
-    def append_direct(
-        self,
-        df: DataFrame,
-        target_tasks: int | None = None,
-        branch: str | None = None,
-    ) -> None:
-        """Append via the shuffle-free Arrow writer (raw change batches).
-        Retries staging if a concurrent split/rebucket changes the spec.
-        Manifest stats come from the write tasks themselves when the table
-        opted in (no file re-read); otherwise from the footer pass.
-        ``branch`` lands the delta files on a named branch (WAP)."""
-
-        def stage(t: LakeTable):
-            files, man_stats = t._write_data_direct(df, target_tasks)
-            return files, None, man_stats or t._collect_stats(files)
-
-        return self.append_staged(stage, branch=branch)[0]
+        return _gather_direct_rows(rows, rel)
 
     def append_staged(self, write, lock=None, commit_empty=True, **commit_kw):
         """The one stage → `commit_append` → restage loop of every append.
@@ -2169,35 +2096,21 @@ class LakeTable:
         return out
 
     def overwrite_buckets(
-        self,
-        df: DataFrame,
-        buckets: list[int],
-        salts: int | None = None,
-        expected: dict[str, list[str]] | None = None,
-        sort_cols: tuple[str, ...] | None = None,
-        maintenance: bool = False,
+        self, df: DataFrame, buckets: list[int], salts: int | None = None
     ) -> None:
-        """Copy-on-write replace of the named buckets with df's rows.
+        """Copy-on-write replace of the named buckets with df's rows (a
+        materialized view's refresh).
 
-        df must contain only rows belonging to ``buckets`` (caller guarantees
-        it — merge_into does). Untouched buckets keep their existing files;
-        this is what keeps a MERGE that hits 1% of conversations from
-        rewriting 100 TB. ``expected`` (the file lists df was computed from)
-        makes the commit concurrency-safe — see ``commit_overwrite``.
-        Raises ``SpecConflictError`` (no internal retry) if a concurrent
-        split/rebucket lands mid-flight: ``buckets``/``expected`` are spec-
-        relative, so the CALLER must recompute its whole read-modify-write
-        against the new spec (``merge_into``/``compact`` do).
+        df must contain only rows belonging to ``buckets``. Untouched
+        buckets keep their existing files. The named buckets' file lists
+        are replaced wholesale, so the caller serializes against other
+        writers of this table. Raises ``SpecConflictError`` if a concurrent
+        split/rebucket lands mid-flight.
         """
         spec = self.spec_fingerprint()
-        files = self._write_data(df, salts=salts, sort_cols=sort_cols)
+        files = self._write_data(df, salts=salts)
         self.commit_overwrite(
-            files,
-            buckets,
-            expected=expected,
-            staged_spec=spec,
-            new_stats=self._collect_stats(files),
-            maintenance=maintenance,
+            files, buckets, staged_spec=spec, new_stats=self._collect_stats(files)
         )
 
     # ------------------------------------------------------------ rebucket

@@ -18,10 +18,10 @@ streaming ingest can never disagree about visibility or ordering:
    out-versions precisely the row it read and nothing else. A concurrent
    stream update with a newer event time still wins — predicate DML is
    snapshot-consistent, it does not fence the future;
-3. route the events through ``merge_into`` — bucket pruning, adaptive
-   salting, tombstone fencing, atomic snapshot commit and time travel all
-   apply unchanged. Re-running a delete matches nothing (the victims are
-   gone) and commits an empty batch; re-running an update re-matches like
+3. route the events through ``merge_into`` — bucket pruning, tombstone
+   fencing, atomic snapshot commit and time travel all apply unchanged.
+   Re-running a delete matches nothing (the victims are gone) and
+   commits nothing; re-running an update re-matches like
    SQL UPDATE does and is value-idempotent for idempotent assignments.
 
 Deletes persist as ordinary ``_deleted`` tombstones, so a late-arriving
@@ -29,7 +29,7 @@ pre-DML update cannot resurrect an erased key, and compaction's lateness
 watermark expires them on the normal schedule.
 
 Shuffle budget: one LWW hash-aggregation over the pruned current state to
-find victims + the merge's own combine. No sort, no driver-side rows.
+find victims + the merge's own reduction (`operators.merge`).
 """
 
 from __future__ import annotations
@@ -65,11 +65,13 @@ def _apply(
     spark: SparkSession, table: LakeTable, changes: DataFrame
 ) -> int:
     """Run the generated change batch through the version-checked merge;
-    returns the number of rows the DML affected."""
+    returns the number of rows the DML affected (the batch's keys after
+    its own LWW)."""
     changes = changes.persist()
     try:
-        stats = merge_into(spark, table, changes, compute_stats=True)
-        return int(stats.events_in)
+        n = lww_dedup(changes).count()
+        merge_into(spark, table, changes)
+        return n
     finally:
         changes.unpersist()
 
@@ -181,10 +183,8 @@ def insert_into(
             (
                 F.col(c)
                 if c in names
-                # typed NULL, not NullType: the MOR branch path writes
-                # the batch through the Arrow writer as-is, and an
-                # untyped null column would land with the wrong
-                # physical parquet type
+                # typed NULL: the batch carries the table's types (both
+                # writers also cast a column to the table's type)
                 else F.lit(None).cast(types[c])
             ).alias(c)
             for c in payload

@@ -1,4 +1,4 @@
-"""Key-partitioned MERGE of a deduped change batch into a LakeTable.
+"""Key-partitioned MERGE of a change batch into a LakeTable.
 
 This is the engine's core write primitive — the set-oriented restatement of
 the reference's row lifecycle: INSERT with a provisional status
@@ -6,37 +6,42 @@ the reference's row lifecycle: INSERT with a provisional status
 same key with final values (``document_processor.py:205-218``,
 ``app/database/repositories.py:51-68``), DELETE by key
 (``repositories.py:70-83``). On Iceberg this is ``MERGE INTO target USING
-updates ON key WHEN MATCHED ... WHEN NOT MATCHED INSERT``; here it is the
-equivalent copy-on-write plan:
+updates ON key WHEN MATCHED ... WHEN NOT MATCHED INSERT``; here the table
+is the materialization of its changelog, so a MERGE is "stage the changes,
+then reduce the touched keys" (`merge_into`):
 
-1. prune: compute the set of buckets the batch touches; scan only those
-   buckets' files (partition pruning — a batch touching 1% of conversations
-   reads 1% of the table);
-2. combine: union the pruned target slice with the update rows and reduce
-   per key with the same LWW version order ``(ts, lsn)`` used by dedup —
-   this makes the merge **version-checked**: a late event (older ts) arriving
-   in a later epoch cannot regress a newer row, and re-applying an epoch is a
-   no-op (idempotent under at-least-once delivery);
+1. stage: the batch runs through the change-batch kernel (`_stage`, the
+   writer the CDC pipeline appends with) into an uncommitted ``data/w-*``
+   directory; the staged files name the buckets the batch touches
+   (partition pruning — a batch touching 1% of conversations reads 1% of
+   the table);
+2. reduce: per touched bucket, the snapshot's files plus the staged ones
+   are reduced per key with the LWW version order ``(ts, _lsn)``
+   (`_reduce_commit`, the step `compact` runs) — this makes the merge
+   **version-checked**: a late event (older ts) arriving in a later epoch
+   cannot regress a newer row, and re-applying an epoch is a no-op
+   (idempotent under at-least-once delivery);
 3. tombstones: deletes persist as ``_deleted=true`` rows so that a
    late-arriving older update cannot resurrect a deleted key; readers filter
    them out (``read_current``); a compaction can expire them past the
    lateness watermark;
-4. copy-on-write: rewrite only the touched buckets' files and commit one
-   atomic snapshot.
+4. copy-on-write: the reduced files replace only the touched buckets in
+   one atomic (logical, not maintenance) overwrite snapshot, and the
+   staging directory is removed.
 
-Shuffle budget at scale: one hash aggregation over (touched-target-slice +
-batch). Both sides partition by the same key; AQE coalesces the small side.
-The write re-shuffles on (bucket, salt) to spread hot conversations across
-tasks. There is no global sort anywhere.
+Shuffle budget at scale: a reduction of at most `ARROW_COMPACT_MAX_BYTES`
+runs in the driver on Arrow with no shuffle; a larger one is one hash
+aggregation over (touched buckets + batch) and a range-partitioned sorted
+write. There is no global sort anywhere.
 """
 
 from __future__ import annotations
 
 import logging
 import os
+import shutil
 import time
 import uuid
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,15 +82,6 @@ def _live(df: DataFrame) -> DataFrame:
     return live.drop(*SYSTEM_COL_NAMES)
 
 
-@dataclass
-class MergeStats:
-    events_in: int
-    keys_upserted: int
-    keys_deleted: int
-    buckets_touched: int
-    conv_ids_touched: int
-
-
 def changes_to_physical(changes: DataFrame, table_schema: T.StructType) -> DataFrame:
     """Project a change batch (op/.../lsn) onto the physical table shape."""
     cols = []
@@ -96,95 +92,75 @@ def changes_to_physical(changes: DataFrame, table_schema: T.StructType) -> DataF
         elif f.name == "_lsn":
             cols.append(F.col("lsn").alias("_lsn"))
         elif f.name in change_cols:
-            cols.append(F.col(f.name))
+            cols.append(F.col(f.name).cast(f.dataType))
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return changes.select(*cols)
 
 
-def merge_into(
+def _stage(
     spark: SparkSession,
     table: LakeTable,
     changes: DataFrame,
-    dedup: bool = True,
-    compute_stats: bool = False,
-) -> MergeStats | None:
-    """Apply one change batch to the table. See module docstring for the plan.
+    target_tasks: int | None = None,
+):
+    """Stage a change batch as bucket files of ``table``, uncommitted.
+    Returns ``(files, manifest_stats)``.
+
+    When every column has an Arrow type (`_arrow_fields`) the batch goes
+    through the change-batch kernel's DataFrame feeder
+    (`LakeTable.write_data_files_direct`, epoch 0; the kernel's stats
+    group by ``source_partition``, which DML and replication batches lack
+    and a parsed envelope may leave NULL: both read as 0). Other tables
+    take the shuffled writer over `changes_to_physical`."""
+    if _arrow_fields(spark, table) is None:
+        files = table.write_data_files(changes_to_physical(changes, table.schema))
+        return files, None
+    cols = changes.columns
+    sp = F.col("source_partition") if "source_partition" in cols else F.lit(None)
+    changes = changes.withColumn("source_partition", F.coalesce(sp, F.lit(0)))
+    files, _, manifest = table.write_data_files_direct(
+        changes, epoch=0, target_tasks=target_tasks
+    )
+    return files, manifest
+
+
+def merge_into(spark: SparkSession, table: LakeTable, changes: DataFrame) -> None:
+    """Apply one change batch to the table as a copy-on-write merge. See
+    the module docstring for the plan.
 
     ``changes`` carries the CHANGE_EVENTS shape (op, key, payload, ts, lsn,
     ...). Column set may be wider than the table — caller runs schema
     evolution first (`operators.evolve.evolve_if_needed`).
 
     The batch is NOT pre-deduped: batch-internal LWW and the version check
-    against existing rows are the same reduction, so one hash aggregation
-    over (target-slice ∪ batch) does both — no separate dedup shuffle.
+    against existing rows are the same reduction, so one LWW over
+    (touched buckets ∪ staged batch) does both. The touched buckets come
+    out reduced, like a compaction's (`Snapshot.reduced_buckets`), but the
+    commit is a logical overwrite that changelog readers refuse.
 
-    Split-safe: the whole read-modify-write is retried against fresh
-    metadata if a concurrent ``split_bucket``/``rebucket`` invalidates the
-    bucket keys mid-merge (``SpecConflictError`` from the commit).
+    Split-safe: staging and reduction are retried against fresh metadata
+    if a concurrent ``split_bucket``/``rebucket`` invalidates the bucket
+    keys mid-merge (``SpecConflictError`` from the commit).
     """
     for _ in range(5):
+        t0 = time.perf_counter()
+        spec = table.spec_fingerprint()
+        staged, _ = _stage(spark, table, changes)
         try:
-            return _merge_into_once(spark, table, changes, dedup, compute_stats)
+            if staged:
+                _reduce_commit(
+                    spark, table, "merge", sorted(int(b) for b in staged),
+                    staged, spec, t0,
+                )
+            return
         except SpecConflictError:
             table._refresh()
+        finally:  # the staging is never committed
+            dirs = {p.split("/")[1] for fs in staged.values() for p in fs}
+            for d in dirs:
+                shutil.rmtree(os.path.join(table.root, "data", d), ignore_errors=True)
     raise SpecConflictError("spec kept changing across 5 merge retries")
-
-
-def _merge_into_once(
-    spark: SparkSession,
-    table: LakeTable,
-    changes: DataFrame,
-    dedup: bool,
-    compute_stats: bool,
-) -> MergeStats | None:
-    updates = changes_to_physical(changes, table.schema)
-
-    # ---- partition pruning: which buckets does this batch touch?
-    # (cheap distinct over the — typically cached — batch; result is at most
-    # num_buckets ints)
-    touched = [
-        r[0]
-        for r in updates.select(table.bucket_expr().alias("b"))
-        .distinct()
-        .collect()
-    ]
-    if not touched:
-        return MergeStats(0, 0, 0, 0, 0) if compute_stats else None
-
-    expected = {
-        b: fs
-        for b, fs in table.current_snapshot.files.items()
-        if int(b) in touched
-    }
-    target_slice = table.scan(spark, buckets=touched)
-
-    # ---- version-checked combine: LWW over (existing ∪ incoming)
-    merged = _lww(target_slice.unionByName(updates))
-
-    stats = None
-    if compute_stats:
-        deduped = lww_dedup(changes) if dedup else changes
-        agg = deduped.agg(
-            F.count("*").alias("n"),
-            F.sum(F.when(F.col("op") != "delete", 1).otherwise(0)).alias("up"),
-            F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("del"),
-            F.approx_count_distinct("conv_id").alias("convs"),
-        ).first()
-        stats = MergeStats(
-            events_in=agg["n"],
-            keys_upserted=agg["up"],
-            keys_deleted=agg["del"],
-            buckets_touched=len(touched),
-            conv_ids_touched=agg["convs"],
-        )
-
-    # COW output is deduped (<=1 row/key), but a hot CONVERSATION still
-    # concentrates all its turns in one bucket — size the salt from the
-    # observed bucket skew so the hot bucket's rewrite spreads across tasks
-    salts = adaptive_salts(table, touched, spark)
-    table.overwrite_buckets(merged, touched, salts=salts, expected=expected)
-    return stats
 
 
 def adaptive_salts(
@@ -195,9 +171,11 @@ def adaptive_salts(
     cap: int = 32,
     target_file_bytes: int | None = None,
 ) -> int:
-    """Salt count sized from the table's OBSERVED bucket skew — no manual
-    tuning, no extra Spark job (reads the file manifest via
-    `LakeTable.bucket_sizes`).
+    """Salt count of the Spark reduce-and-commit rewrite (`_spark_rewrite`,
+    for `compact` and `merge_into`), sized from the table's OBSERVED bucket
+    skew — no manual tuning, no extra Spark job (reads the file manifest
+    via `LakeTable.bucket_sizes`, so a merge's staged batch is not
+    counted).
 
     Rationale (same math as ``_write_data``'s docstring): a bucket holding
     fraction ``h`` of the rewrite is processed by one task per salt, so for
@@ -208,12 +186,12 @@ def adaptive_salts(
     measures row-level key skew before any files exist); here the snapshot
     manifest already encodes the skew for free.
 
-    ``target_file_bytes`` (read-optimize passes): additionally cap the salt
-    count by how many files the data actually warrants —
-    ``ceil(hot_bucket_bytes / target)`` — so a maintenance compaction of a
-    small bucket collapses it to ONE file instead of fragmenting it into
-    ``h*P`` shards, while a multi-GB bucket keeps its parallel spread. Same
-    semantic as Iceberg's ``rewrite_data_files`` target-file-size-bytes.
+    ``target_file_bytes``: additionally cap the salt count by how many
+    files the data actually warrants — ``ceil(hot_bucket_bytes / target)``
+    — so a rewrite of a small bucket collapses it to ONE file instead of
+    fragmenting it into ``h*P`` shards, while a multi-GB bucket keeps its
+    parallel spread. Same semantic as Iceberg's ``rewrite_data_files``
+    target-file-size-bytes.
     """
     import math
 
@@ -241,13 +219,16 @@ def merge_mor(
     reduction to read time (`read_current`) / compaction (`compact`).
 
     This is the high-throughput CDC ingest path (the Hudi/Paimon MOR shape):
-    per epoch the write cost is O(batch) — one projection + one shuffle-free
-    bucketed append (`LakeTable.append_direct`) — instead of copy-on-write's
-    O(touched table slice). At 10^10 events the COW variant rewrites every
-    hot bucket every epoch; MOR keeps ingest linear and bounds read
-    amplification with `compact`.
+    per epoch the write cost is O(batch) — the batch staged by `_stage`
+    (the change-batch kernel, or the shuffled writer for tables with a
+    column Arrow does not map) and committed by `LakeTable.append_staged`
+    — instead of copy-on-write's O(touched table slice). At 10^10 events
+    the COW variant rewrites every hot bucket every epoch; MOR keeps ingest
+    linear and bounds read amplification with `compact`. Manifest stats
+    come from the write tasks when the table opted in, else from the new
+    files' footers.
 
-    ``target_tasks`` bounds writer-task count (files/epoch =
+    ``target_tasks`` bounds the kernel's writer-task count (files/epoch =
     tasks x buckets-per-task); callers with small per-epoch batches pass a
     low value to bound delta-file churn between compactions, the bulk
     backfill leaves the default (~2x parallelism).
@@ -257,11 +238,12 @@ def merge_mor(
     upsert is JUST an append on the branch head, and ``read_current(...,
     ref=branch)`` shows the merged state; ``fast_forward`` publishes.
     """
-    table.append_direct(
-        changes_to_physical(changes, table.schema),
-        target_tasks=target_tasks,
-        branch=branch,
-    )
+
+    def stage(t: LakeTable):
+        files, manifest = _stage(spark, t, changes, target_tasks)
+        return files, None, manifest or t._collect_stats(files)
+
+    table.append_staged(stage, branch=branch)
 
 
 def compact(
@@ -274,10 +256,11 @@ def compact(
 ) -> None:
     """Rewrite buckets with the LWW reduction applied (read-optimize).
 
-    Equivalent to the COW merge with an empty batch: per key, the row with
-    the greatest ``(ts, _lsn, payload hash)`` survives; the rewrite is
-    sorted by key and commits as one maintenance overwrite
-    (`_compact_once`). ``expire_tombstones_before``: optionally drop
+    `merge_into` with an empty batch: both run `_reduce_commit`, so per
+    key the row with the greatest ``(ts, _lsn, payload hash)`` survives;
+    the rewrite is sorted by key and commits as one MAINTENANCE overwrite
+    of the buckets (all live ones when ``buckets`` is None), which
+    changelog readers skip. ``expire_tombstones_before``: optionally drop
     delete tombstones older than the lateness watermark (they exist only
     to fence late updates). The bound is EPOCH MICROSECONDS (int) and is
     compared against ``unix_micros(ts)`` — both sides live in the
@@ -299,9 +282,11 @@ def compact(
     """
     for _ in range(5):
         try:
-            return _compact_once(
-                spark, table, buckets, expire_tombstones_before,
-                target_file_bytes, zorder,
+            return _reduce_commit(
+                spark, table, "compact",
+                table.live_buckets() if buckets is None else buckets,
+                {}, table.spec_fingerprint(), time.perf_counter(),
+                expire_tombstones_before, target_file_bytes, zorder,
             )
         except SpecConflictError:
             table._refresh()
@@ -317,27 +302,33 @@ def compact(
 ARROW_COMPACT_MAX_BYTES = 128 << 20
 
 
-def _compact_once(
+def _reduce_commit(
     spark: SparkSession,
     table: LakeTable,
-    buckets: list[int] | None,
-    expire_tombstones_before,
-    target_file_bytes: int,
+    op: str,
+    target: list[int],
+    staged: dict[str, list[str]],
+    spec: tuple,
+    t0: float,
+    expire_tombstones_before=None,
+    target_file_bytes: int = 128 << 20,
     zorder: tuple[str, ...] | None = None,
 ) -> None:
-    """One compaction against the current snapshot, committed as ONE
-    maintenance overwrite of the target buckets.
+    """The reduce-and-commit step of `compact` (``op`` "compact") and
+    `merge_into` (``op`` "merge"): per ``target`` bucket, the current
+    snapshot's files plus the ``staged`` uncommitted files (by bucket) are
+    reduced to one row per key and committed as ONE overwrite of the
+    target buckets. A compaction's overwrite is marked maintenance; a
+    merge's is a logical overwrite. ``spec``: the spec fingerprint the
+    caller's bucket ids (and staging) were computed under.
 
     Routes: the Arrow kernel `compact_bucket`, run in the driver one
-    bucket at a time (``driver``), when the target buckets total at most
+    bucket at a time (``driver``), when the inputs total at most
     ``target_file_bytes`` and `ARROW_COMPACT_MAX_BYTES` and every column
     has an Arrow type; else the Spark ``lww_dedup`` + range-partitioned
     sorted rewrite (`_spark_rewrite`, ``spark``), which ``zorder=``
-    always takes. Logs one line per compaction on the
+    always takes. Logs one line ``<op> buckets=… route=…`` per call on the
     ``etl_documentos_spark`` logger."""
-    t0 = time.perf_counter()
-    target = table.live_buckets() if buckets is None else buckets
-    spec = table.spec_fingerprint()
     # capture the exact file lists this rewrite reads: the commit replaces
     # only these, so an append landing concurrently (another process) in a
     # target bucket survives as a delta file instead of being dropped
@@ -346,19 +337,27 @@ def _compact_once(
         for b, fs in table.current_snapshot.files.items()
         if int(b) in target
     }
-    in_bytes = sum(table.bucket_sizes(target).values())
+    inputs = {
+        str(b): expected.get(str(b), []) + staged.get(str(b), [])
+        for b in target
+    }
+    in_bytes = sum(table.bucket_sizes(target).values()) + sum(
+        os.path.getsize(os.path.join(table.root, p))
+        for fs in staged.values()
+        for p in fs
+    )
     fields = None if zorder else _arrow_fields(spark, table)
     if fields is not None and in_bytes <= min(
         target_file_bytes, ARROW_COMPACT_MAX_BYTES
     ):
         route = "driver"
         files, rows_in, rows_out = _arrow_rewrite(
-            table, fields, expected, expire_tombstones_before
+            table, fields, inputs, expire_tombstones_before
         )
     else:
         route = "spark"
         files, rows_in, rows_out = _spark_rewrite(
-            spark, table, target, expected, expire_tombstones_before,
+            spark, table, target, inputs, expire_tombstones_before,
             target_file_bytes, zorder,
         )
     table.commit_overwrite(
@@ -367,14 +366,16 @@ def _compact_once(
         expected=expected,
         staged_spec=spec,
         new_stats=table._collect_stats(files),
-        maintenance=True,  # logical no-op: changelog readers skip it
+        # a compaction is a logical no-op: changelog readers skip it
+        maintenance=op == "compact",
     )
     _log.info(
-        "compact buckets=%d route=%s files=%d->%d rows=%d->%d "
+        "%s buckets=%d route=%s files=%d->%d rows=%d->%d "
         "bytes=%d->%d ms=%.1f",
+        op,
         len(target),
         route,
-        sum(len(fs) for fs in expected.values()),
+        sum(len(fs) for fs in inputs.values()),
         sum(len(fs) for fs in files.values()),
         rows_in,
         rows_out,
@@ -401,18 +402,18 @@ def _arrow_fields(spark: SparkSession, table: LakeTable):
 def _arrow_rewrite(
     table: LakeTable,
     fields: list,
-    expected: dict[str, list[str]],
+    inputs: dict[str, list[str]],
     expire_tombstones_before,
 ):
-    """The driver route: `compact_bucket` over each target bucket in turn,
-    staged into one ``data/c-<uuid>`` dir (no commit). Returns
+    """The driver route: `compact_bucket` over each bucket's ``inputs``
+    in turn, staged into one ``data/c-<uuid>`` dir (no commit). Returns
     ``(files, rows_in, rows_out)``."""
     rel = _stage_rel("c")
     expire = (
         None if expire_tombstones_before is None else int(expire_tombstones_before)
     )
     files, rows_in, rows_out = {}, 0, 0
-    for b, fs in expected.items():
+    for b, fs in inputs.items():
         if not fs:
             continue
         names, n_in, n_out = compact_bucket(
@@ -437,17 +438,21 @@ def _spark_rewrite(
     spark: SparkSession,
     table: LakeTable,
     buckets: list[int],
-    expected: dict[str, list[str]],
+    inputs: dict[str, list[str]],
     expire_tombstones_before,
     target_file_bytes: int,
     zorder: tuple[str, ...] | None,
 ):
-    """The Spark compaction route: ``lww_dedup`` over the buckets' scan,
-    the tombstone filter, then a range-partitioned sorted write. Stages
-    the files into one ``data/c-<uuid>`` dir (no commit). Returns
-    ``(files, rows_in, rows_out)``, the row counts from the parquet
-    footers."""
-    merged = _lww(table.scan(spark, buckets=buckets))
+    """The Spark route: ``lww_dedup`` over the buckets' ``inputs``, the
+    tombstone filter, then a range-partitioned sorted write. Stages the
+    files into one ``data/c-<uuid>`` dir (no commit). Returns ``(files,
+    rows_in, rows_out)``, the row counts from the parquet footers."""
+    paths = [p for fs in inputs.values() for p in fs]
+    merged = _lww(
+        table._read_data_files(
+            spark, [os.path.join(table.root, p) for p in paths]
+        )
+    )
     if expire_tombstones_before is not None:
         merged = merged.filter(
             (~F.coalesce(F.col("_deleted"), F.lit(False)))
@@ -481,9 +486,7 @@ def _spark_rewrite(
     )
     return (
         files,
-        _footer_rows(
-            table.root, [p for b in buckets for p in expected.get(str(b), [])]
-        ),
+        _footer_rows(table.root, paths),
         _footer_rows(table.root, [p for fs in files.values() for p in fs]),
     )
 

@@ -833,6 +833,7 @@ def test_split_bucket_conflicts_with_concurrent_respec(spark, tmp_path):
     import datetime
 
     from etl_documentos_spark.lake.table import SpecConflictError
+    from etl_documentos_spark.operators.merge import merge_mor
     from etl_documentos_spark.schemas import CHANGE_EVENTS
 
     T0 = datetime.datetime(2024, 1, 1)
@@ -844,7 +845,7 @@ def test_split_bucket_conflicts_with_concurrent_respec(spark, tmp_path):
     table_root = str(tmp_path / "t")
     LakeTable.create(table_root, physical_schema(TRANSCRIPTS), num_buckets=4)
     table = LakeTable.load(table_root)
-    table.append_direct(spark.createDataFrame(rows, CHANGE_EVENTS))
+    merge_mor(spark, table, spark.createDataFrame(rows, CHANGE_EVENTS))
 
     # duplicate split: a second handle splits the same bucket first
     loser, winner = LakeTable.load(table_root), LakeTable.load(table_root)

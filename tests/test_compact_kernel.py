@@ -182,8 +182,8 @@ def test_evolved_and_renamed_columns_match_spark(
 
 
 def test_spark_written_inputs_match_spark(spark, tmp_path, caplog, no_spark_route):
-    """Inputs from the shuffled Spark writer (`append`, `merge_into`) and a
-    `split_bucket` rewrite, compacted over the split spec."""
+    """Inputs from the shuffled Spark writer (`append`), a `merge_into`
+    rewrite and a `split_bucket` rewrite, compacted over the split spec."""
     table = _table(tmp_path, buckets=2)
     ch = datagen.change_stream(spark, n_events=3_000, n_convs=40, turns_per_conv=20)
     merge_into(spark, table, ch.filter("lsn < 1000"))

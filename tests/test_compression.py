@@ -52,8 +52,8 @@ def test_both_writers_honor_compression(spark, tmp_path, codec, expect):
         num_buckets=2,
         properties=props,
     )
-    merge_mor(spark, table, _batch(spark))   # Arrow-direct writer
-    merge_into(spark, table, _batch(spark))  # shuffled COW writer
+    merge_mor(spark, table, _batch(spark))   # change-batch kernel
+    merge_into(spark, table, _batch(spark))  # kernel + LWW rewrite
     compact(spark, table)                    # sorted rewrite
     table._refresh()
     assert _codecs(table) == {expect}
