@@ -256,6 +256,21 @@ def collect_parquet_stats(
     return out
 
 
+def lpt_pack(sized: list[tuple[int, object]], n: int) -> list[list]:
+    """Greedy LPT (longest processing time first) packing of ``(size,
+    item)`` pairs into at most ``n`` lists of items: the largest item goes
+    onto the least-loaded list, so the slowest list, which sets the span,
+    stays small. Equal sizes order by item, so items must compare. Empty
+    lists are dropped."""
+    heap = [(0, i) for i in range(n)]
+    out: list[list] = [[] for _ in range(n)]
+    for sz, item in sorted(sized, reverse=True):
+        load, i = heapq.heappop(heap)
+        out[i].append(item)
+        heapq.heappush(heap, (load + sz, i))
+    return [c for c in out if c]
+
+
 def _stage_rel(kind: str = "w") -> str:
     """A fresh staging directory, relative to the table root. ``w``
     (writes: appends, merge stagings, view refreshes, splits) or ``c``
@@ -503,6 +518,7 @@ _DLQ_CHECKS = (
     ("turn_idx", "null_turn_idx"),
     ("lsn", "null_lsn"),
     ("ts", "null_ts"),
+    ("source_partition", "null_source_partition"),
 )
 
 
@@ -511,8 +527,9 @@ def _split_invalid(tbl, epoch, bad: dict):
     with every source column plus ``_dlq_reason``, to ``bad[epoch]``.
 
     Valid = a known op (a NULL op counts as unknown) and non-null key,
-    version and event-time columns — the invariants bucketing and the LWW
-    merge rely on; an absent column fails its check. ``epoch`` None reads
+    version, event-time and source-partition columns — the invariants
+    bucketing, the LWW merge and the epoch stats rely on; an absent column
+    fails its check. ``epoch`` None reads
     each row's ``epoch`` column."""
     import numpy as np
     import pyarrow as pa
@@ -577,7 +594,8 @@ def change_batches(
 
     1. ``dlq`` given (quarantine on): invalid rows leave the batch
        (`_split_invalid`) — before the fence, so a null-``lsn`` row is
-       quarantined, not silently fenced out;
+       quarantined, not silently fenced out; without it a NULL
+       ``source_partition`` raises ``ValueError`` naming the epoch;
     2. bootstrap fence: keep ``lsn > fence``;
     3. projection onto ``phys_fields`` (physical name, Arrow type): ``op``
        becomes ``_deleted``, ``lsn`` ``_lsn``, absent columns null;
@@ -637,6 +655,14 @@ def change_batches(
                 a = pc.cast(a, typ, safe=False)
             cols[name] = a
         sp = tbl.column("source_partition")
+        if sp.null_count:  # the stats and sketches key on it
+            where = epoch if epoch is not None else sorted(
+                set(tbl.column("epoch").filter(sp.is_null()).to_pylist())
+            )
+            raise ValueError(
+                f"epoch {where}: {sp.null_count} change rows have a NULL "
+                "source_partition; turn quarantine on to divert them"
+            )
         h = xxh64_key(tbl.column("lsn"), seed=xxh64_key(sp))
         kh = xxh64_key(cols[bucket_col])
         ch = kh if bucket_col == "conv_id" else xxh64_key(cols["conv_id"])
@@ -1765,7 +1791,7 @@ class LakeTable:
         the data plane.
 
         ``file_epochs``: (change-log parquet path, epoch id) pairs, split
-        into byte-balanced chunks (greedy LPT, largest file first: the
+        into byte-balanced chunks (`lpt_pack`, largest file first: the
         slowest chunk sets the span). Each chunk opens its files with
         pyarrow and runs `change_batches` (quarantine mask when ``dlq`` is
         given, bootstrap fence at ``fence_lsn``, projection, position and
@@ -1795,18 +1821,11 @@ class LakeTable:
         rel, task = self._change_task(spark, fence_lsn, dlq)
 
         sc = spark.sparkContext
-        n_chunks = min(target_tasks or 2 * sc.defaultParallelism, len(file_epochs))
-        sized = sorted(
-            ((os.path.getsize(f), f, e) for f, e in file_epochs), reverse=True
+        sized = [(os.path.getsize(f), (f, e)) for f, e in file_epochs]
+        chunks = lpt_pack(
+            sized, min(target_tasks or 2 * sc.defaultParallelism, len(sized))
         )
-        heap = [(0, i) for i in range(n_chunks)]
-        chunks: list[list[tuple[str, int]]] = [[] for _ in range(n_chunks)]
-        for sz, f, e in sized:
-            load, i = heapq.heappop(heap)
-            chunks[i].append((f, e))
-            heapq.heappush(heap, (load + sz, i))
-        chunks = [c for c in chunks if c]
-        in_bytes = sum(sz for sz, _, _ in sized)
+        in_bytes = sum(sz for sz, _ in sized)
 
         def run(part, chunk_iter):
             import pyarrow as _pa
@@ -2075,14 +2094,16 @@ class LakeTable:
             lambda t: t._stage_shuffled(df, salts), branch=branch
         )[0]
 
-    def bucket_sizes(self, buckets: list[int] | None = None) -> dict[int, int]:
-        """Per-bucket physical byte size of the current snapshot — driver-
-        side ``os.stat`` over the file manifest, zero Spark jobs. The cheap
-        skew signal for adaptive salting: at 100 TB the manifest is still
-        only O(buckets × files) entries, and byte size tracks row count
-        closely for same-schema parquet."""
+    def bucket_sizes(
+        self, buckets: list[int] | None = None, snapshot_id: int | None = None
+    ) -> dict[int, int]:
+        """Per-bucket physical byte size of the current snapshot (or of
+        ``snapshot_id``) — driver-side ``os.stat`` over the file manifest,
+        zero Spark jobs. The cheap skew signal for adaptive salting: at
+        100 TB the manifest is still only O(buckets × files) entries, and
+        byte size tracks row count closely for same-schema parquet."""
         out: dict[int, int] = {}
-        for b, fs in self.current_snapshot.files.items():
+        for b, fs in self.snapshot_at(snapshot_id).files.items():
             bi = int(b)
             if buckets is not None and bi not in buckets:
                 continue

@@ -52,6 +52,7 @@ from etl_documentos_spark.lake.table import (
     SpecConflictError,
     _arrow_type,
     _stage_rel,
+    lpt_pack,
 )
 from etl_documentos_spark.operators.lww import lww_dedup
 from etl_documentos_spark.schemas import KEY_COLS
@@ -622,6 +623,46 @@ def compact_bucket(
     return names, tbl.num_rows, n
 
 
+def reduce_arrow(files: list[str], fields: list, renamed: dict, filter=None):
+    """The Arrow LWW reduce of one bucket's data ``files``: one
+    `LakeTable.read_data_files_arrow` (projected onto ``fields``, renames
+    in ``renamed`` folded, ``filter`` applied by the scan), `lww_arrow`,
+    then the winning physical rows, in key order, tombstones included.
+    Memory holds the decoded files plus the winners: callers bound it by
+    the files they pass (one key's, or one bucket of at most
+    `ARROW_COMPACT_MAX_BYTES`)."""
+    tbl = LakeTable.read_data_files_arrow(files, fields, renamed, filter=filter)
+    return tbl.take(lww_arrow(tbl))
+
+
+def _arrow_read(
+    spark: SparkSession, table: LakeTable, fields: list, tasks: list[list]
+) -> DataFrame:
+    """The Arrow route of `read_current`: one ``mapInArrow`` job of
+    ``len(tasks)`` tasks over ``spark.range`` (one id per task, no
+    shuffle). Task ``i`` reduces the buckets of ``tasks[i]`` (each a list
+    of data files) one after another with `reduce_arrow` and yields their
+    winning physical rows in `lww_dedup`'s column order (keys first),
+    every column nullable. A task's Python memory, which Spark does not
+    account for, is bounded by the largest bucket it reduces (at most
+    `ARROW_COMPACT_MAX_BYTES` of parquet)."""
+    renamed = table._renamed()
+    cols = [*KEY_COLS] + [n for n, _ in fields if n not in KEY_COLS]
+
+    def run(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                for files in tasks[i]:
+                    win = reduce_arrow(files, fields, renamed).select(cols)
+                    yield from win.to_batches()
+
+    schema = T.StructType(
+        [T.StructField(c, table.schema[c].dataType, True) for c in cols]
+    )
+    n = len(tasks)
+    return spark.range(0, n, 1, n).mapInArrow(run, schema)
+
+
 def read_current(
     spark: SparkSession,
     table: LakeTable,
@@ -631,30 +672,77 @@ def read_current(
     """Reader view: LWW winner per key, live rows only, system columns
     dropped. Correct over any mix of compacted base files and MOR deltas.
 
-    Buckets that hold only one compaction's output
-    (`Snapshot.reduced_buckets`: every file under one ``data/c-*`` dir)
-    already have one row per key, so they are scanned as they are; the
-    LWW aggregation (`lww_dedup`, one shuffle) runs over the other
-    buckets only, and the two parts are unioned before the tombstone
-    filter. A fully compacted table reads with no shuffle; with no
-    compacted bucket the plan is one ``lww_dedup`` over the whole scan.
+    Each bucket of the snapshot takes one of three routes, and the three
+    parts are unioned before the one tombstone filter (`_live`):
+
+    - reduced: a bucket that holds only one compaction's or merge's
+      output (`Snapshot.reduced_buckets`: every file under one
+      ``data/c-*`` dir) has one row per key and is scanned as it is;
+    - Arrow: on a table whose columns all map to Arrow (`_arrow_fields`),
+      an unreduced bucket whose files total at most
+      `ARROW_COMPACT_MAX_BYTES` (manifest sizes, `LakeTable.bucket_sizes`)
+      is reduced by `reduce_arrow` inside one ``mapInArrow`` job
+      (`_arrow_read`): the buckets are packed by bytes (`lpt_pack`) into
+      ``min(defaultParallelism, buckets)`` tasks, one wave, no shuffle;
+    - Spark: the other unreduced buckets (a column with no Arrow mapping,
+      or a bucket over the cap) go through `lww_dedup`, one shuffle.
+
+    A fully compacted table reads with no shuffle, and so does an
+    uncompacted one on the Arrow route. The Arrow route opens its files
+    inside the tasks, so a filter on the result does not reach its
+    parquet reads (and ``inputFiles()`` does not list them): read one key
+    with `point_lookup`. Logs one line ``read route=… reduced=… arrow=…
+    spark=… tasks=… bytes=…`` per call on the ``etl_documentos_spark``
+    logger.
 
     ``snapshot_id``/``ref`` pin the read to an older snapshot or a named
     tag (time travel) — same contract as ``LakeTable.scan``."""
     snap = table.snapshot_at(snapshot_id, ref)
+    sid = snap.snapshot_id
     reduced = snap.reduced_buckets()
-    if not reduced:
-        return _live(_lww(table.scan(spark, snapshot_id=snap.snapshot_id)))
-    df = table.scan(spark, buckets=reduced, snapshot_id=snap.snapshot_id)
-    # lww_dedup's column order: keys first
-    df = df.select(*KEY_COLS, *[c for c in df.columns if c not in KEY_COLS])
-    rest = [
-        int(b) for b, fs in snap.files.items() if fs and int(b) not in reduced
-    ]
-    if rest:
-        df = df.unionByName(
-            _lww(table.scan(spark, buckets=rest, snapshot_id=snap.snapshot_id))
+    sizes = table.bucket_sizes(snapshot_id=sid)
+    rest = [int(b) for b, fs in snap.files.items() if fs and int(b) not in reduced]
+    fields = _arrow_fields(spark, table)
+    arrow, lww = [], []
+    for b in rest:
+        fits = fields is not None and sizes[b] <= ARROW_COMPACT_MAX_BYTES
+        (arrow if fits else lww).append(b)
+    parts = []
+    if reduced:
+        df = table.scan(spark, buckets=reduced, snapshot_id=sid)
+        # lww_dedup's column order: keys first
+        parts.append(
+            df.select(*KEY_COLS, *[c for c in df.columns if c not in KEY_COLS])
         )
+    tasks = []
+    if arrow:
+        paths = {
+            b: [os.path.join(table.root, p) for p in snap.files[str(b)]]
+            for b in arrow
+        }
+        tasks = lpt_pack(
+            [(sizes[b], b) for b in arrow],
+            min(spark.sparkContext.defaultParallelism, len(arrow)),
+        )
+        tasks = [[paths[b] for b in t] for t in tasks]
+        parts.append(_arrow_read(spark, table, fields, tasks))
+    if lww or not parts:
+        parts.append(_lww(table.scan(spark, buckets=lww, snapshot_id=sid)))
+    _log.info(
+        "read route=%s reduced=%d arrow=%d spark=%d tasks=%d bytes=%d",
+        "+".join(
+            name for name, bs in
+            (("scan", reduced), ("arrow", arrow), ("spark", lww)) if bs
+        ) or "empty",
+        len(reduced),
+        len(arrow),
+        len(lww),
+        len(tasks),
+        sum(sizes.values()),
+    )
+    df = parts[0]
+    for p in parts[1:]:
+        df = df.unionByName(p)
     return _live(df)
 
 
@@ -709,9 +797,10 @@ def point_lookup(spark: SparkSession, table: LakeTable, conv_id) -> DataFrame:
     files (min/max is blind there). `lookup_files` names the files left.
 
     When every column has an Arrow type (`_arrow_fields`, the compaction
-    kernel's gate) the lookup runs in the driver with no Spark job: one
-    `LakeTable.read_data_files_arrow` of those files filtered on the key
-    (row-group stats skip too), `lww_arrow`, then the tombstone filter.
+    kernel's gate) the lookup runs in the driver with no Spark job:
+    `reduce_arrow` of those files filtered on the key (row-group stats
+    skip too; the reducer `read_current`'s Arrow tasks run per bucket),
+    then the tombstone filter.
     The few rows come back as ``spark.createDataFrame`` of the Arrow
     table, a local relation, so ``collect()`` starts no job and
     ``inputFiles()`` is empty. Other tables read the same files through
@@ -725,11 +814,10 @@ def point_lookup(spark: SparkSession, table: LakeTable, conv_id) -> DataFrame:
     if fields is None:
         df = table._read_data_files(spark, files)
         return _live(_lww(df.filter(F.col(table.bucket_col) == F.lit(conv_id))))
-    tbl = LakeTable.read_data_files_arrow(
+    win = reduce_arrow(
         files, fields, table._renamed(),
         filter=pc.field(table.bucket_col) == conv_id,
     )
-    win = tbl.take(lww_arrow(tbl))
     live = win.filter(pc.invert(pc.fill_null(win["_deleted"], False)))
     cols = [*KEY_COLS] + [
         f.name for f in table.schema.fields

@@ -170,3 +170,46 @@ def test_null_lsn_quarantined_behind_bootstrap_fence(
     assert (res.events, res.quarantined) == (1, 2)
     reasons = sorted(r["_dlq_reason"] for r in pipe.read_dlq([1]).collect())
     assert reasons == ["null_lsn", "unknown_op"]
+
+
+def test_null_source_partition_quarantined(spark, dlq_pipeline, tmp_path):
+    """A change row with a NULL ``source_partition`` (the key of the
+    epoch's stats and sketches) is diverted like any invalid row."""
+    from etl_documentos_spark.streaming.stream import replay_epochs
+
+    good, _ = _rows()
+    bad = ("insert", "conv_3", 2, "user", "no partition", None, T0, 200, None)
+    events = str(tmp_path / "events")
+    spark.createDataFrame(good + [bad], SCHEMA).write.parquet(
+        os.path.join(events, "epoch=0")
+    )
+    (res,) = replay_epochs(dlq_pipeline, events)
+    assert (res.events, res.quarantined) == (len(good), 1)
+    (row,) = dlq_pipeline.read_dlq().collect()
+    assert (row["text"], row["_dlq_reason"]) == (
+        "no partition", "null_source_partition"
+    )
+    assert read_current(spark, dlq_pipeline.table).count() == len(
+        {(e[1], e[2]) for e in good}
+    )
+
+
+def test_null_source_partition_without_quarantine_raises(spark, tmp_path):
+    """Without quarantine the epoch fails with a ``ValueError`` naming the
+    epoch and the column, and commits nothing."""
+    from etl_documentos_spark.streaming.stream import replay_epochs
+
+    LakeTable.create(
+        str(tmp_path / "t"), physical_schema(TRANSCRIPTS), num_buckets=2
+    )
+    pipe = CdcPipeline(spark, str(tmp_path / "t"), str(tmp_path / "w"))
+    good, _ = _rows()
+    bad = ("insert", "conv_3", 2, "user", "no partition", None, T0, 200, None)
+    events = str(tmp_path / "events")
+    spark.createDataFrame(good + [bad], SCHEMA).write.parquet(
+        os.path.join(events, "epoch=3")
+    )
+    with pytest.raises(ValueError, match=r"epoch 3: 1 change rows .*source_partition"):
+        replay_epochs(pipe, events)
+    assert pipe.commitlog.get(3) is None
+    assert read_current(spark, LakeTable.load(pipe.table_root)).count() == 0

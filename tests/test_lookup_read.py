@@ -1,10 +1,13 @@
-"""The driver-side point lookup and the compacted-bucket read path.
+"""The driver-side point lookup and the three read routes.
 
 `point_lookup` reads `lookup_files` with pyarrow and reduces them with
 `lww_arrow`; it must return exactly `read_current(...)`'s rows for the
 key. `read_current` scans buckets that hold one compaction's output
-(``data/c-*``) without the LWW shuffle; it must equal the full LWW
-reduction of the same snapshot."""
+(``data/c-*``) as they are, reduces the other buckets in one
+``mapInArrow`` job on the Arrow LWW kernel, and leaves `lww_dedup` to
+buckets over the cap and tables without an Arrow mapping; on every route
+it must equal the full LWW reduction of the same snapshot, schema
+included."""
 
 from __future__ import annotations
 
@@ -250,7 +253,7 @@ def test_fully_compacted_read_has_no_shuffle(spark, tmp_path):
     ch = _stream(spark)
     _mor(spark, table, ch, [0, 500, 1_000, 1_600])
     assert table.current_snapshot.reduced_buckets() == []
-    assert "Exchange" in _plan(read_current(spark, table))
+    assert "MapInArrow" in _plan(read_current(spark, table))
     want = _sorted(_reference(spark, table).collect())
     compact(spark, table)
     table._refresh()
@@ -259,7 +262,7 @@ def test_fully_compacted_read_has_no_shuffle(spark, tmp_path):
     assert sorted(snap.reduced_buckets()) == sorted(int(b) for b in snap.files)
     got = _check_read(spark, table)
     assert _sorted(got.collect()) == want
-    assert "Exchange" not in _plan(got)
+    assert "Exchange" not in _plan(got) and "MapInArrow" not in _plan(got)
 
 
 def test_compaction_then_append_same_bucket(spark, tmp_path):
@@ -340,7 +343,7 @@ def test_rollback_and_time_travel(spark, tmp_path):
 def test_compaction_staged_under_w_keeps_the_lww(spark, tmp_path, monkeypatch):
     """A table compacted before compactions staged into ``data/c-*`` holds
     its outputs under ``w-``: those buckets are not known to be reduced
-    and read through the LWW."""
+    and read through the LWW (the Arrow one)."""
     real = merge._stage_rel
     monkeypatch.setattr(merge, "_stage_rel", lambda kind="w": real("w"))
     table = _table(tmp_path, buckets=2)
@@ -349,4 +352,166 @@ def test_compaction_staged_under_w_keeps_the_lww(spark, tmp_path, monkeypatch):
     compact(spark, table)
     table._refresh()
     assert table.current_snapshot.reduced_buckets() == []
-    assert "Exchange" in _plan(_check_read(spark, table))
+    assert "MapInArrow" in _plan(_check_read(spark, table))
+
+
+# ------------------------------------------------------------- read routes
+def _check_routes(spark, table, route, snapshot_id=None, ref=None):
+    """``read_current`` equals `_reference` of the same snapshot, rows and
+    schema (every column nullable but on an empty table), and its plan is the one of ``route``
+    (the log line's): an Arrow route runs ``mapInArrow`` and no shuffle
+    in at most ``defaultParallelism`` tasks, a Spark route the shuffle."""
+    got = read_current(spark, table, snapshot_id=snapshot_id, ref=ref)
+    sid = table.snapshot_at(snapshot_id, ref).snapshot_id
+    want = _reference(spark, table, sid)
+    assert got.schema == want.schema
+    # an empty table keeps its declared nullability, as it always did
+    assert all(f.nullable for f in got.schema.fields) or route == "empty"
+    assert _sorted(got.collect()) == _sorted(want.collect())
+    plan = _plan(got)
+    parts = route.split("+")
+    assert ("MapInArrow" in plan) == ("arrow" in parts), plan
+    if route != "empty":
+        assert ("Exchange" in plan) == ("spark" in parts), plan
+    if parts == ["arrow"]:
+        assert got.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    return got
+
+
+def _read_log(caplog, spark, table, **kw) -> str:
+    caplog.clear()
+    with caplog.at_level("INFO", logger="etl_documentos_spark"):
+        read_current(spark, table, **kw)
+    (line,) = [
+        r.getMessage() for r in caplog.records if r.getMessage().startswith("read ")
+    ]
+    return line
+
+
+def test_arrow_read_mor_tombstones_and_ties(spark, tmp_path, caplog):
+    table = _table(tmp_path, buckets=8)
+    _mor(spark, table, _stream(spark), [0, 400, 800, 1_200, 1_600])
+    t1 = T0 + datetime.timedelta(seconds=1)
+    ties = [("update", "tie", 0, "user", txt, None, t1, 5, i)
+            for i, txt in enumerate("abcde")]
+    ties += [
+        ("update", "tie", 1, None, "p", None, t1, 7, 0),
+        ("update", "tie", 1, "user", None, "tool", t1, 7, 0),
+        ("delete", "tie", 1, "user", "p", None, t1, 7, 0),
+        ("insert", "tie", 2, "user", "n1", None, None, None, 0),
+        ("insert", "tie", 2, "user", "n2", None, None, None, 1),
+    ]
+    df = _events(spark, ties)
+    for sp in range(5):
+        merge_mor(spark, table, df.filter(F.col("source_partition") == sp))
+    table._refresh()
+    assert table.scan(spark).filter("_deleted").count() > 0
+    _check_routes(spark, table, "arrow")
+    line = _read_log(caplog, spark, table)
+    size = sum(table.bucket_sizes().values())
+    assert line == (
+        f"read route=arrow reduced=0 arrow=8 spark=0 tasks=4 bytes={size}"
+    )
+
+
+def test_arrow_read_evolved_and_renamed_columns(spark, tmp_path):
+    table = _table(tmp_path)
+    ch = _stream(spark)
+    merge_mor(spark, table, ch.filter("lsn < 500"))
+    table.add_columns([T.StructField("tool_call_id", T.StringType(), True)])
+    table.rename_column("role", "speaker")
+    table._refresh()
+    later = (
+        ch.filter("lsn >= 500")
+        .withColumnRenamed("role", "speaker")
+        .withColumn(
+            "tool_call_id", F.concat(F.lit("call-"), F.col("lsn").cast("string"))
+        )
+    )
+    _mor(spark, table, later, [500, 1_000, 1_600])
+    got = _check_routes(spark, table, "arrow")
+    assert got.filter("speaker is not null and tool_call_id is null").count() > 0
+
+
+def test_arrow_read_split_bucket(spark, tmp_path):
+    table = _table(tmp_path, buckets=2)
+    ch = _stream(spark)
+    _mor(spark, table, ch, [0, 700])
+    table.split_bucket(spark, 0)
+    table._refresh()
+    _mor(spark, table, ch, [700, 1_600])
+    assert table.split_buckets == [0]
+    _check_routes(spark, table, "arrow")
+
+
+def test_arrow_read_mixed_with_reduced_buckets(spark, tmp_path, caplog):
+    table = _table(tmp_path, buckets=4)
+    ch = _stream(spark)
+    _mor(spark, table, ch, [0, 800])
+    compact(spark, table)
+    table._refresh()
+    _mor(spark, table, ch.filter("conv_id = 'conv_hot'"), [800, 1_600])
+    assert len(table.current_snapshot.reduced_buckets()) == 3
+    _check_routes(spark, table, "scan+arrow")
+    assert _read_log(caplog, spark, table).startswith(
+        "read route=scan+arrow reduced=3 arrow=1 spark=0 tasks=1 "
+    )
+
+
+def test_arrow_read_snapshot_tag_and_branch(spark, tmp_path):
+    table = _table(tmp_path, buckets=4)
+    ch = _stream(spark)
+    _mor(spark, table, ch, [0, 600])
+    first = table.current_snapshot.snapshot_id
+    table.tag("first")
+    _mor(spark, table, ch, [600, 1_000])
+    table.create_branch("audit")
+    merge_mor(spark, table, ch.filter("lsn >= 1000"), branch="audit")
+    _mor(spark, table, ch.filter("conv_id = 'conv_hot'"), [1_000, 1_600])
+    table._refresh()
+    for kw in ({"snapshot_id": first}, {"ref": "first"}, {"ref": "audit"}, {}):
+        _check_routes(spark, table, "arrow", **kw)
+    branch = _sorted(read_current(spark, table, ref="audit").collect())
+    assert branch != _sorted(read_current(spark, table).collect())
+
+
+def test_arrow_read_empty_table(spark, tmp_path, caplog):
+    table = _table(tmp_path)
+    got = _check_routes(spark, table, "empty")
+    assert got.count() == 0
+    assert _read_log(caplog, spark, table) == (
+        "read route=empty reduced=0 arrow=0 spark=0 tasks=0 bytes=0"
+    )
+
+
+def test_bucket_over_the_cap_takes_lww(spark, tmp_path, monkeypatch, caplog):
+    table = _table(tmp_path, buckets=4)
+    _mor(spark, table, _stream(spark), [0, 500, 1_000, 1_600])
+    sizes = sorted(table.bucket_sizes().values())
+    monkeypatch.setattr(merge, "ARROW_COMPACT_MAX_BYTES", sizes[1])
+    _check_routes(spark, table, "arrow+spark")
+    assert _read_log(caplog, spark, table).startswith(
+        "read route=arrow+spark reduced=0 arrow=2 spark=2 tasks=2 "
+    )
+    monkeypatch.setattr(merge, "ARROW_COMPACT_MAX_BYTES", sizes[0] - 1)
+    _check_routes(spark, table, "spark")
+
+
+def test_decimal_column_takes_lww(spark, tmp_path, monkeypatch):
+    table = _table(tmp_path)
+    ch = _stream(spark, n=800)
+    _mor(spark, table, ch, [0, 400, 800])
+    table.add_columns([T.StructField("amount", T.DecimalType(12, 2), True)])
+    table._refresh()
+    merge_mor(
+        spark, table,
+        ch.filter("lsn < 100").withColumn("amount", F.lit(1.5).cast("decimal(12,2)")),
+    )
+    table._refresh()
+
+    def boom(*a, **kw):
+        raise AssertionError("Arrow read on a table without an Arrow mapping")
+
+    monkeypatch.setattr(LakeTable, "read_data_files_arrow", staticmethod(boom))
+    got = _check_routes(spark, table, "spark")
+    assert got.filter("amount is not null").count() > 0
