@@ -2095,7 +2095,9 @@ class LakeTable:
         )[0]
 
     def bucket_sizes(
-        self, buckets: list[int] | None = None, snapshot_id: int | None = None
+        self,
+        buckets: list[int] | set[int] | None = None,
+        snapshot_id: int | None = None,
     ) -> dict[int, int]:
         """Per-bucket physical byte size of the current snapshot (or of
         ``snapshot_id``) — driver-side ``os.stat`` over the file manifest,

@@ -643,9 +643,11 @@ def _arrow_read(
     shuffle). Task ``i`` reduces the buckets of ``tasks[i]`` (each a list
     of data files) one after another with `reduce_arrow` and yields their
     winning physical rows in `lww_dedup`'s column order (keys first),
-    every column nullable. A task's Python memory, which Spark does not
-    account for, is bounded by the largest bucket it reduces (at most
-    `ARROW_COMPACT_MAX_BYTES` of parquet)."""
+    every column nullable. A task holds one bucket at a time in Python
+    memory, which Spark does not account for; `read_current` admits only
+    buckets of at most ``ARROW_COMPACT_MAX_BYTES // len(tasks)`` or less,
+    so the tasks running at once hold at most `ARROW_COMPACT_MAX_BYTES`
+    of parquet between them, the size one driver-side compaction holds."""
     renamed = table._renamed()
     cols = [*KEY_COLS] + [n for n, _ in fields if n not in KEY_COLS]
 
@@ -680,10 +682,14 @@ def read_current(
       ``data/c-*`` dir) has one row per key and is scanned as it is;
     - Arrow: on a table whose columns all map to Arrow (`_arrow_fields`),
       an unreduced bucket whose files total at most
-      `ARROW_COMPACT_MAX_BYTES` (manifest sizes, `LakeTable.bucket_sizes`)
-      is reduced by `reduce_arrow` inside one ``mapInArrow`` job
-      (`_arrow_read`): the buckets are packed by bytes (`lpt_pack`) into
-      ``min(defaultParallelism, buckets)`` tasks, one wave, no shuffle;
+      ``ARROW_COMPACT_MAX_BYTES // min(defaultParallelism, unreduced
+      buckets)`` (manifest sizes, `LakeTable.bucket_sizes`) is reduced by
+      `reduce_arrow` inside one ``mapInArrow`` job (`_arrow_read`): the
+      buckets are packed by bytes (`lpt_pack`) into
+      ``min(defaultParallelism, buckets)`` tasks, one wave, no shuffle.
+      The per-bucket share of the cap keeps the Python memory of all the
+      tasks running at once, which Spark does not account for, within
+      the one `ARROW_COMPACT_MAX_BYTES` a driver-side compaction holds;
     - Spark: the other unreduced buckets (a column with no Arrow mapping,
       or a bucket over the cap) go through `lww_dedup`, one shuffle.
 
@@ -693,20 +699,24 @@ def read_current(
     parquet reads (and ``inputFiles()`` does not list them): read one key
     with `point_lookup`. Logs one line ``read route=… reduced=… arrow=…
     spark=… tasks=… bytes=…`` per call on the ``etl_documentos_spark``
-    logger.
+    logger; ``bytes`` is the manifest size of the unreduced buckets, which
+    are statted only on a table with an Arrow mapping (0 otherwise).
 
     ``snapshot_id``/``ref`` pin the read to an older snapshot or a named
     tag (time travel) — same contract as ``LakeTable.scan``."""
     snap = table.snapshot_at(snapshot_id, ref)
     sid = snap.snapshot_id
     reduced = snap.reduced_buckets()
-    sizes = table.bucket_sizes(snapshot_id=sid)
     rest = [int(b) for b, fs in snap.files.items() if fs and int(b) not in reduced]
     fields = _arrow_fields(spark, table)
+    par = spark.sparkContext.defaultParallelism
+    sizes = {}
+    if fields is not None:
+        sizes = table.bucket_sizes(set(rest), snapshot_id=sid)
+    cap = ARROW_COMPACT_MAX_BYTES // min(par, len(rest) or 1)
     arrow, lww = [], []
     for b in rest:
-        fits = fields is not None and sizes[b] <= ARROW_COMPACT_MAX_BYTES
-        (arrow if fits else lww).append(b)
+        (arrow if fields is not None and sizes[b] <= cap else lww).append(b)
     parts = []
     if reduced:
         df = table.scan(spark, buckets=reduced, snapshot_id=sid)
@@ -720,10 +730,7 @@ def read_current(
             b: [os.path.join(table.root, p) for p in snap.files[str(b)]]
             for b in arrow
         }
-        tasks = lpt_pack(
-            [(sizes[b], b) for b in arrow],
-            min(spark.sparkContext.defaultParallelism, len(arrow)),
-        )
+        tasks = lpt_pack([(sizes[b], b) for b in arrow], min(par, len(arrow)))
         tasks = [[paths[b] for b in t] for t in tasks]
         parts.append(_arrow_read(spark, table, fields, tasks))
     if lww or not parts:

@@ -488,12 +488,19 @@ def test_bucket_over_the_cap_takes_lww(spark, tmp_path, monkeypatch, caplog):
     table = _table(tmp_path, buckets=4)
     _mor(spark, table, _stream(spark), [0, 500, 1_000, 1_600])
     sizes = sorted(table.bucket_sizes().values())
-    monkeypatch.setattr(merge, "ARROW_COMPACT_MAX_BYTES", sizes[1])
+    # a bucket's share of the cap: the tasks running at once hold at most
+    # the cap between them
+    n = min(spark.sparkContext.defaultParallelism, 4)
+    monkeypatch.setattr(merge, "ARROW_COMPACT_MAX_BYTES", sizes[1] * n)
     _check_routes(spark, table, "arrow+spark")
     assert _read_log(caplog, spark, table).startswith(
         "read route=arrow+spark reduced=0 arrow=2 spark=2 tasks=2 "
     )
-    monkeypatch.setattr(merge, "ARROW_COMPACT_MAX_BYTES", sizes[0] - 1)
+    monkeypatch.setattr(merge, "ARROW_COMPACT_MAX_BYTES", sizes[1] * n - 1)
+    assert _read_log(caplog, spark, table).startswith(
+        "read route=arrow+spark reduced=0 arrow=1 spark=3 tasks=1 "
+    )
+    monkeypatch.setattr(merge, "ARROW_COMPACT_MAX_BYTES", sizes[0] * n - 1)
     _check_routes(spark, table, "spark")
 
 
